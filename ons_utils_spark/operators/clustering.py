@@ -112,13 +112,19 @@ def connected_components(
         # min-neighbor INITIALIZATION already labels exactly — if
         # pass 1 changed nothing the labels are a fixed point and
         # the pointer-doubling join never needs to run at all.
+        #
+        # The checks count changed labels without a limit(1): a
+        # codegen'd limit names its row counter from a JVM-wide
+        # sequence, so every check would compile new classes (two per
+        # limit stage, every call).  On the converged round, the one
+        # that ends the loop, no row passes the filter and a limit
+        # could not stop the scan early anyway.
         if it == 0:
             new_labels = _ckpt(new_labels)
             changed = (
                 new_labels.alias('n')
                 .join(_b(labels.alias('o')), 'node')
                 .filter(F.col('n.comp') != F.col('o.comp'))
-                .limit(1)
                 .count()
             )
             if changed == 0:
@@ -158,7 +164,6 @@ def connected_components(
                 labels.alias('n')
                 .join(_b(prev.alias('o')), 'node')
                 .filter(F.col('n.comp') != F.col('o.comp'))
-                .limit(1)
                 .count()
             )
             if changed == 0:

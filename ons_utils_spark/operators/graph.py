@@ -87,8 +87,12 @@ def label_propagation(
     variant is irreproducible across partitionings, useless for
     auditing.  Fixed ``iterations`` synchronous rounds: per round
     one edge join + one (node, label) count + one
-    max-count/min-label argmax — three shuffles, state O(nodes),
-    per-round lineage cuts.  All integer arithmetic, so a
+    max-count/min-label argmax, state O(nodes), per-round lineage
+    cuts.  While the node count is at most ``broadcast_state_nodes``
+    a round is TWO shuffles (the count and the argmax) plus a
+    broadcast of the node-sized label state; above it the join falls
+    back to sort-merge, which also shuffles the edge frame and the
+    labels: FOUR shuffles per round.  All integer arithmetic, so a
     recursive-CTE oracle replays every round exactly.  Isolated
     nodes (no edges) keep their own label.
 
@@ -209,19 +213,20 @@ def bfs_levels(
             e.select(F.col('d').alias('s'), F.col('s').alias('d'))
         ).distinct()
     e = e.repartition('s').transform(_ckpt)
-    frontier = sources.select(
-        F.col(node).cast('long').alias('n')).distinct()
     # visited state = the UNION of the per-hop checkpointed
     # frontiers: each hop's new nodes are materialized exactly once
     # (as `nxt`), never re-written as part of a growing `levels`
     # frame — the anti-join and the final result read the same
     # checkpointed RDDs (one materialization per hop instead of two).
-    first = frontier.select(
+    first = sources.select(
+        F.col(node).cast('long').alias('n')).distinct().select(
         'n', F.lit(0).cast('int').alias('hop')).transform(_ckpt)
     frontier_n = first.count()
     visited_n = frontier_n
     parts = [first]
-    visited = first.select('n')
+    # hop 1 expands the checkpointed sources: the caller's `sources`
+    # build runs once, for the cut, not again for the broadcast
+    frontier = visited = first.select('n')
     for hop in range(1, max_hops + 1):
         f = F.broadcast(frontier) \
             if 0 < frontier_n <= broadcast_state_nodes else frontier

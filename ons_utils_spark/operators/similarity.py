@@ -1084,14 +1084,17 @@ def bitext_mine(
         F.col('cosine').desc(), F.col('__tid').asc())
     w_t = Window.partitionBy('__tid').orderBy(
         F.col('cosine').desc(), F.col('__sid').asc())
-    # chained (not one select): the __sid window must evaluate FIRST,
-    # while the frame still carries the stream side's pre-cross
-    # partitioning — evaluated after the __tid window it would need
-    # its own full re-exchange of the scored frame.
-    ranked = (
-        scored
-        .withColumn('__rs', F.row_number().over(w_s))
-        .withColumn('__rt', F.row_number().over(w_t)))
+    # chained (not one select): the STREAM side's window must evaluate
+    # FIRST, while the frame still carries that side's pre-cross
+    # partitioning — evaluated second it would need its own full
+    # re-exchange of the scored frame, on top of the other window's.
+    ranks = [('__rs', F.row_number().over(w_s)),
+             ('__rt', F.row_number().over(w_t))]
+    if candidates is None and broadcast_side == 'src':
+        ranks.reverse()
+    ranked = scored
+    for name, rank in ranks:
+        ranked = ranked.withColumn(name, rank)
     # Lineage cut on the candidate set (bounded by (|src|+|tgt|)×k):
     # the hubness means, the margin join, and the mutual-best windows
     # all reference this frame — without the cut each reference

@@ -13,6 +13,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import SparkSession
 
+from ons_utils_spark.session import CODEGEN_CACHE_CONF, DEFAULT_CONFS
+
 
 def suppress_py4j_logging() -> None:
     logging.getLogger('py4j').setLevel(logging.WARN)
@@ -20,7 +22,11 @@ def suppress_py4j_logging() -> None:
 
 @pytest.fixture(scope='session')
 def spark_session():
-    """Session-scoped local Spark session sized for unit tests."""
+    """Session-scoped local Spark session sized for unit tests.
+
+    The compiled-class cache is sized once per JVM, by the first
+    session, so this one takes the library's size: the suite then
+    runs with the cache every ``get_spark`` session has."""
     suppress_py4j_logging()
     spark = (
         SparkSession.builder
@@ -32,6 +38,7 @@ def spark_session():
         .config('spark.sql.session.timeZone', 'UTC')
         .config('spark.ui.enabled', 'false')
         .config('spark.ui.showConsoleProgress', 'false')
+        .config(CODEGEN_CACHE_CONF, DEFAULT_CONFS[CODEGEN_CACHE_CONF])
         .config('spark.sql.warehouse.dir',
                 '/tmp/ons-utils-spark-test-warehouse')
         .getOrCreate()

@@ -132,6 +132,30 @@ class TestBfs:
             spark_session, [(1, 2)], [1, 9])  # 9 has no edges
         assert got == {1: 0, 9: 0, 2: 1}
 
+    def test_sources_built_once(self, spark_session):
+        """Hop 1 expands the checkpointed sources, so the caller's
+        sources build runs once, not again for the hop-1 broadcast."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import LongType
+
+        from ons_utils_spark.operators.graph import bfs_levels
+
+        builds = spark_session.sparkContext.accumulator(0)
+
+        @F.udf(LongType())
+        def counted(x):
+            builds.add(1)
+            return x
+
+        e = spark_session.createDataFrame(
+            [(1, 2), (2, 3), (5, 6)], 'src long, dst long')
+        s = spark_session.createDataFrame(
+            [(1,), (5,)], 'node long').select(
+            counted('node').alias('node'))
+        got = {r['node']: r['hop'] for r in bfs_levels(e, s).collect()}
+        assert got == {1: 0, 5: 0, 2: 1, 6: 1, 3: 2}
+        assert builds.value == 2
+
 
 class TestLabelPropagation:
     def _labels(self, spark, edges, iterations=5):

@@ -595,6 +595,41 @@ class TestBitextMine:
         with pytest.raises(ValueError, match='broadcast_side'):
             bitext_mine(s, t, broadcast_side='both')
 
+    def test_broadcast_src_adds_no_exchange(self, spark_session,
+                                            monkeypatch):
+        """The stream side's rank window runs first in both
+        orientations, so broadcasting the source side costs no more
+        shuffles than broadcasting the target side."""
+        import re
+
+        from ons_utils_spark.operators.similarity import bitext_mine
+
+        s, t = self._frames(spark_session)
+        cut = []
+        checkpoint = type(s).localCheckpoint
+
+        def spy(df, *args, **kwargs):
+            cut.append(df)
+            return checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(type(s), 'localCheckpoint', spy)
+        rows, exchanges = {}, {}
+        for side in ('tgt', 'src'):
+            del cut[:]
+            rows[side] = sorted(
+                (r['src_id'], r['tgt_id'], round(r['cosine'], 12),
+                 round(r['margin'], 12))
+                for r in bitext_mine(s, t, k=2, threshold=1.0,
+                                     broadcast_side=side).collect())
+            # the scoring pass and both rank windows sit before the
+            # candidate-set lineage cut
+            plan = cut[0]._jdf.queryExecution().executedPlan().toString()
+            exchanges[side] = len(re.findall(r'(?<!Broadcast)Exchange',
+                                             plan))
+        assert rows['src'] == rows['tgt'] and rows['tgt']
+        assert exchanges['tgt'] >= 1
+        assert exchanges['src'] <= exchanges['tgt']
+
     def test_candidates_path_agrees_with_cross(self, spark_session):
         from ons_utils_spark.operators.similarity import bitext_mine
         s, t = self._frames(spark_session)
