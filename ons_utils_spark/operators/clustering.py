@@ -9,20 +9,21 @@ minimum id among itself and its neighbors until a fixed point.
 Converges in O(log n) rounds on real dup-graphs (components are
 small); each round is one join + one aggregate.
 
-Scale notes: checkpoint/persist each round to cut lineage growth
-(the loop caches the frontier); components of near-dup graphs are
-tiny, so no giant-component skew handling is needed — if a corpus
-produced one, cap candidate-pair degree upstream.
+Scale notes: each round is lineage-cut (:func:`lineage.cut`) to stop
+plan growth; components of near-dup graphs are tiny, so no
+giant-component skew handling is needed — if a corpus produced one,
+cap candidate-pair degree upstream.
 """
 from __future__ import annotations
 
-from typing import Optional
+import logging
 
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from .dedup import _reliable_checkpoint
-from .graph import BROADCAST_STATE_MAX_NODES
+from .lineage import cut
+
+_log = logging.getLogger(__name__)
 
 
 def connected_components(
@@ -30,7 +31,6 @@ def connected_components(
     id_a: str = 'id_a',
     id_b: str = 'id_b',
     max_iterations: int = 20,
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = 0,
 ) -> SparkDF:
     """Resolve pair edges to components: ``(node, component)`` where
@@ -39,20 +39,15 @@ def connected_components(
     Only nodes that appear in ``pairs`` are returned (isolated nodes
     are their own components trivially).
 
-    ``checkpoint_dir`` upgrades the per-round lineage cuts from
-    ``localCheckpoint`` (executor-storage blocks — die with any
-    executor, forcing a full recompute of every round so far) to
-    RELIABLE checkpoints on shared storage
-    (:func:`dedup._reliable_checkpoint`) — set it for long cluster
-    runs.
+    Stopping at ``max_iterations`` with labels still changing logs a
+    warning on this module's logger: the labels returned are then
+    not yet the components.
     """
     # Lazy lineage cuts: each round's cut materializes inside the
     # next action's job instead of as its own eager job — same
     # stages, far fewer scheduler round-trips (measured 15.8 → 5.7 s
-    # on a 2000-node path; the reliable-dir branch stays eager, see
-    # :func:`dedup._reliable_checkpoint`).
-    _ckpt = lambda d: _reliable_checkpoint(  # noqa: E731
-        d, checkpoint_dir, eager=False)
+    # on a 2000-node path; reliable cuts stay eager, see
+    # :func:`lineage.cut`).
     edges = pairs.select(
         F.col(id_a).cast('long').alias('a'),
         F.col(id_b).cast('long').alias('b'),
@@ -61,13 +56,13 @@ def connected_components(
     sym = edges.unionByName(
         edges.select(F.col('b').alias('a'), F.col('a').alias('b'))
     ).distinct()
-    # localCheckpoint (not persist): each round's plan would otherwise
+    # A lineage cut (not persist): each round's plan would otherwise
     # embed every previous round — plan size grows exponentially and
     # the DRIVER OOMs during analysis after ~10 iterations.
     # Partition on 'b' — the key EVERY round's label join uses — so
     # the edge frame is never re-exchanged inside the loop; only the
     # one-off init aggregate below pays an exchange on 'a'.
-    sym = sym.repartition('b').transform(_ckpt)
+    sym = sym.repartition('b').transform(cut, eager=False)
 
     labels = (
         sym.groupBy('a')
@@ -76,7 +71,7 @@ def connected_components(
             F.col('a').alias('node'),
             F.least(F.col('a'), F.col('min_neighbor')).alias('comp'),
         )
-        .transform(_ckpt)
+        .transform(cut, eager=False)
     )
     # broadcast_state_nodes > 0: every label-side join below
     # broadcasts while the node count stays under the threshold.
@@ -120,7 +115,7 @@ def connected_components(
         # that ends the loop, no row passes the filter and a limit
         # could not stop the scan early anyway.
         if it == 0:
-            new_labels = _ckpt(new_labels)
+            new_labels = cut(new_labels, eager=False)
             changed = (
                 new_labels.alias('n')
                 .join(_b(labels.alias('o')), 'node')
@@ -149,14 +144,14 @@ def connected_components(
                     F.col('comp'),
                 ).alias('comp'),
             )
-            .transform(_ckpt)
+            .transform(cut, eager=False)
         )
         # Convergence check every OTHER round: the check is a whole
         # extra join+count job, and an already-converged round is a
         # cheap no-op (labels reproduce identically) — skipping half
         # the checks costs at most one redundant round while saving
         # ~1/4 of the loop's jobs. Odd rounds and the final round
-        # always check so the loop can never exit unconverged.
+        # always check, so reaching the cap means labels still changed.
         # (Round 0 already checked between the passes above.)
         labels, prev = new_labels, labels
         if it % 2 == 1 or it == max_iterations - 1:
@@ -168,6 +163,11 @@ def connected_components(
             )
             if changed == 0:
                 break
+    else:
+        _log.warning(
+            'connected_components stopped at max_iterations=%d with '
+            'labels still changing; the returned labels are not yet '
+            'the components', max_iterations)
 
     return labels
 
@@ -176,7 +176,6 @@ def dedup_by_components(
     df: SparkDF,
     pairs: SparkDF,
     id_col: str = 'doc_id',
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Keep one row (lowest id) per duplicate component.
 
@@ -185,7 +184,7 @@ def dedup_by_components(
     duplicate group except its minimum id is dropped, even when some
     members only connect through intermediates.
     """
-    comps = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    comps = connected_components(pairs)
     to_drop = comps.filter(F.col('node') != F.col('comp')).select(
         F.col('node').alias(id_col)
     )

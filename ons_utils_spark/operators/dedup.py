@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .lineage import cut
 from .text import normalize_text, tokenize
 
 
@@ -580,46 +581,6 @@ def _set_fingerprint(hs_col):
     return F.xxhash64(F.array_sort(F.array_distinct(hs_col)))
 
 
-def _reliable_checkpoint(df: SparkDF, checkpoint_dir: Optional[str],
-                         eager: bool = True):
-    """Materialize ``df`` behind a lineage cut, durably when a
-    directory is given.
-
-    ``localCheckpoint`` blocks live in executor storage and die with
-    any executor loss — fine on local[], a recompute-on-failure
-    hazard on a real cluster.  With ``checkpoint_dir`` set the
-    lineage cut is a reliable checkpoint on shared storage instead.
-
-    ``eager=False`` defers the local materialization to the first
-    action that reads the frame: iterative operators cut lineage
-    once per round, and an eager cut makes every round a separate
-    scheduler job — lazy cuts let one downstream job compute a whole
-    chain of rounds stage-by-stage (same stages, a fraction of the
-    job round-trips; Spark still persists each marked RDD and
-    truncates its lineage when that job finishes).  The RELIABLE
-    branch stays eager regardless: a lazily triggered ``checkpoint``
-    recomputes its RDD from lineage during the checkpoint write —
-    the classic double-compute trap.
-
-    The session-global checkpoint directory is restored afterwards if
-    one was already configured (``setCheckpointDir`` is global state;
-    leaving it redirected would silently move every OTHER component's
-    checkpoints).  When none was configured it stays set — Spark has
-    no public unset — which is documented rather than hidden.
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    prev = sc._jsc.sc().getCheckpointDir()
-    prev = prev.get() if prev.isDefined() else None
-    sc.setCheckpointDir(checkpoint_dir)
-    try:
-        return df.checkpoint(eager=True)
-    finally:
-        if prev is not None and prev != checkpoint_dir:
-            sc.setCheckpointDir(prev)
-
-
 def minhash_lsh_candidates(
     df: SparkDF,
     id_col: str = 'doc_id',
@@ -632,8 +593,6 @@ def minhash_lsh_candidates(
     collapse_identical: bool = True,
     max_bucket_size: Optional[int] = 2000,
     banded_index: Optional[SparkDF] = None,
-    materialize_families: bool = False,
-    checkpoint_dir: Optional[str] = None,
     persist_registry: Optional[list] = None,
 ) -> SparkDF:
     """Candidate near-duplicate pairs via banded MinHash LSH.
@@ -676,6 +635,12 @@ def minhash_lsh_candidates(
     shingle pipeline more than once — :func:`minhash_dedup` persists
     and eagerly materializes both, which is the shape to copy at
     scale.
+
+    ``persist_registry``: passing a list persists the family-member
+    frame and the bucket repartition, appends both for the caller to
+    unpersist once the pairs are consumed, and resolves the bucket
+    census eagerly (see :func:`_bucket_pair_join`).  Without it the
+    returned plan is fully lazy and caches nothing.
 
     ``max_bucket_size`` sizing rule: an at-cap bucket emits cap²/2
     pairs from ONE join task (a single bucket key cannot be split by
@@ -723,7 +688,7 @@ def minhash_lsh_candidates(
                     & (F.col('__id') != F.col('__rep')))
             .select('__rep', '__id')
         )
-        if materialize_families:
+        if persist_registry is not None:
             # The member frame is referenced by EVERY downstream
             # branch (banding anti-join feeds both self-join sides,
             # the hub/spoke split, and the bucket census): left
@@ -735,15 +700,10 @@ def minhash_lsh_candidates(
             # race the cold shingle pipeline because the members
             # window exchange is that plan's only leaf stage (the
             # banding repartition exchange depends on it, so stages
-            # run sequentially).  Without a registry fall back to
-            # the eager checkpoint — a bare persist would leak past
-            # the call.
-            if persist_registry is not None:
-                from pyspark import StorageLevel
-                members = members.persist(StorageLevel.MEMORY_AND_DISK)
-                persist_registry.append(members)
-            else:
-                members = _reliable_checkpoint(members, checkpoint_dir)
+            # run sequentially).
+            from pyspark import StorageLevel
+            members = members.persist(StorageLevel.MEMORY_AND_DISK)
+            persist_registry.append(members)
         fam_pairs = members.select(F.col('__rep').alias('id_a'),
                                    F.col('__id').alias('id_b'))
         member_ids = members.select('__id')
@@ -771,7 +731,7 @@ def minhash_lsh_candidates(
     # recompiling the minhash pipeline twice.
     pairs = _bucket_pair_join(
         banded, ('band', 'bucket'), max_bucket_size=max_bucket_size,
-        eager_census=materialize_families,
+        eager_census=persist_registry is not None,
         persist_registry=persist_registry)
     if fam_pairs is not None:
         pairs = pairs.unionByName(fam_pairs)
@@ -987,7 +947,6 @@ def minhash_dedup(
     shingles: str = 'word',
     collapse_identical: bool = True,
     max_bucket_size: Optional[int] = 2000,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Remove near-duplicates: LSH candidates → exact Jaccard verify →
     greedy keep-lowest-id.
@@ -1011,11 +970,9 @@ def minhash_dedup(
     checkpointed): the expensive shingle cache is released before
     this returns, so repeated calls in a long-lived session don't
     accumulate cached partitions, and re-running actions on the
-    result re-executes only the cheap anti-join.  By default the
-    lineage cut is a ``localCheckpoint`` (executor storage — not
-    resilient to executor loss); pass ``checkpoint_dir`` (shared
-    storage, e.g. an HDFS/S3 path) for a reliable checkpoint on a
-    real cluster.
+    result re-executes only the cheap anti-join.  The cut is
+    :func:`lineage.cut`: a reliable checkpoint when the session has
+    a checkpoint directory, executor-local otherwise.
     """
     from pyspark import StorageLevel
 
@@ -1052,8 +1009,6 @@ def minhash_dedup(
             collapse_identical=collapse_identical,
             max_bucket_size=max_bucket_size,
             banded_index=banded,
-            materialize_families=True,
-            checkpoint_dir=checkpoint_dir,
             persist_registry=registry,
         )
         verified = verify_jaccard_hashed(cands, hashed, jaccard_threshold)
@@ -1073,10 +1028,7 @@ def minhash_dedup(
         # (A/B-measured r10); a pathological clone-heavy corpus
         # should pass ``collapse_identical=True`` (exact clones
         # collapse before banding) or restore a distinct upstream.
-        to_drop = _reliable_checkpoint(
-            verified.select(F.col('id_b').alias(id_col)),
-            checkpoint_dir,
-        )
+        to_drop = cut(verified.select(F.col('id_b').alias(id_col)))
     finally:
         hashed.unpersist()
         for cached in registry:
@@ -1418,7 +1370,6 @@ def simhash_dedup(
     max_hamming: int = 3,
     collapse_identical: bool = True,
     max_bucket_size: Optional[int] = 2000,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Near-dedup by SimHash: 4-block banding finds all pairs within
     Hamming distance 3 (pigeonhole: one 16-bit block must match
@@ -1435,8 +1386,6 @@ def simhash_dedup(
     cutting a k-clone family's candidate pairs from k²/2 to 0.
     Buckets still larger than ``max_bucket_size`` after the collapse
     are star-paired on the bucket min (:func:`_bucket_pair_join`).
-    ``checkpoint_dir`` upgrades the eager drop-list materialization
-    from ``localCheckpoint`` to a reliable checkpoint.
     """
     # Signatures fully JVM-side (:func:`_simhash_sigs`).  The
     # signature frame (id + 4 bigints, ~40 B/row at ANY corpus
@@ -1526,10 +1475,7 @@ def simhash_dedup(
         # small families dominate real corpora and the saved full
         # shuffle wins (A/B-measured r10); clone-heavy corpora
         # should collapse identical docs upstream.
-        to_drop = _reliable_checkpoint(
-            dropped.select(F.col('__id').alias(id_col)),
-            checkpoint_dir,
-        )
+        to_drop = cut(dropped.select(F.col('__id').alias(id_col)))
     finally:
         sigs.unpersist()
         for cached in registry:
@@ -2190,7 +2136,6 @@ def _lsh_near_duplicates(
     planes_per_band: int,
     seed: int,
     max_bucket_size: Optional[int],
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Sub-quadratic candidate path for
     :func:`embedding_near_duplicates`: banded hyperplane-LSH bucket
@@ -2219,10 +2164,7 @@ def _lsh_near_duplicates(
     # Eager lineage cut: the bucket census and both self-join sides
     # each reference this frame — left lazy the signature-GEMM
     # pipeline recomputes per branch (the r8 dedup-guard regression).
-    # ``checkpoint_dir`` upgrades the cut from executor-local blocks
-    # to a reliable checkpoint on shared storage (executor loss at
-    # scale otherwise recomputes the GEMM pipeline mid-job).
-    banded = _reliable_checkpoint(banded, checkpoint_dir)
+    banded = cut(banded)
     cand = _bucket_pair_join(
         banded, ('band', 'bucket'), max_bucket_size=max_bucket_size,
         eager_census=True,
@@ -2247,7 +2189,6 @@ def embedding_near_duplicates(
     lsh_planes_per_band: int = 16,
     lsh_seed: int = 42,
     max_bucket_size: Optional[int] = 2000,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Near-dup pairs by embedding cosine similarity.
 
@@ -2270,7 +2211,7 @@ def embedding_near_duplicates(
     with no O(n²) join shuffle. When blocked, each unordered pair
     lands in exactly one block — the one holding its larger id — so
     the union needs no dedup; per-block results are eagerly
-    ``localCheckpoint``-ed and the broadcast released.
+    lineage-cut and the broadcast released.
 
     LSH path: one GEMM pass computes ``lsh_bands`` bucket keys per
     vector; the banded frame self-joins per (band, key) through
@@ -2278,10 +2219,7 @@ def embedding_near_duplicates(
     star-cap guarding against embedding-clone mega-families — and
     candidates verify with exact cosine. NULL/empty embeddings drop
     out at the banding stage (no bucket), matching the exact path
-    (a zero row can never reach ``threshold``).  ``checkpoint_dir``
-    upgrades the LSH path's banded-frame lineage cut from
-    ``localCheckpoint`` to a reliable checkpoint on shared storage
-    (same contract as :func:`minhash_dedup`).
+    (a zero row can never reach ``threshold``).
     """
     if method not in ('auto', 'exact', 'lsh'):
         raise ValueError(
@@ -2295,8 +2233,7 @@ def embedding_near_duplicates(
     if use_lsh:
         return _lsh_near_duplicates(
             src, id_col, vec_col, threshold, dim, lsh_bands,
-            lsh_planes_per_band, lsh_seed, max_bucket_size,
-            checkpoint_dir)
+            lsh_planes_per_band, lsh_seed, max_bucket_size)
     if block_rows is None:
         if n <= max_broadcast_rows:
             ids, mat = _collect_normalized(src, id_col, vec_col)
@@ -2317,10 +2254,10 @@ def embedding_near_duplicates(
                 src.filter(F.col('__block') == b), id_col, vec_col)
             b_ids = spark.sparkContext.broadcast(ids)
             b_mat = spark.sparkContext.broadcast(mat)
-            pairs_b = _gemm_pairs(
+            pairs_b = cut(_gemm_pairs(  # materialize, then free
                 src.drop('__block'), b_ids, b_mat, threshold,
                 id_col, vec_col,
-            ).localCheckpoint(eager=True)  # materialize, then free
+            ))
             b_ids.unpersist()
             b_mat.unpersist()
             parts.append(pairs_b)
@@ -2491,7 +2428,7 @@ def source_overlap(
             F.col(group_col).alias('g'),
             F.explode(word_shingles(text_col, n)).alias('sh'))
         .groupBy('sh').agg(F.collect_set('g').alias('gs'))
-        .localCheckpoint(eager=False)
+        .transform(cut, eager=False)
     )
     sizes = (
         posting.select(F.explode('gs').alias('g'))
@@ -2636,7 +2573,6 @@ def keep_best_duplicate(
     id_a: str = 'id_a',
     id_b: str = 'id_b',
     max_iterations: int = 20,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Resolve near-duplicate PAIRS to clusters and keep each
     cluster's BEST-scoring row (ties → lowest id) — the
@@ -2659,7 +2595,7 @@ def keep_best_duplicate(
     from .clustering import connected_components
 
     comp = connected_components(
-        pairs, id_a, id_b, max_iterations, checkpoint_dir,
+        pairs, id_a, id_b, max_iterations,
     ).withColumnRenamed('node', '__node')
     in_pairs = comp.select(F.col('__node').alias(id_col))
     # (score, -id) struct comparison: max score wins, ties take the

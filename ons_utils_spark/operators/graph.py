@@ -9,15 +9,17 @@ hub records in entity graphs.  The reference engine
 of the extension surface.
 
 Spark-first design: the rank vector and edge list stay DataFrames;
-each iteration is one join + one aggregate, with ``localCheckpoint``
-per iteration to stop the plan from embedding every previous round
-(driver analysis blow-up — same pattern as
-``connected_components``).  At 100 TB scale the edge list
-dominates: it is materialized ONCE, and while the node count stays
-under ``BROADCAST_STATE_MAX_NODES`` the per-round join broadcasts
-the O(nodes) rank state so the edge frame is scanned, never
-exchanged; above the threshold the join falls back to sort-merge
-(a billion-node rank vector must not be collected).
+each iteration is one join + one aggregate, with a lineage cut
+(:func:`lineage.cut`) per iteration to stop the plan from embedding
+every previous round (driver analysis blow-up — same pattern as
+``connected_components``).  The cuts are reliable checkpoints when
+the session has a checkpoint directory, executor-local otherwise.
+At 100 TB scale the edge list dominates: it is materialized ONCE,
+and while the node count stays under ``BROADCAST_STATE_MAX_NODES``
+the per-round join broadcasts the O(nodes) rank state so the edge
+frame is scanned, never exchanged; above the threshold the join
+falls back to sort-merge (a billion-node rank vector must not be
+collected).
 
 Two arithmetic modes (same pattern as ``operators/classifier.py``):
 
@@ -34,12 +36,11 @@ Two arithmetic modes (same pattern as ``operators/classifier.py``):
 from __future__ import annotations
 
 from fractions import Fraction
-from typing import Optional
 
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from .dedup import _reliable_checkpoint
+from .lineage import cut
 
 __all__ = ['pagerank', 'personalized_pagerank', 'triangle_count',
            'bfs_levels', 'label_propagation', 'harmonic_centrality',
@@ -70,7 +71,6 @@ def label_propagation(
     src: str = 'src',
     dst: str = 'dst',
     iterations: int = 5,
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Community detection by synchronous label propagation
@@ -95,13 +95,6 @@ def label_propagation(
     labels: FOUR shuffles per round.  All integer arithmetic, so a
     recursive-CTE oracle replays every round exactly.  Isolated
     nodes (no edges) keep their own label.
-
-    ``checkpoint_dir`` makes the per-round lineage cuts RELIABLE
-    checkpoints on shared storage (see
-    :func:`dedup._reliable_checkpoint`): ``localCheckpoint`` blocks
-    die with an executor, which on a real cluster forces a full
-    recompute of every round so far — set it for any long-running
-    cluster job.
     """
     # Per-round cuts are LAZY here (fixed-iteration loop, no
     # mid-loop actions): the final action materializes the whole
@@ -109,8 +102,6 @@ def label_propagation(
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
     # loop breaks stay eager, see OPTIMIZATION_r15.md).
-    _ckpt = lambda d: _reliable_checkpoint(  # noqa: E731
-        d, checkpoint_dir, eager=False)
     e = edges.select(F.col(src).cast('long').alias('a'),
                      F.col(dst).cast('long').alias('b')) \
         .filter(F.col('a') != F.col('b'))
@@ -123,9 +114,9 @@ def label_propagation(
     # partitioning — OPTIMIZATION_r15.md §18).
     sym = e.unionByName(
         e.select(F.col('b').alias('a'), F.col('a').alias('b'))
-    ).distinct().repartition('b').transform(_ckpt)
+    ).distinct().repartition('b').transform(cut, eager=False)
     nodes = sym.select(F.col('a').alias('node')).distinct() \
-        .transform(_ckpt)
+        .transform(cut, eager=False)
     # node count is exact and cheap here (one job over the
     # checkpointed node frame); under the threshold every round's
     # label join broadcasts the node-sized label state — the edge
@@ -169,7 +160,7 @@ def label_propagation(
         # covers the full node set — the nodes-frame left join (one
         # shuffle join per round) is redundant and skipped.
         labels = best.select(F.col('n').alias('node'), 'label') \
-            .transform(_ckpt)
+            .transform(cut, eager=False)
     return labels
 
 
@@ -181,7 +172,6 @@ def bfs_levels(
     node: str = 'node',
     max_hops: int = 6,
     directed: bool = True,
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Minimum hop distance from a source set → ``(node, hop)``.
@@ -189,13 +179,11 @@ def bfs_levels(
     Frontier BFS: each round joins ONLY the newest frontier against
     the edge list and anti-joins already-visited nodes, so per-round
     work is O(frontier × avg-degree) — never |V|×|E|.  Visited
-    state is lineage-cut per round (``checkpoint_dir`` upgrades the
-    cuts to reliable checkpoints — see :func:`label_propagation`),
-    and the loop exits early when the frontier empties.  Unreached nodes are
-    absent from the result (callers can left-join ``hop IS NULL``).
-    All integer — the DuckDB oracle replays it with a UNION
-    (deduplicating) recursive CTE whose state is bounded by
-    nodes × hops.
+    state is lineage-cut per round, and the loop exits early when
+    the frontier empties.  Unreached nodes are absent from the
+    result (callers can left-join ``hop IS NULL``).  All integer —
+    the DuckDB oracle replays it with a UNION (deduplicating)
+    recursive CTE whose state is bounded by nodes × hops.
 
     The expand join and the anti-join broadcast their state side
     PER HOP while its exact count (the emptiness check already
@@ -205,14 +193,13 @@ def bfs_levels(
     bulk hops fall back to sort-merge, each hop choosing from its
     own measured size.
     """
-    _ckpt = lambda d: _reliable_checkpoint(d, checkpoint_dir)  # noqa: E731
     e = edges.select(F.col(src).cast('long').alias('s'),
                      F.col(dst).cast('long').alias('d')).distinct()
     if not directed:
         e = e.unionByName(
             e.select(F.col('d').alias('s'), F.col('s').alias('d'))
         ).distinct()
-    e = e.repartition('s').transform(_ckpt)
+    e = e.repartition('s').transform(cut)
     # visited state = the UNION of the per-hop checkpointed
     # frontiers: each hop's new nodes are materialized exactly once
     # (as `nxt`), never re-written as part of a growing `levels`
@@ -220,7 +207,7 @@ def bfs_levels(
     # checkpointed RDDs (one materialization per hop instead of two).
     first = sources.select(
         F.col(node).cast('long').alias('n')).distinct().select(
-        'n', F.lit(0).cast('int').alias('hop')).transform(_ckpt)
+        'n', F.lit(0).cast('int').alias('hop')).transform(cut)
     frontier_n = first.count()
     visited_n = frontier_n
     parts = [first]
@@ -236,7 +223,7 @@ def bfs_levels(
         )
         v = F.broadcast(visited) \
             if 0 < visited_n <= broadcast_state_nodes else visited
-        nxt = cand.join(v, 'n', 'left_anti').transform(_ckpt)
+        nxt = cand.join(v, 'n', 'left_anti').transform(cut)
         # count() doubles as the emptiness check AND the next hop's
         # broadcast-size measurement; it reads the just-checkpointed
         # blocks, same cost class as the limit(1).count() it replaces
@@ -258,7 +245,6 @@ def triangle_count(
     edges: SparkDF,
     src: str = 'src',
     dst: str = 'dst',
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Count triangles in the undirected simple graph of ``edges``.
 
@@ -271,11 +257,8 @@ def triangle_count(
     orientation (out-degrees are bounded by graph arboricity, not by
     raw degree), keeping the wedge self-join from exploding on
     skewed graphs.  Pure joins/aggregates; all integer arithmetic,
-    so the oracle replays it exactly.  ``checkpoint_dir`` upgrades
-    the oriented-edge lineage cut to a reliable checkpoint (see
-    :func:`label_propagation`).
+    so the oracle replays it exactly.
     """
-    _ckpt = lambda d: _reliable_checkpoint(d, checkpoint_dir)  # noqa: E731
     e = (
         edges.select(F.col(src).cast('long').alias('u'),
                      F.col(dst).cast('long').alias('v'))
@@ -305,7 +288,7 @@ def triangle_count(
         .alias('ds'),
         F.when(lower_first, F.col('db')).otherwise(F.col('da'))
         .alias('dt'),
-    ).transform(_ckpt)
+    ).transform(cut)
     e1, e2 = oriented.alias('e1'), oriented.alias('e2')
     # wedge (s → t1, s → t2) with t1 before t2 in orientation order
     wedges = e1.join(e2, on=[
@@ -345,7 +328,6 @@ def pagerank(
     scale: int = 10 ** 12,
     self_loops: str = 'dangling',
     checkpoint_every: int = 1,
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """PageRank of a directed edge list → ``(node, rank)``.
@@ -367,10 +349,7 @@ def pagerank(
     Measured at sf0.1, N=1 (the default) beats N=2 — the deeper
     two-round plans re-optimize and re-shuffle worse than the extra
     materialization costs — so raise N only after measuring on your
-    own graph/cluster.  ``checkpoint_dir`` upgrades every lineage
-    cut to a reliable checkpoint on shared storage (see
-    :func:`label_propagation`) — executor loss then costs one round,
-    not the whole run.
+    own graph/cluster.
 
     ``broadcast_state_nodes``: when the graph has at most this many
     nodes the per-round join BROADCASTS the rank state (see
@@ -384,8 +363,6 @@ def pagerank(
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
     # loop breaks stay eager, see OPTIMIZATION_r15.md).
-    _ckpt = lambda d: _reliable_checkpoint(  # noqa: E731
-        d, checkpoint_dir, eager=False)
     if mode not in ('float', 'integer'):
         raise ValueError(f"mode must be 'float' or 'integer', got {mode!r}")
     if self_loops not in ('dangling', 'all', 'none'):
@@ -403,12 +380,12 @@ def pagerank(
     # materialized RDD instead.
     e = edges.select(F.col(src).cast('long').alias('src'),
                      F.col(dst).cast('long').alias('dst')) \
-        .distinct().transform(_ckpt)
+        .distinct().transform(cut, eager=False)
     nodes = (
         e.select(F.col('src').alias('node'))
         .unionByName(e.select(F.col('dst').alias('node')))
         .distinct()
-        .transform(_ckpt)
+        .transform(cut, eager=False)
     )
     if self_loops == 'all':
         # {e} ∪ {(n,n) ∀n} == {e: src≠dst} ∪ {(n,n) ∀n}: dropping
@@ -436,7 +413,7 @@ def pagerank(
     ed = (
         e.join(deg, 'src')
         .repartition('src')
-        .transform(_ckpt)
+        .transform(cut, eager=False)
     )
     n = nodes.count()
 
@@ -474,7 +451,7 @@ def pagerank(
             )
             if (it + 1) % checkpoint_every == 0 \
                     or it == iterations - 1:
-                ranks = _ckpt(ranks)
+                ranks = cut(ranks, eager=False)
         return ranks.select('node', F.col('r').alias('rank'))
 
     ranks = nodes.select('node', F.lit(1.0 / n).alias('r'))
@@ -495,7 +472,7 @@ def pagerank(
             .alias('r'),
         )
         if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = _ckpt(ranks)
+            ranks = cut(ranks, eager=False)
     return ranks.select('node', F.col('r').alias('rank'))
 
 
@@ -505,7 +482,6 @@ def hits(
     dst: str = 'dst',
     iterations: int = 3,
     mode: str = 'float',
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """HITS hubs and authorities (Kleinberg 1999) of a directed edge
@@ -536,7 +512,6 @@ def hits(
     ordering, which is what HITS is for, matches the normalized
     ordering exactly because normalization is a positive scalar.
     """
-    _ckpt = lambda d: _reliable_checkpoint(d, checkpoint_dir)  # noqa: E731
     if mode not in ('float', 'integer'):
         raise ValueError(f"mode must be 'float' or 'integer', got {mode!r}")
     if iterations < 1:
@@ -547,7 +522,7 @@ def hits(
     # the checkpointed edge frame (the repartition normalizes the
     # checkpoint's block parallelism — it does NOT survive the cut
     # as a physical partitioning, OPTIMIZATION_r15.md §18)
-    e_by_src = e.repartition('src').transform(_ckpt)
+    e_by_src = e.repartition('src').transform(cut)
     # node sets derive from the MATERIALIZED edge frame: every
     # downstream use (h init, the final outer join — which the
     # caller may scan more than once) then reads a checkpointed RDD
@@ -555,17 +530,17 @@ def hits(
     # (observed: the upstream lineitem⋈orders build re-executed four
     # times in the final action's plan).
     srcs = e_by_src.select(F.col('src').alias('node')).distinct() \
-        .transform(_ckpt)
+        .transform(cut)
     dsts = e_by_src.select(F.col('dst').alias('node')).distinct() \
-        .transform(_ckpt)
-    nodes = srcs.unionByName(dsts).distinct().transform(_ckpt)
+        .transform(cut)
+    nodes = srcs.unionByName(dsts).distinct().transform(cut)
     bcast = 0 < nodes.count() <= broadcast_state_nodes
     # with the state broadcast the half-step joins never exchange
     # the edge frame, so ONE materialized copy serves both
     # orientations; the sort-merge fallback keeps a second copy
     # whose build reads the checkpointed frame, not the raw lineage
     e_by_dst = e_by_src if bcast \
-        else e_by_src.repartition('dst').transform(_ckpt)
+        else e_by_src.repartition('dst').transform(cut)
 
     one = F.lit(1).cast('long') if mode == 'integer' else F.lit(1.0)
     h = srcs.select('node', one.alias('h'))
@@ -580,7 +555,7 @@ def hits(
         # unchanged: the division happens on the same aggregate rows
         # either side of the cut.
         hh = F.broadcast(h) if bcast else h
-        a = _ckpt(
+        a = cut(
             e_by_src.join(hh, e_by_src['src'] == hh['node'])
             .groupBy(F.col('dst').alias('node'))
             .agg(F.sum('h').alias('a'))
@@ -590,7 +565,7 @@ def hits(
                 F.sqrt(F.sum(F.col('a') * F.col('a')))).first()[0]
             a = a.select('node', (F.col('a') / norm).alias('a'))
         aa = F.broadcast(a) if bcast else a
-        h = _ckpt(
+        h = cut(
             e_by_dst.join(aa, e_by_dst['dst'] == aa['node'])
             .groupBy(F.col('src').alias('node'))
             .agg(F.sum('a').alias('h'))
@@ -621,7 +596,6 @@ def personalized_pagerank(
     mode: str = 'float',
     scale: int = 10 ** 12,
     checkpoint_every: int = 1,
-    checkpoint_dir: Optional[str] = None,
     broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Personalized PageRank (random walk with restart to a SEED
@@ -655,8 +629,6 @@ def personalized_pagerank(
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
     # loop breaks stay eager, see OPTIMIZATION_r15.md).
-    _ckpt = lambda d: _reliable_checkpoint(  # noqa: E731
-        d, checkpoint_dir, eager=False)
     if mode not in ('float', 'integer'):
         raise ValueError(
             f"mode must be 'float' or 'integer', got {mode!r}")
@@ -666,7 +638,7 @@ def personalized_pagerank(
     # whole edge build during their plan compile.
     e = edges.select(F.col(src).cast('long').alias('src'),
                      F.col(dst).cast('long').alias('dst')) \
-        .distinct().transform(_ckpt)
+        .distinct().transform(cut, eager=False)
     nodes = (
         e.select(F.col('src').alias('node'))
         .unionByName(e.select(F.col('dst').alias('node')))
@@ -679,7 +651,7 @@ def personalized_pagerank(
     )
     flagged = nodes.join(
         F.broadcast(seed_nodes.withColumn('__seed', F.lit(1))),
-        'node', 'left').transform(_ckpt)
+        'node', 'left').transform(cut, eager=False)
     # one materializing job returns BOTH counts (seed count for the
     # teleport mass, node count for the broadcast-state decision)
     row = flagged.agg(
@@ -700,7 +672,7 @@ def personalized_pagerank(
         flagged.select(F.col('node').alias('src'),
                        F.col('node').alias('dst')))
     deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
-    ed = e.join(deg, 'src').repartition('src').transform(_ckpt)
+    ed = e.join(deg, 'src').repartition('src').transform(cut, eager=False)
 
     frac = Fraction(damping).limit_denominator(1000)
     num, den = frac.numerator, frac.denominator
@@ -741,7 +713,7 @@ def personalized_pagerank(
             )
             if (it + 1) % checkpoint_every == 0 \
                     or it == iterations - 1:
-                ranks = _ckpt(ranks)
+                ranks = cut(ranks, eager=False)
         return ranks.select('node', F.col('r').alias('rank'))
 
     base = (1.0 - damping) / s
@@ -763,7 +735,7 @@ def personalized_pagerank(
              + damping * F.coalesce('__inc', F.lit(0.0))).alias('r'),
         )
         if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = _ckpt(ranks)
+            ranks = cut(ranks, eager=False)
     return ranks.select('node', F.col('r').alias('rank'))
 
 
@@ -773,7 +745,6 @@ def harmonic_centrality(
     dst: str = 'dst',
     max_hops: int = 4,
     directed: bool = True,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """Harmonic centrality truncated at ``max_hops``:
     ``H(v) = Σ_{u ≠ v, d(u,v) ≤ max_hops} 1 / d(u,v)`` with distances
@@ -803,17 +774,16 @@ def harmonic_centrality(
     total is engine-exact (one division per hop level, never a
     row-order-dependent float sum).
     """
-    _ckpt = lambda d: _reliable_checkpoint(d, checkpoint_dir)  # noqa: E731
     e = edges.select(F.col(src).cast('long').alias('s'),
                      F.col(dst).cast('long').alias('d')).distinct()
     if not directed:
         e = e.unionByName(
             e.select(F.col('d').alias('s'), F.col('s').alias('d'))
         ).distinct()
-    e = e.repartition('s').transform(_ckpt)
+    e = e.repartition('s').transform(cut)
     nodes = (e.select(F.col('s').alias('node'))
              .unionByName(e.select(F.col('d').alias('node')))
-             .distinct().transform(_ckpt))
+             .distinct().transform(cut))
     # (root, node) pairs at minimum hop; roots walk FORWARD along
     # edges, so node v accumulates the roots that REACH it.
     frontier = nodes.select(F.col('node').alias('root'),
@@ -823,14 +793,14 @@ def harmonic_centrality(
     # frontiers instead of re-materializing the whole growing set
     # every round — each pair is written once, at the hop that
     # discovered it.
-    seen = frontier.transform(_ckpt)
+    seen = frontier.transform(cut)
     per_hop = None
     for hop in range(1, max_hops + 1):
         nxt = (
             frontier.join(e, frontier['n'] == e['s'])
             .select('root', F.col('d').alias('n')).distinct()
             .join(seen, ['root', 'n'], 'left_anti')
-            .transform(_ckpt)
+            .transform(cut)
         )
         if nxt.limit(1).count() == 0:
             break
@@ -871,7 +841,6 @@ def hyperball_centrality(
     max_hops: int = 3,
     p: int = 6,
     directed: bool = True,
-    checkpoint_dir: Optional[str] = None,
 ) -> SparkDF:
     """APPROXIMATE truncated harmonic centrality via HyperBall (Boldi
     & Vigna 2013, "In-Core Computation of Geometric Centralities
@@ -907,14 +876,13 @@ def hyperball_centrality(
         raise ValueError(f'p must be >= 4, got {p!r}')
     m = 1 << p
     alpha = _HLL_ALPHA.get(p, 0.7213 / (1 + 1.079 / m))
-    _ckpt = lambda d: _reliable_checkpoint(d, checkpoint_dir)  # noqa: E731
     e = edges.select(F.col(src).cast('long').alias('s'),
                      F.col(dst).cast('long').alias('d')).distinct()
     if not directed:
         e = e.unionByName(
             e.select(F.col('d').alias('s'), F.col('s').alias('d'))
         ).distinct()
-    e = e.repartition('s').transform(_ckpt)
+    e = e.repartition('s').transform(cut)
     nodes = (e.select(F.col('s').alias('node'))
              .unionByName(e.select(F.col('d').alias('node')))
              .distinct())
@@ -934,7 +902,7 @@ def hyperball_centrality(
                 F.when(F.col('register') == F.col('__idx'),
                        F.col('__rk')).otherwise(F.lit(0))
                 .alias('rank'))
-        .transform(_ckpt)
+        .transform(cut)
     )
 
     def estimate(r: SparkDF, out: str) -> SparkDF:
@@ -960,7 +928,7 @@ def hyperball_centrality(
             regs.unionByName(inbound)
             .groupBy('node', 'register')
             .agg(F.max('rank').alias('rank'))
-            .transform(_ckpt)
+            .transform(cut)
         )
         balls = balls.join(estimate(regs, f'e{hop}'), 'node')
     reached = None

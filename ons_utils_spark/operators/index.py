@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .lineage import cut
 from .text import normalize_text, tokenize
 
 __all__ = ['build_inverted_index', 'search_all_terms', 'bm25_rank',
@@ -257,7 +258,7 @@ def bm25_multi_rank(
                  F.when(F.col('__m') == 1, F.col('token'))
                  .alias('token'))
         .agg(F.count(F.lit(1)).alias('__tf'))
-        .localCheckpoint(eager=False)
+        .transform(cut, eager=False)
     )
     dl = per.groupBy('__doc').agg(F.sum('__tf').alias('__dl'))
     stats = dl.agg(F.avg('__dl').alias('__avgdl'),

@@ -33,6 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
+from .lineage import cut
 
 
 def cosine_topk(
@@ -1102,7 +1103,7 @@ def bitext_mine(
     # before-plan held TWELVE copies of the cross product).
     cands0 = (
         ranked.where((F.col('__rs') <= k) | (F.col('__rt') <= k))
-        .localCheckpoint(eager=False))
+        .transform(cut, eager=False))
     # per-side hubness denominators: mean of the k nearest cosines
     mean_s = (cands0.where(F.col('__rs') <= k).groupBy('__sid')
               .agg(F.avg('cosine').alias('__ms')))

@@ -47,6 +47,19 @@ def spark_session():
 
 
 @pytest.fixture
+def session_checkpoint_dir(spark_session, tmp_path):
+    """Give the session a reliable-checkpoint directory for one test,
+    so every operator's lineage cuts become reliable checkpoints
+    written under the yielded path, and clear it on teardown (Spark
+    has no public unset) so the rest of the suite cuts locally."""
+    sc = spark_session.sparkContext
+    path = tmp_path / 'checkpoints'
+    sc.setCheckpointDir(str(path))
+    yield path
+    getattr(sc._jsc.sc(), 'checkpointDir_$eq')(sc._jvm.scala.Option.empty())
+
+
+@pytest.fixture
 def create_spark_df(spark_session):
     """Create a Spark DataFrame from tuple data; first row is the DDL
     schema string (or column list)."""

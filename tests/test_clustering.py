@@ -1,5 +1,5 @@
 """Tests for connected components / component-based dedup."""
-import pytest
+import logging
 
 from ons_utils_spark.operators.clustering import (
     connected_components,
@@ -62,17 +62,41 @@ def test_long_chain_converges_within_iteration_cap(spark_session):
     assert all(r['comp'] == 100 for r in rows)
 
 
-def test_components_checkpoint_dir_roundtrip(spark_session, tmp_path):
-    """checkpoint_dir routes the per-round lineage cuts through a
-    real on-disk reliable checkpoint, same answer."""
-    import os
+def test_components_checkpoint_dir_roundtrip(spark_session, request):
+    """A session checkpoint directory routes the per-round lineage
+    cuts through real on-disk reliable checkpoints, same answer."""
     from ons_utils_spark import connected_components
     edges = spark_session.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], 'id_a bigint, id_b bigint')
-    ck = str(tmp_path / 'cc_ckpt')
-    with_dir = {(r['node'], r['comp']) for r in connected_components(
-        edges, checkpoint_dir=ck).collect()}
     default = {(r['node'], r['comp']) for r in connected_components(
         edges).collect()}
+    ck = request.getfixturevalue('session_checkpoint_dir')
+    with_dir = {(r['node'], r['comp']) for r in connected_components(
+        edges).collect()}
     assert with_dir == default
-    assert os.listdir(ck)
+    assert list(ck.glob('*/rdd-*'))  # really wrote reliable checkpoints
+
+
+class TestIterationCapWarning:
+    """Stopping at ``max_iterations`` with labels still changing is
+    reported on the module logger, never silent."""
+
+    LOGGER = 'ons_utils_spark.operators.clustering'
+
+    def test_capped_path_logs_warning(self, spark_session, caplog):
+        # a 40-node path needs ~5 doubling rounds; one is not enough
+        pairs = _pairs(spark_session, [(i, i + 1) for i in range(40)])
+        with caplog.at_level(logging.WARNING, logger=self.LOGGER):
+            comps = connected_components(pairs, max_iterations=1)
+        assert {r['comp'] for r in comps.collect()} != {0}
+        warned = [r for r in caplog.records if r.name == self.LOGGER]
+        assert len(warned) == 1
+        assert warned[0].levelno == logging.WARNING
+        assert 'max_iterations=1' in warned[0].getMessage()
+
+    def test_converged_call_logs_nothing(self, spark_session, caplog):
+        pairs = _pairs(spark_session, [(i, i + 1) for i in range(40)])
+        with caplog.at_level(logging.DEBUG, logger=self.LOGGER):
+            comps = connected_components(pairs)
+        assert {r['comp'] for r in comps.collect()} == {0}
+        assert not [r for r in caplog.records if r.name == self.LOGGER]

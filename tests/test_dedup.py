@@ -1340,10 +1340,10 @@ class TestHotBucketGuard:
                 jaccard_threshold=0.5).collect()
 
     def test_embedding_lsh_checkpoint_dir(self, spark_session,
-                                          tmp_path):
-        """checkpoint_dir threads through to the LSH path's lineage
-        cut (r9 ADVICE: the auto/lsh path at scale otherwise keeps
-        the executor-loss recompute hazard)."""
+                                          session_checkpoint_dir):
+        """A session checkpoint directory reaches the LSH path's
+        lineage cut (r9 ADVICE: the auto/lsh path at scale otherwise
+        keeps the executor-loss recompute hazard)."""
         import random
         rng = random.Random(3)
         rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
@@ -1353,24 +1353,22 @@ class TestHotBucketGuard:
             rows, 'vec_id bigint, embedding array<double>')
         got = {(r['id_a'], r['id_b'])
                for r in dd.embedding_near_duplicates(
-                   df, method='lsh', threshold=0.95,
-                   checkpoint_dir=str(tmp_path / 'ck')).collect()}
+                   df, method='lsh', threshold=0.95).collect()}
         assert (7, 100) in got
-        import os
-        assert os.listdir(tmp_path / 'ck')  # really wrote there
+        # really wrote there
+        assert list(session_checkpoint_dir.glob('*/rdd-*'))
 
     def test_minhash_checkpoint_dir_roundtrip(
-            self, spark_session, docs_with_dups, tmp_path):
-        kept = {r['doc_id'] for r in dd.minhash_dedup(
-            docs_with_dups, num_hashes=64, bands=32,
-            jaccard_threshold=0.5,
-            checkpoint_dir=str(tmp_path / 'ckpt')).collect()}
+            self, spark_session, docs_with_dups, request):
         default = {r['doc_id'] for r in dd.minhash_dedup(
             docs_with_dups, num_hashes=64, bands=32,
             jaccard_threshold=0.5).collect()}
+        ck = request.getfixturevalue('session_checkpoint_dir')
+        kept = {r['doc_id'] for r in dd.minhash_dedup(
+            docs_with_dups, num_hashes=64, bands=32,
+            jaccard_threshold=0.5).collect()}
         assert kept == default
-        import os
-        assert os.listdir(tmp_path / 'ckpt')  # really wrote there
+        assert list(ck.glob('*/rdd-*'))  # really wrote there
 
 
 class TestEmbeddingIndex:

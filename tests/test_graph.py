@@ -196,45 +196,43 @@ def test_validation(spark_session):
         pagerank(df, self_loops='maybe')
 
 
-def test_pagerank_checkpoint_dir_roundtrip(spark_session, tmp_path):
-    """checkpoint_dir must produce identical ranks via RELIABLE
-    checkpoints on real storage (not executor-local blocks)."""
-    import os
+def test_pagerank_checkpoint_dir_roundtrip(spark_session, request):
+    """A session checkpoint directory must produce identical ranks
+    via RELIABLE checkpoints on real storage (not executor-local
+    blocks)."""
     edges = spark_session.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], 'src long, dst long')
-    ck = str(tmp_path / 'pr_ckpt')
-    with_dir = {r['node']: r['rank'] for r in pagerank(
-        edges, mode='integer', iterations=4,
-        checkpoint_dir=ck).collect()}
     default = {r['node']: r['rank'] for r in pagerank(
         edges, mode='integer', iterations=4).collect()}
+    ck = request.getfixturevalue('session_checkpoint_dir')
+    with_dir = {r['node']: r['rank'] for r in pagerank(
+        edges, mode='integer', iterations=4).collect()}
     assert with_dir == default
-    assert os.listdir(ck)  # really wrote reliable checkpoints
+    assert list(ck.glob('*/rdd-*'))  # really wrote reliable checkpoints
 
 
 def test_bfs_and_lpa_checkpoint_dir_roundtrip(
-        spark_session, tmp_path):
-    import os
-
+        spark_session, request):
     from ons_utils_spark.operators.graph import (
         bfs_levels, label_propagation, triangle_count)
     edges = spark_session.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], 'src long, dst long')
     srcs = spark_session.createDataFrame([(1,)], 'node long')
-    ck = str(tmp_path / 'g_ckpt')
+    default_lpa = {r['node']: r['label'] for r in label_propagation(
+        edges, iterations=3).collect()}
+    ck = request.getfixturevalue('session_checkpoint_dir')
     bfs = {(r['node'], r['hop']) for r in bfs_levels(
-        edges, srcs, max_hops=4, checkpoint_dir=ck).collect()}
+        edges, srcs, max_hops=4).collect()}
     assert bfs == {(1, 0), (2, 1), (3, 2)}
     lpa = {r['node']: r['label'] for r in label_propagation(
-        edges, iterations=3, checkpoint_dir=ck).collect()}
-    assert lpa == {r['node']: r['label'] for r in label_propagation(
         edges, iterations=3).collect()}
+    assert lpa == default_lpa
     tri = triangle_count(
         spark_session.createDataFrame(
             [(1, 2), (2, 3), (3, 1)], 'src long, dst long'),
-        checkpoint_dir=ck).collect()[0]
+    ).collect()[0]
     assert tri['n_triangles'] == 1
-    assert os.listdir(ck)
+    assert list(ck.glob('*/rdd-*'))
 
 
 class TestHits:

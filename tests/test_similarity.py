@@ -630,6 +630,22 @@ class TestBitextMine:
         assert exchanges['tgt'] >= 1
         assert exchanges['src'] <= exchanges['tgt']
 
+    def test_checkpoint_dir_roundtrip(self, spark_session, request):
+        """A session checkpoint directory turns the candidate-set cut
+        into a reliable checkpoint on that storage, same answer."""
+        from ons_utils_spark.operators.similarity import bitext_mine
+        s, t = self._frames(spark_session)
+
+        def mine():
+            return sorted(
+                (r['src_id'], r['tgt_id'], round(r['margin'], 12))
+                for r in bitext_mine(s, t, k=2, threshold=1.0).collect())
+
+        default = mine()
+        ck = request.getfixturevalue('session_checkpoint_dir')
+        assert mine() == default and default
+        assert list(ck.glob('*/rdd-*'))  # really wrote there
+
     def test_candidates_path_agrees_with_cross(self, spark_session):
         from ons_utils_spark.operators.similarity import bitext_mine
         s, t = self._frames(spark_session)

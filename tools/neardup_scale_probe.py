@@ -73,19 +73,19 @@ def main() -> None:
     # orthogonal — the hard case for false candidates) and on the
     # replicated corpus (clone mega-families — the star-cap case).
     from ons_utils_spark.operators.dedup import (  # noqa: E402
-        _bucket_pair_join, _reliable_checkpoint)
+        _bucket_pair_join)
+    from ons_utils_spark.operators.lineage import cut  # noqa: E402
     from ons_utils_spark.operators.similarity import (  # noqa: E402
         hyperplane_band_udf)
 
     def _lsh_candidates(df, cap):
         dim = len(df.select('embedding').first()['embedding'])
         sig = hyperplane_band_udf(dim)
-        banded = _reliable_checkpoint(
+        banded = cut(
             df.select(F.col('vec_id').alias('__id'),
                       sig(F.col('embedding')).alias('__keys'))
             .select('__id',
-                    F.posexplode('__keys').alias('band', 'bucket')),
-            None)
+                    F.posexplode('__keys').alias('band', 'bucket')))
         return _bucket_pair_join(
             banded, ('band', 'bucket'), max_bucket_size=cap,
             eager_census=True).dropDuplicates(['id_a', 'id_b'])
