@@ -2669,6 +2669,20 @@ def line_dedup(
     )
     if exempt is not None:
         kept = kept.unionByName(exempt)
+    return _reassemble_lines(df, kept, text_col, delimiter)
+
+
+def _reassemble_lines(df: SparkDF, kept: SparkDF, text_col: str,
+                      delimiter: str) -> SparkDF:
+    """Rebuild ``df``'s ``text_col`` from the ``(__pos, __line)``
+    rows in ``kept`` (which carries every other column of ``df``):
+    position-sorted ``collect_list`` + ``array_join``.  A row whose
+    every line was dropped comes back with empty text.  The join back
+    onto ``df`` is null-safe on every non-text column: a plain
+    equi-join never matches a NULL, so a NULL anywhere in the row
+    would blank its text."""
+    other_cols = [c for c in df.columns if c != text_col]
+    keys = [f'__k{i}' for i in range(len(other_cols))]
     rebuilt = (
         kept.groupBy(*other_cols)
         .agg(
@@ -2682,11 +2696,15 @@ def line_dedup(
                 delimiter,
             ).alias(text_col)
         )
+        .select(*[F.col(c).alias(k) for c, k in zip(other_cols, keys)],
+                text_col)
     )
-    # docs that lost every line reappear with empty text
     base = df.select(*other_cols)
     return (
-        base.join(rebuilt, on=other_cols, how='left')
+        base.join(rebuilt,
+                  [base[c].eqNullSafe(rebuilt[k])
+                   for c, k in zip(other_cols, keys)], 'left')
+        .drop(*keys)
         .fillna({text_col: ''})
         .select(*df.columns)
     )

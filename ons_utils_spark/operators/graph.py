@@ -86,15 +86,15 @@ def label_propagation(
     verified on bridged-clique fixtures.  The classic random-tie
     variant is irreproducible across partitionings, useless for
     auditing.  Fixed ``iterations`` synchronous rounds: per round
-    one edge join + one (node, label) count + one
-    max-count/min-label argmax, state O(nodes), per-round lineage
-    cuts.  While the node count is at most ``broadcast_state_nodes``
-    a round is TWO shuffles (the count and the argmax) plus a
-    broadcast of the node-sized label state; above it the join falls
-    back to sort-merge, which also shuffles the edge frame and the
-    labels: FOUR shuffles per round.  All integer arithmetic, so a
-    recursive-CTE oracle replays every round exactly.  Isolated
-    nodes (no edges) keep their own label.
+    one edge join + one per-node deterministic ``mode`` aggregation
+    (most frequent label, ties to the smallest), state O(nodes),
+    per-round lineage cuts.  While the node count is at most
+    ``broadcast_state_nodes`` a round is ONE shuffle (the
+    aggregation) plus a broadcast of the node-sized label state;
+    above it the join falls back to sort-merge, which also shuffles
+    the edge frame and the labels: THREE shuffles per round.  All
+    integer arithmetic, so a recursive-CTE oracle replays every
+    round exactly.  Isolated nodes (no edges) keep their own label.
     """
     # Per-round cuts are LAZY here (fixed-iteration loop, no
     # mid-loop actions): the final action materializes the whole
@@ -135,32 +135,19 @@ def label_propagation(
             sym.join(lb, sym['b'] == lb['node'])
             .select(sym['a'].alias('n'), 'label')
         )
-        counts = (
+        # deterministic mode = the most frequent label, ties to the
+        # smallest: LPA's rule in ONE aggregation (one shuffle).  The
+        # self-vote union guarantees every node appears (labels spans
+        # all nodes by induction), so the result covers the full node
+        # set — no nodes-frame left join per round.
+        labels = (
             votes.unionByName(
                 labels.select(F.col('node').alias('n'), 'label'))
-            .groupBy('n', 'label')
-            .agg(F.count(F.lit(1)).alias('c'))
-        )
-        # argmax in ONE aggregation: max over (count, ~label) picks
-        # the max count and, among ties, the smallest label —
-        # bitwise NOT is strictly decreasing over the full long
-        # range (no negation overflow at LONG_MIN).  Replaces the
-        # max-over-window + filter + min-agg chain (one extra
-        # shuffle + sort per round).
-        best = (
-            counts.groupBy('n')
-            .agg(F.max(F.struct(
-                F.col('c').alias('c'),
-                F.bitwise_not(F.col('label')).alias('nl')))
-                .alias('__m'))
-            .select('n', F.bitwise_not(F.col('__m.nl')).alias('label'))
-        )
-        # the self-vote union guarantees every node appears in
-        # `counts` (labels spans all nodes by induction), so `best`
-        # covers the full node set — the nodes-frame left join (one
-        # shuffle join per round) is redundant and skipped.
-        labels = best.select(F.col('n').alias('node'), 'label') \
+            .groupBy('n')
+            .agg(F.mode('label', deterministic=True).alias('label'))
+            .select(F.col('n').alias('node'), 'label')
             .transform(cut, eager=False)
+        )
     return labels
 
 

@@ -49,7 +49,8 @@ Scale notes:
   append the docs a second time.  The store read for overlap
   detection always excludes the current batch's own rows, so a
   crashed attempt's rows can never make a batch drop against
-  itself.
+  itself.  The protocol lives in :func:`_exactly_once_sink`; each
+  operator supplies only its filter step.
 """
 from __future__ import annotations
 
@@ -58,9 +59,9 @@ import os
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from ..operators.dedup import (
+    _reassemble_lines,
     embedding_band_index,
     embedding_index_probe,
     embedding_near_duplicates,
@@ -206,17 +207,88 @@ def _marker_row(spark, schema_fields, batch_id: int, kind: str):
     """One all-NULL-key sentinel row: ``kind`` is 'begin' (written
     FIRST, before any other append) or 'commit' (written LAST).
     NULL keys keep sentinels invisible to every overlap equi-join.
+    The row is built on the JVM; no Python row crosses py4j.
     """
-    fields = [f for f in schema_fields
-              if f.name not in ('_batch_id', '_marker')]
-    marker = spark.createDataFrame(
-        [tuple(None for _ in fields)],
-        schema=StructType([
-            StructField(f.name, f.dataType, True) for f in fields
-        ]),
-    )
-    return (marker.withColumn('_batch_id', F.lit(batch_id))
-            .withColumn('_marker', F.lit(kind)))
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in schema_fields
+          if f.name not in ('_batch_id', '_marker')],
+        F.lit(batch_id).alias('_batch_id'),
+        F.lit(kind).alias('_marker'))
+
+
+def _exactly_once_sink(stream: SparkDF, filter_step, out_dir: str,
+                       store_dir: str, checkpoint: str, id_col: str,
+                       bucket_cols, available_now: bool):
+    """Start the ``foreachBatch`` sink that runs the module
+    docstring's exactly-once protocol around one operator's
+    ``filter_step(batch_df, store, keep) -> (docs_out, store_rows)``.
+
+    Per non-empty micro-batch: a committed batch is skipped; otherwise
+    ``filter_step`` gets the store with the batch's own rows excluded
+    (``None`` before the first commit) and returns lazy frames of the
+    accepted docs and of the probe-key rows to store (bucketed on
+    ``bucket_cols``); then the four appends run in protocol order.
+    ``keep(df)`` persists ``df`` for the rest of the batch; every kept
+    frame is released in one ``finally``, also when ``filter_step``
+    or an append raises.
+    """
+    spark = stream.sparkSession
+
+    def process(batch_df: SparkDF, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        store, layout = None, 'bucketed'
+        partial, data_done = False, False
+        if _store_exists(store_dir):
+            store = spark.read.parquet(store_dir)
+            committed, partial, data_done = _batch_state(
+                store, batch_id)
+            if committed:
+                return  # replayed batch — already fully committed
+            layout = _store_layout(store_dir, store.columns)
+            # overlap detection must never see THIS batch's own rows
+            # (a crashed attempt's rows would make the batch drop
+            # against itself)
+            store = store.filter(F.col('_batch_id') != batch_id)
+        kept = []
+
+        def keep(df: SparkDF) -> SparkDF:
+            kept.append(df.persist())
+            return df
+
+        try:
+            docs_out, store_rows = filter_step(batch_df, store, keep)
+            fields = store_rows.schema.fields
+            # begin FIRST: it is the only crash evidence a batch with
+            # zero store rows leaves
+            if not partial:
+                _append_store(
+                    _marker_row(spark, fields, batch_id, 'begin'),
+                    store_dir, layout, bucket_cols)
+            if not data_done:
+                _append_store(
+                    store_rows.withColumn('_batch_id', F.lit(batch_id))
+                    .withColumn('_marker', F.lit(None).cast('string')),
+                    store_dir, layout, bucket_cols)
+            if partial and _store_exists(out_dir):
+                # rare replay path: drop ids the crashed attempt
+                # already appended (the survivor set recomputes
+                # identically)
+                docs_out = docs_out.join(
+                    spark.read.parquet(out_dir).select(id_col),
+                    on=id_col, how='left_anti')
+            docs_out.write.mode('append').parquet(out_dir)
+            _append_store(
+                _marker_row(spark, fields, batch_id, 'commit'),
+                store_dir, layout, bucket_cols)
+        finally:
+            for df in kept:
+                df.unpersist()
+
+    return foreach_batch_sink(
+        stream, process, checkpoint,
+        output_mode='append', available_now=available_now)
 
 
 def incremental_exact_dedup(
@@ -240,12 +312,8 @@ def incremental_exact_dedup(
          (earlier batches win — arrival order; the join touches the
          batch's keys only, and the store read prunes by
          ``_batch_id`` directories),
-      3. commit in FOUR atomic appends — begin sentinel, ``(key,
-         id)`` store rows tagged ``_batch_id``, accepted docs, then
-         the commit marker LAST — the exactly-once protocol of the
-         module docstring (a replayed committed batch skips; a
-         mid-commit crash reconciles the docs append against
-         ``out_dir`` ids).
+      3. commit ``(key, id)`` store rows and the accepted docs under
+         the exactly-once protocol of the module docstring.
 
     Because the drop rule is exact-key-equality, the accepted set is
     globally "the minimum id per key" whenever batches arrive in id
@@ -254,20 +322,7 @@ def incremental_exact_dedup(
 
     Returns the started streaming query.
     """
-    spark = docs_stream.sparkSession
-
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         # 1. in-batch: lowest id per key
         clean = (
             batch_df.withColumn(
@@ -284,37 +339,17 @@ def incremental_exact_dedup(
         # unique by construction (a key is stored only the first
         # time it is accepted) — a distinct here is a wasted full
         # shuffle of the store every micro-batch (r10 rule).
-        if have_store:
+        if store is not None:
             clean = clean.join(
                 _prune_store_buckets(store, clean.select(key_col),
                                      (key_col,))
                 .select(key_col).filter(F.col(key_col).isNotNull()),
                 on=key_col, how='left_anti')
-        keys = clean.select(key_col, F.col(id_col).alias('id'))
-        layout = (_store_layout(store_dir, store.columns)
-                  if have_store else 'bucketed')
-        if not partial:
-            _append_store(
-                _marker_row(spark, keys.schema.fields, batch_id,
-                            'begin'), store_dir, layout, (key_col,))
-        if not data_done:
-            _append_store(
-                keys.withColumn('_batch_id', F.lit(batch_id))
-                .withColumn('_marker', F.lit(None).cast('string')),
-                store_dir, layout, (key_col,))
-        docs_out = clean
-        if partial and _store_exists(out_dir):
-            docs_out = docs_out.join(
-                spark.read.parquet(out_dir).select(id_col),
-                on=id_col, how='left_anti')
-        docs_out.write.mode('append').parquet(out_dir)
-        _append_store(
-            _marker_row(spark, keys.schema.fields, batch_id,
-                        'commit'), store_dir, layout, (key_col,))
+        return clean, clean.select(key_col, F.col(id_col).alias('id'))
 
-    return foreach_batch_sink(
-        docs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        docs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, (key_col,), available_now)
 
 
 def incremental_winnow_dedup(
@@ -336,37 +371,12 @@ def incremental_winnow_dedup(
       2. drop batch docs sharing >= ``min_shared`` fingerprints with
          the store (earlier batches win — arrival order, the natural
          streaming tie-break),
-      3. commit in FOUR atomic appends: a ``begin`` sentinel row
-         FIRST, then fingerprints (tagged ``_batch_id``) to
-         ``store_dir``, survivors to ``out_dir``, and one ``commit``
-         marker row LAST — a commit marker means the batch fully
-         landed, and the begin sentinel leaves crash evidence even
-         for zero-fingerprint batches.  Replays of a committed batch
-         skip; replays of a mid-commit crash recompute the identical
-         survivor set, skip the already-landed store append,
-         reconcile the docs append against ``out_dir`` ids, and
-         write the commit marker (effective exactly-once — see the
-         module docstring).
+      3. commit the survivors' fingerprints and the survivors under
+         the exactly-once protocol of the module docstring.
 
     Returns the started streaming query.
     """
-    spark = docs_stream.sparkSession
-
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            # overlap detection must never see THIS batch's own rows
-            # (a crashed attempt's fps would make the batch drop
-            # against itself)
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         # 1. in-batch dedup
         losers = (
             winnow_dup_pairs(batch_df, id_col, text_col,
@@ -374,77 +384,38 @@ def incremental_winnow_dedup(
             .select(F.col('id_b').alias(id_col)).distinct()
         )
         clean = batch_df.join(losers, on=id_col, how='left_anti')
-        # Fingerprint ONCE, persisted: the store-prune bucket list
+        # Fingerprint ONCE, kept: the store-prune bucket list
         # (a <=_STORE_BUCKETS collect — the LINEAR cache-populate
         # action), the overlap join, and the store append all read
         # the same batch-sized frame.
-        fps_raw = winnow_fingerprints(
-            clean, id_col, text_col, k=k, w=w).persist()
-        fps = fps_raw  # rebound below after the drop anti-join
-        try:
-            # 2. drop docs overlapping the store (the store read is
-            # partition-pruned to the batch's fp buckets — equal fps
-            # hash to equal buckets, so the dropped directories
-            # cannot hold a matching fingerprint)
-            if have_store:
-                # pairwise overlap: >= min_shared fps with ONE
-                # stored doc (pooling fps across the whole store
-                # would over-drop)
-                dup_ids = (
-                    fps.join(
-                        _prune_store_buckets(store, fps, ('fp',))
-                        .select('fp',
-                                F.col('id').alias('__store_doc')),
-                        on='fp')
-                    .groupBy('id', '__store_doc')
-                    .agg(F.count(F.lit(1)).alias('n_shared'))
-                    .filter(F.col('n_shared') >= min_shared)
-                    .select('id').distinct()
-                )
-                clean = clean.join(
-                    dup_ids.withColumnRenamed('id', id_col),
-                    on=id_col, how='left_anti')
-                fps = fps.join(dup_ids, on='id', how='left_anti')
-            # 3. four-step commit (each append is atomic under
-            # Spark's output-commit protocol; the splits bound every
-            # crash window — see the module docstring).  The begin
-            # sentinel is written FIRST and unconditionally covers
-            # zero-fingerprint batches: without it, a crash between
-            # the docs append and the commit marker would leave no
-            # store evidence at all (n=0 data rows) and the replay
-            # would re-append the docs.  Null fp never matches the
-            # store equi-join above, so sentinels are invisible to
-            # overlap detection.
-            layout = (_store_layout(store_dir, store.columns)
-                      if have_store else 'bucketed')
-            if not partial:
-                _append_store(
-                    _marker_row(spark, fps.schema.fields, batch_id,
-                                'begin'), store_dir, layout, ('fp',))
-            if not data_done:
-                _append_store(
-                    fps.withColumn('_batch_id', F.lit(batch_id))
-                    .withColumn('_marker',
-                                F.lit(None).cast('string')),
-                    store_dir, layout, ('fp',))
-            docs_out = clean
-            if partial and _store_exists(out_dir):
-                # rare replay path: drop ids the crashed attempt
-                # already appended (the survivor set recomputes
-                # identically)
-                docs_out = docs_out.join(
-                    spark.read.parquet(out_dir).select(id_col),
-                    on=id_col, how='left_anti')
-            docs_out.write.mode('append').parquet(out_dir)
-            _append_store(
-                _marker_row(spark, fps.schema.fields, batch_id,
-                            'commit'), store_dir, layout, ('fp',))
-        finally:
-            fps_raw.unpersist()
+        fps = keep(winnow_fingerprints(clean, id_col, text_col,
+                                       k=k, w=w))
+        # 2. drop docs overlapping the store (the store read is
+        # partition-pruned to the batch's fp buckets — equal fps
+        # hash to equal buckets, so the dropped directories cannot
+        # hold a matching fingerprint)
+        if store is not None:
+            # pairwise overlap: >= min_shared fps with ONE stored doc
+            # (pooling fps across the whole store would over-drop)
+            dup_ids = (
+                fps.join(
+                    _prune_store_buckets(store, fps, ('fp',))
+                    .select('fp', F.col('id').alias('__store_doc')),
+                    on='fp')
+                .groupBy('id', '__store_doc')
+                .agg(F.count(F.lit(1)).alias('n_shared'))
+                .filter(F.col('n_shared') >= min_shared)
+                .select('id').distinct()
+            )
+            clean = clean.join(
+                dup_ids.withColumnRenamed('id', id_col),
+                on=id_col, how='left_anti')
+            fps = fps.join(dup_ids, on='id', how='left_anti')
+        return clean, fps
 
-    return foreach_batch_sink(
-        docs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        docs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, ('fp',), available_now)
 
 
 def incremental_minhash_dedup(
@@ -482,9 +453,8 @@ def incremental_minhash_dedup(
          accepted docs that actually collided are re-shingled), and
          drop batch docs verifying >= ``jaccard_threshold``
          (earlier batches win — arrival order),
-      3. the four-append exactly-once commit of the module
-         docstring (begin sentinel, band rows tagged ``_batch_id``,
-         accepted docs, commit marker LAST).
+      3. commit the survivors' band rows and the survivors under the
+         exactly-once protocol of the module docstring.
 
     LSH parameters (``num_hashes``/``bands``/``shingle_n``/
     ``shingles``) are baked into the stored bucket keys: every run
@@ -512,103 +482,55 @@ def incremental_minhash_dedup(
                 _shingler(shingles)(text_col, shingle_n))
             .alias('__hs'))
 
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            # the probe must never see THIS batch's own band rows
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         # 1. in-batch near-dedup (full LSH + verify + greedy)
         clean = minhash_dedup(
             batch_df, id_col, text_col, num_hashes, bands,
             shingle_n, jaccard_threshold, shingles,
             max_bucket_size=max_bucket_size)
         # band ONCE; three consumers (bucket list, probe, append)
-        new_banded = minhash_band_index(
+        band_rows = new_banded = keep(minhash_band_index(
             clean, id_col, text_col, num_hashes, bands, shingle_n,
-            shingles=shingles).persist()
-        try:
-            dup_ids = None
-            # 2. drop batch docs near-duplicating anything accepted
-            if have_store:
-                index = (
-                    _prune_store_buckets(store, new_banded,
-                                         ('band', 'bucket'))
-                    .select(id_col, 'band', 'bucket')
-                    .filter(F.col('band').isNotNull())  # skip markers
-                )
-                cands = minhash_index_probe(
-                    index, clean, id_col, text_col, num_hashes,
-                    bands, shingle_n, shingles,
-                    max_bucket_size=max_bucket_size,
-                    prebanded=new_banded)
-                if _store_exists(out_dir):
-                    # candidate-bounded verify: re-shingle only the
-                    # accepted docs that actually collided (left-semi
-                    # — duplicate-insensitive, no distinct)
-                    acc_hit = spark.read.parquet(out_dir).join(
-                        cands.select(
-                            F.col('index_id').alias(id_col)),
-                        on=id_col, how='left_semi')
-                    hashed = _hashed(clean).unionByName(
-                        _hashed(acc_hit))
-                    verified = verify_jaccard_hashed(
-                        cands.select(
-                            F.col('new_id').alias('id_a'),
-                            F.col('index_id').alias('id_b')),
-                        hashed, jaccard_threshold)
-                    # anti-joins are duplicate-insensitive: no
-                    # distinct on the drop list (r10 rule)
-                    dup_ids = verified.select(
-                        F.col('id_a').alias(id_col))
-                    clean = clean.join(dup_ids, on=id_col,
-                                       how='left_anti')
-            # 3. four-step commit (module docstring).  Banding is
-            # per-row deterministic: survivors' band rows are the
-            # pre-drop banding minus the dropped ids.
-            band_rows = new_banded
-            if dup_ids is not None:
+            shingles=shingles))
+        # 2. drop batch docs near-duplicating anything accepted
+        if store is not None:
+            index = (
+                _prune_store_buckets(store, new_banded,
+                                     ('band', 'bucket'))
+                .select(id_col, 'band', 'bucket')
+                .filter(F.col('band').isNotNull())  # skip markers
+            )
+            cands = minhash_index_probe(
+                index, clean, id_col, text_col, num_hashes,
+                bands, shingle_n, shingles,
+                max_bucket_size=max_bucket_size,
+                prebanded=new_banded)
+            if _store_exists(out_dir):
+                # candidate-bounded verify: re-shingle only the
+                # accepted docs that actually collided (left-semi —
+                # duplicate-insensitive, no distinct)
+                acc_hit = spark.read.parquet(out_dir).join(
+                    cands.select(F.col('index_id').alias(id_col)),
+                    on=id_col, how='left_semi')
+                hashed = _hashed(clean).unionByName(_hashed(acc_hit))
+                verified = verify_jaccard_hashed(
+                    cands.select(
+                        F.col('new_id').alias('id_a'),
+                        F.col('index_id').alias('id_b')),
+                    hashed, jaccard_threshold)
+                # anti-joins are duplicate-insensitive: no distinct
+                # on the drop list (r10 rule)
+                dup_ids = verified.select(F.col('id_a').alias(id_col))
+                clean = clean.join(dup_ids, on=id_col, how='left_anti')
+                # banding is per-row deterministic: survivors' band
+                # rows are the pre-drop banding minus the dropped ids
                 band_rows = new_banded.join(
                     dup_ids, on=id_col, how='left_anti')
-            layout = (_store_layout(store_dir, store.columns)
-                      if have_store else 'bucketed')
-            if not partial:
-                _append_store(
-                    _marker_row(spark, band_rows.schema.fields,
-                                batch_id, 'begin'),
-                    store_dir, layout, ('band', 'bucket'))
-            if not data_done:
-                _append_store(
-                    band_rows.withColumn('_batch_id',
-                                         F.lit(batch_id))
-                    .withColumn('_marker',
-                                F.lit(None).cast('string')),
-                    store_dir, layout, ('band', 'bucket'))
-            docs_out = clean
-            if partial and _store_exists(out_dir):
-                # rare replay path: drop ids the crashed attempt
-                # already appended
-                docs_out = docs_out.join(
-                    spark.read.parquet(out_dir).select(id_col),
-                    on=id_col, how='left_anti')
-            docs_out.write.mode('append').parquet(out_dir)
-            _append_store(
-                _marker_row(spark, band_rows.schema.fields, batch_id,
-                            'commit'), store_dir, layout,
-                ('band', 'bucket'))
-        finally:
-            new_banded.unpersist()
+        return clean, band_rows
 
-    return foreach_batch_sink(
-        docs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        docs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, ('band', 'bucket'), available_now)
 
 
 def incremental_simhash_dedup(
@@ -643,9 +565,8 @@ def incremental_simhash_dedup(
          anything accepted.  The store carries each accepted doc's
          full signature, so verification needs NO text join — the
          probe is self-verifying, unlike the minhash sibling,
-      3. the four-append exactly-once commit of the module docstring
-         (begin sentinel, block rows tagged ``_batch_id``, accepted
-         docs, commit marker LAST).
+      3. commit the survivors' block rows and the survivors under
+         the exactly-once protocol of the module docstring.
 
     ``n_blocks`` is baked into the stored keys: every run against
     the same ``store_dir`` MUST reuse it.  The store holds block
@@ -661,87 +582,39 @@ def incremental_simhash_dedup(
         simhash_index_probe,
     )
 
-    spark = docs_stream.sparkSession
-
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            # the probe must never see THIS batch's own block rows
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         # 1. in-batch near-dedup (banding + Hamming verify + greedy)
         clean = simhash_dedup(
             batch_df, id_col, text_col, max_hamming=max_hamming,
             max_bucket_size=max_bucket_size)
         # sign ONCE; three consumers (bucket list, probe, append)
-        new_banded = simhash_block_index(
-            clean, id_col, text_col, n_blocks).persist()
-        try:
-            dup_ids = None
-            # 2. drop batch docs within max_hamming of anything
-            # accepted (self-verifying: the store carries full
-            # signatures)
-            if have_store:
-                index = (
-                    _prune_store_buckets(store, new_banded,
-                                         ('block', 'key'))
-                    .select(id_col, 'block', 'key', 'blocks')
-                    .filter(F.col('block').isNotNull())  # markers
-                )
-                cands = simhash_index_probe(
-                    index, clean, id_col, text_col, n_blocks,
-                    max_hamming, max_bucket_size=max_bucket_size,
-                    prebanded=new_banded)
-                # anti-joins are duplicate-insensitive: no distinct
-                dup_ids = cands.select(F.col('new_id').alias(id_col))
-                clean = clean.join(dup_ids, on=id_col,
-                                   how='left_anti')
-            # 3. four-step commit (module docstring).  Signing is
-            # per-row deterministic: survivors' block rows are the
-            # pre-drop signing minus the dropped ids.
-            band_rows = new_banded
-            if dup_ids is not None:
-                band_rows = new_banded.join(
-                    dup_ids, on=id_col, how='left_anti')
-            layout = (_store_layout(store_dir, store.columns)
-                      if have_store else 'bucketed')
-            if not partial:
-                _append_store(
-                    _marker_row(spark, band_rows.schema.fields,
-                                batch_id, 'begin'),
-                    store_dir, layout, ('block', 'key'))
-            if not data_done:
-                _append_store(
-                    band_rows.withColumn('_batch_id',
-                                         F.lit(batch_id))
-                    .withColumn('_marker',
-                                F.lit(None).cast('string')),
-                    store_dir, layout, ('block', 'key'))
-            docs_out = clean
-            if partial and _store_exists(out_dir):
-                # rare replay path: drop ids the crashed attempt
-                # already appended
-                docs_out = docs_out.join(
-                    spark.read.parquet(out_dir).select(id_col),
-                    on=id_col, how='left_anti')
-            docs_out.write.mode('append').parquet(out_dir)
-            _append_store(
-                _marker_row(spark, band_rows.schema.fields, batch_id,
-                            'commit'), store_dir, layout,
-                ('block', 'key'))
-        finally:
-            new_banded.unpersist()
+        band_rows = new_banded = keep(simhash_block_index(
+            clean, id_col, text_col, n_blocks))
+        # 2. drop batch docs within max_hamming of anything accepted
+        # (self-verifying: the store carries full signatures)
+        if store is not None:
+            index = (
+                _prune_store_buckets(store, new_banded,
+                                     ('block', 'key'))
+                .select(id_col, 'block', 'key', 'blocks')
+                .filter(F.col('block').isNotNull())  # markers
+            )
+            cands = simhash_index_probe(
+                index, clean, id_col, text_col, n_blocks,
+                max_hamming, max_bucket_size=max_bucket_size,
+                prebanded=new_banded)
+            # anti-joins are duplicate-insensitive: no distinct
+            dup_ids = cands.select(F.col('new_id').alias(id_col))
+            clean = clean.join(dup_ids, on=id_col, how='left_anti')
+            # signing is per-row deterministic: survivors' block rows
+            # are the pre-drop signing minus the dropped ids
+            band_rows = new_banded.join(
+                dup_ids, on=id_col, how='left_anti')
+        return clean, band_rows
 
-    return foreach_batch_sink(
-        docs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        docs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, ('block', 'key'), available_now)
 
 
 def incremental_embedding_dedup(
@@ -775,24 +648,14 @@ def incremental_embedding_dedup(
          accepted vectors in ``out_dir``, and drop batch vectors with
          cosine >= ``threshold`` to anything indexed (earlier batches
          win — arrival order, the natural streaming tie-break),
-      3. append survivors to ``out_dir`` and their band rows (with
-         ``_batch_id``) to ``store_dir``.
+      3. commit the survivors' band rows and the survivors under the
+         exactly-once protocol of the module docstring (a batch of
+         all-NULL embeddings bands to zero rows; the begin sentinel
+         is its crash evidence).
 
     LSH parameters (``bands``/``planes_per_band``/``seed``/``dim``)
     are baked into the stored bucket keys: every run against the same
     ``store_dir`` MUST use the same values or probes silently miss.
-
-    Idempotence mirrors :func:`incremental_winnow_dedup` (four
-    atomic appends — a ``begin`` sentinel FIRST, band rows, docs,
-    then one ``commit`` marker row LAST; a batch of all-NULL
-    embeddings bands to zero rows, so crash detection cannot rely
-    on band rows — the begin sentinel covers that case).  Replays of
-    a committed batch skip; a mid-commit crash replays by
-    recomputing the identical survivor set, skipping the
-    already-written band rows, reconciling the docs append against
-    ``out_dir`` ids, and writing the commit marker — effective
-    exactly-once, no duplicate accepted rows (see the module
-    docstring).
 
     Scale notes: the store holds ``bands`` rows per accepted vector,
     hive-partitioned by ``(_batch_id, _bucket)`` where ``_bucket``
@@ -807,21 +670,7 @@ def incremental_embedding_dedup(
     """
     spark = vecs_stream.sparkSession
 
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            # the probe must never see THIS batch's own band rows (a
-            # crashed attempt's rows would candidate the batch
-            # against itself)
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         # 1. in-batch dedup (exact precision at any size: 'auto'
         # switches to LSH-then-verify past max_broadcast_rows)
         losers = (
@@ -836,90 +685,50 @@ def incremental_embedding_dedup(
         # Band the surviving batch ONCE — the same rows serve the
         # store-prune bucket list, the index probe (via prebanded),
         # and the final store append (a drop-anti-join instead of a
-        # second GEMM).  Persisted: three consumers, and the first
-        # (the <=_STORE_BUCKETS bucket-list collect) is a LINEAR
-        # action that populates the cache race-free.
-        new_banded = embedding_band_index(
+        # second GEMM).  Kept: three consumers, and the first (the
+        # <=_STORE_BUCKETS bucket-list collect) is a LINEAR action
+        # that populates the cache race-free.
+        band_rows = new_banded = keep(embedding_band_index(
             clean, id_col, vec_col, dim=dim, bands=bands,
-            planes_per_band=planes_per_band, seed=seed).persist()
-        try:
-            dup_ids = None
-            # 2. drop vectors near-duplicating anything accepted (the
-            # store read is partition-pruned to the batch's (band,
-            # bucket) buckets — equal band keys hash equal)
-            if have_store:
-                index = (
-                    _prune_store_buckets(store, new_banded,
-                                         ('band', 'bucket'))
-                    .select(id_col, 'band', 'bucket')
-                    .filter(F.col('band').isNotNull())  # skip markers
-                )
-                cands = embedding_index_probe(
-                    index, clean, id_col, vec_col, dim=dim,
-                    bands=bands, planes_per_band=planes_per_band,
-                    seed=seed, max_bucket_size=max_bucket_size,
-                    prebanded=new_banded)
-                vectors = clean.select(id_col, vec_col)
-                if _store_exists(out_dir):
-                    vectors = vectors.unionByName(
-                        spark.read.parquet(out_dir)
-                        .select(id_col, vec_col))
-                dup_ids = (
-                    score_pairs_cosine(
-                        cands, vectors, id_col, vec_col,
-                        id_a='new_id', id_b='index_id')
-                    .filter(F.col('cosine') >= threshold)
-                    .select(F.col('new_id').alias(id_col)).distinct()
-                )
-                clean = clean.join(dup_ids, on=id_col,
-                                   how='left_anti')
-            # 3. four-step commit (begin sentinel FIRST, band rows,
-            # docs, commit marker LAST — each append atomic; see the
-            # module docstring).  The begin sentinel covers an
-            # all-NULL-embedding batch (zero band rows): without it a
-            # crash between the docs append and the commit marker
-            # would leave no store evidence and the replay would
-            # re-append the docs.  Null band rows are filtered out of
-            # every probe, so sentinels are invisible to overlap
-            # detection.  Banding is per-row deterministic, so the
-            # survivors' band rows are the pre-drop banding minus the
-            # dropped ids — no second GEMM.
-            band_rows = new_banded
-            if dup_ids is not None:
-                band_rows = new_banded.join(
-                    dup_ids, on=id_col, how='left_anti')
-            layout = (_store_layout(store_dir, store.columns)
-                      if have_store else 'bucketed')
-            if not partial:
-                _append_store(
-                    _marker_row(spark, band_rows.schema.fields,
-                                batch_id, 'begin'),
-                    store_dir, layout, ('band', 'bucket'))
-            if not data_done:
-                _append_store(
-                    band_rows.withColumn('_batch_id', F.lit(batch_id))
-                    .withColumn('_marker',
-                                F.lit(None).cast('string')),
-                    store_dir, layout, ('band', 'bucket'))
-            docs_out = clean
-            if partial and _store_exists(out_dir):
-                # rare replay path: drop ids the crashed attempt
-                # already appended (the survivor set recomputes
-                # identically)
-                docs_out = docs_out.join(
-                    spark.read.parquet(out_dir).select(id_col),
-                    on=id_col, how='left_anti')
-            docs_out.write.mode('append').parquet(out_dir)
-            _append_store(
-                _marker_row(spark, band_rows.schema.fields, batch_id,
-                            'commit'), store_dir, layout,
-                ('band', 'bucket'))
-        finally:
-            new_banded.unpersist()
+            planes_per_band=planes_per_band, seed=seed))
+        # 2. drop vectors near-duplicating anything accepted (the
+        # store read is partition-pruned to the batch's (band,
+        # bucket) buckets — equal band keys hash equal)
+        if store is not None:
+            index = (
+                _prune_store_buckets(store, new_banded,
+                                     ('band', 'bucket'))
+                .select(id_col, 'band', 'bucket')
+                .filter(F.col('band').isNotNull())  # skip markers
+            )
+            cands = embedding_index_probe(
+                index, clean, id_col, vec_col, dim=dim,
+                bands=bands, planes_per_band=planes_per_band,
+                seed=seed, max_bucket_size=max_bucket_size,
+                prebanded=new_banded)
+            vectors = clean.select(id_col, vec_col)
+            if _store_exists(out_dir):
+                vectors = vectors.unionByName(
+                    spark.read.parquet(out_dir)
+                    .select(id_col, vec_col))
+            dup_ids = (
+                score_pairs_cosine(
+                    cands, vectors, id_col, vec_col,
+                    id_a='new_id', id_b='index_id')
+                .filter(F.col('cosine') >= threshold)
+                .select(F.col('new_id').alias(id_col)).distinct()
+            )
+            clean = clean.join(dup_ids, on=id_col, how='left_anti')
+            # banding is per-row deterministic: survivors' band rows
+            # are the pre-drop banding minus the dropped ids — no
+            # second GEMM
+            band_rows = new_banded.join(
+                dup_ids, on=id_col, how='left_anti')
+        return clean, band_rows
 
-    return foreach_batch_sink(
-        vecs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        vecs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, ('band', 'bucket'), available_now)
 
 
 def compact_incremental_store(
@@ -1034,10 +843,9 @@ def incremental_line_dedup(
       4. rebuild each doc (position-sorted ``collect_list``; a doc
          whose every line was dropped comes back with empty text —
          row count is preserved),
-      5. commit in the module's FOUR atomic appends: begin sentinel,
-         ``(key, id)`` store rows, rebuilt docs, commit marker LAST
-         (idempotent replay; mid-commit crashes reconcile the docs
-         append against ``out_dir`` ids).
+      5. commit the new lines' ``(key, id)`` store rows and the
+         rebuilt docs under the exactly-once protocol of the module
+         docstring.
 
     Batch-parity contract: under id-ordered arrival the rewritten
     corpus is EXACTLY what batch ``line_dedup`` produces on the full
@@ -1048,21 +856,7 @@ def incremental_line_dedup(
 
     Returns the started streaming query.
     """
-    spark = docs_stream.sparkSession
-
-    def process(batch_df: SparkDF, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        have_store = _store_exists(store_dir)
-        partial, data_done = False, False
-        store = None
-        if have_store:
-            store = spark.read.parquet(store_dir)
-            committed, partial, data_done = _batch_state(
-                store, batch_id)
-            if committed:
-                return  # replayed batch — already fully committed
-            store = store.filter(F.col('_batch_id') != batch_id)
+    def filter_step(batch_df: SparkDF, store, keep):
         other_cols = [c for c in batch_df.columns if c != text_col]
         lines = batch_df.select(
             *other_cols,
@@ -1082,56 +876,18 @@ def incremental_line_dedup(
             cand.withColumn('__rk', F.row_number().over(w))
             .filter(F.col('__rk') == 1).drop('__rk')
         )
-        if have_store:
+        if store is not None:
             cand = cand.join(
                 _prune_store_buckets(store, cand.select('key'),
                                      ('key',))
                 .select('key').filter(F.col('key').isNotNull()),
                 on='key', how='left_anti')
-        keys = cand.select('key', F.col(id_col).alias('id'))
-        layout = (_store_layout(store_dir, store.columns)
-                  if have_store else 'bucketed')
-        if not partial:
-            _append_store(
-                _marker_row(spark, keys.schema.fields, batch_id,
-                            'begin'), store_dir, layout, ('key',))
-        if not data_done:
-            _append_store(
-                keys.withColumn('_batch_id', F.lit(batch_id))
-                .withColumn('_marker', F.lit(None).cast('string')),
-                store_dir, layout, ('key',))
         kept = cand.drop('key')
         if exempt is not None:
             kept = kept.unionByName(exempt)
-        rebuilt = (
-            kept.groupBy(*other_cols)
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct(F.col('__pos').alias('p'),
-                                     F.col('__line').alias('l')))),
-                        lambda s: s['l'],
-                    ),
-                    delimiter,
-                ).alias(text_col)
-            )
-        )
-        base = batch_df.select(*other_cols)
-        docs_out = (
-            base.join(rebuilt, on=other_cols, how='left')
-            .fillna({text_col: ''})
-            .select(*batch_df.columns)
-        )
-        if partial and _store_exists(out_dir):
-            docs_out = docs_out.join(
-                spark.read.parquet(out_dir).select(id_col),
-                on=id_col, how='left_anti')
-        docs_out.write.mode('append').parquet(out_dir)
-        _append_store(
-            _marker_row(spark, keys.schema.fields, batch_id,
-                        'commit'), store_dir, layout, ('key',))
+        return (_reassemble_lines(batch_df, kept, text_col, delimiter),
+                cand.select('key', F.col(id_col).alias('id')))
 
-    return foreach_batch_sink(
-        docs_stream, process, checkpoint,
-        output_mode='append', available_now=available_now)
+    return _exactly_once_sink(
+        docs_stream, filter_step, out_dir, store_dir, checkpoint,
+        id_col, ('key',), available_now)

@@ -773,6 +773,20 @@ class TestLineDedup:
                for r in line_dedup(df, delimiter='|').collect()}
         assert out == {1: 'alpha beta|gamma delta', 2: 'epsilon'}
 
+    def test_null_in_other_column_keeps_text(self, spark_session):
+        """The rebuilt text joins back on every non-text column; a
+        NULL there must still match, or the doc loses every line."""
+        from ons_utils_spark.operators.dedup import line_dedup
+        df = spark_session.createDataFrame(
+            [(1, 'https://a.example', 'shared line\nown line one'),
+             (2, None, 'shared line\nown line two')],
+            'doc_id bigint, url string, text string')
+        out = {r['doc_id']: (r['url'], r['text'])
+               for r in line_dedup(df).collect()}
+        assert out == {
+            1: ('https://a.example', 'shared line\nown line one'),
+            2: (None, 'own line two')}
+
 
 class TestBandBlockValidation:
     """Lossy banding/blocking requests must fail loudly (r5 advice).

@@ -1091,6 +1091,38 @@ class TestIncrementalLineDedup:
         short_md5 = hashlib.md5(b'yes.').hexdigest()
         assert keys.filter(F.col('key') == short_md5).count() == 0
 
+    def test_null_in_other_column_keeps_text(
+            self, spark_session, tmp_path):
+        """The rebuilt text joins back on every non-text column; a
+        NULL there must still match, or the doc loses every line."""
+        from ons_utils_spark.streaming.incremental import (
+            incremental_line_dedup)
+
+        src = tmp_path / 'docs_src'
+        src.mkdir()
+        (src / '0.json').write_text(
+            '{"doc_id": 1, "url": "https://a.example", '
+            '"text": "shared line\\nown line one"}\n'
+            '{"doc_id": 2, "url": null, '
+            '"text": "shared line\\nown line two"}\n')
+        stream = (
+            spark_session.readStream
+            .schema('doc_id long, url string, text string')
+            .json(str(src))
+        )
+        incremental_line_dedup(
+            stream,
+            out_dir=str(tmp_path / 'accepted'),
+            store_dir=str(tmp_path / 'store'),
+            checkpoint=str(tmp_path / 'ckpt'),
+        ).awaitTermination(300)
+        got = {r['doc_id']: (r['url'], r['text'])
+               for r in spark_session.read.parquet(
+                   str(tmp_path / 'accepted')).collect()}
+        assert got == {
+            1: ('https://a.example', 'shared line\nown line one'),
+            2: (None, 'own line two')}
+
     def test_replay_is_idempotent(self, spark_session, tmp_path):
         from ons_utils_spark.streaming.incremental import _marker_row
 
@@ -1127,3 +1159,88 @@ class TestIncrementalLineDedup:
         assert sorted(got) == [1, 2, 10, 11]
         assert got[10] == 'fresh line in doc ten'
         assert got[11] == 'another fresh line'
+
+
+def _kept_rdds(spark) -> int:
+    """Persisted RDDs other than local checkpoints: what ``persist``
+    holds.  Operator lineage cuts (local checkpoints) are released by
+    garbage collection instead; tests/test_lineage.py covers them."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(not rdds.get(k).rdd().isLocallyCheckpointed()
+               for k in rdds.keySet().toArray())
+
+
+@pytest.mark.slow
+class TestPerBatchRelease:
+    """Every frame a filter step keeps is unpersisted when its batch
+    ends, without waiting for garbage collection — also when the
+    step raises."""
+
+    DOCS = [
+        (1, TestIncrementalMinhashDedup.BASE),
+        (2, TestIncrementalMinhashDedup.OTHER),
+        (10, TestIncrementalMinhashDedup.BASE + ' extra tail'),
+        (11, TestIncrementalMinhashDedup.OTHER + ' more'),
+    ]
+    VECS = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+            (10, [1.0, 0.01, 0.0, 0.0]), (11, [0.0, 0.0, 1.0, 0.0])]
+
+    @pytest.mark.parametrize('op, kw', [
+        ('incremental_exact_dedup', {'key_col': 'text'}),
+        ('incremental_winnow_dedup', {'min_shared': 5}),
+        ('incremental_minhash_dedup', {}),
+        ('incremental_simhash_dedup', {}),
+        ('incremental_embedding_dedup', {}),
+        ('incremental_line_dedup', {}),
+    ])
+    def test_operator_releases_kept_frames(
+            self, spark_session, tmp_path, op, kw):
+        from ons_utils_spark.streaming import incremental
+
+        start = _kept_rdds(spark_session)
+        if op == 'incremental_embedding_dedup':
+            src = _stage_vecs(tmp_path, self.VECS)
+            schema = 'vec_id long, embedding array<double>'
+        else:
+            src = _stage(tmp_path, self.DOCS, n_chunks=2)
+            schema = 'doc_id long, text string'
+        stream = (
+            spark_session.readStream.schema(schema)
+            .option('maxFilesPerTrigger', 1).json(str(src))
+        )
+        getattr(incremental, op)(
+            stream,
+            out_dir=str(tmp_path / 'accepted'),
+            store_dir=str(tmp_path / 'store'),
+            checkpoint=str(tmp_path / 'ckpt'),
+            **kw,
+        ).awaitTermination(300)
+        assert spark_session.read.parquet(
+            str(tmp_path / 'accepted')).count() >= 2
+        assert _kept_rdds(spark_session) == start
+
+    def test_raising_filter_step_releases_kept_frames(
+            self, spark_session, tmp_path):
+        from pyspark.errors import StreamingQueryException
+
+        from ons_utils_spark.streaming.incremental import (
+            _exactly_once_sink)
+
+        def filter_step(batch_df, store, keep):
+            keep(batch_df.select('doc_id')).count()
+            assert _kept_rdds(spark_session) > start
+            raise RuntimeError('filter step failed')
+
+        start = _kept_rdds(spark_session)
+        src = _stage(tmp_path, self.DOCS, n_chunks=1)
+        stream = spark_session.readStream.schema(
+            'doc_id long, text string').json(str(src))
+        q = _exactly_once_sink(
+            stream, filter_step, str(tmp_path / 'accepted'),
+            str(tmp_path / 'store'), str(tmp_path / 'ckpt'),
+            'doc_id', ('doc_id',), True)
+        with pytest.raises(StreamingQueryException,
+                           match='filter step failed'):
+            q.awaitTermination(300)
+        assert _kept_rdds(spark_session) == start
+        assert not (tmp_path / 'store').exists()

@@ -1,13 +1,17 @@
-"""Tests for operators.lineage: the one lineage-cut policy.
+"""Tests for how operators materialize and release frames.
 
 Operators never choose between local and reliable cuts themselves:
 :func:`lineage.cut` reads the session's checkpoint directory, and a
 source scan keeps every other operator and streaming module from
-cutting lineage on its own.
+cutting lineage on its own.  In ``streaming/incremental.py`` only the
+exactly-once protocol function touches the commit helpers and the
+cache.  Cut RDDs are released once their frames are garbage.
 """
 from __future__ import annotations
 
 import ast
+import gc
+import time
 from pathlib import Path
 
 import ons_utils_spark
@@ -16,34 +20,73 @@ from ons_utils_spark.operators.lineage import cut
 
 PACKAGE = Path(ons_utils_spark.__file__).parent
 CUT_CALLS = {'localCheckpoint', 'checkpoint', 'setCheckpointDir'}
+PROTOCOL_CALLS = {'_batch_state', '_marker_row', '_append_store',
+                  'isEmpty', 'persist', 'unpersist'}
 
 
-def _cut_call_sites() -> set:
-    """(module path, enclosing function) of every call to a
-    lineage-cut or checkpoint-directory method under ``operators/``
-    and ``streaming/``."""
+def _call_sites(paths, names) -> set:
+    """(module path, top-level definition) of every call to one of
+    ``names``, as a method or a bare function, in ``paths``."""
     sites = set()
-    for sub in ('operators', 'streaming'):
-        for path in sorted((PACKAGE / sub).rglob('*.py')):
-            tree = ast.parse(path.read_text())
-            parent = {child: node for node in ast.walk(tree)
-                      for child in ast.iter_child_nodes(node)}
-            for node in ast.walk(tree):
-                if not (isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr in CUT_CALLS):
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
                     continue
-                owner = node
-                while owner in parent and not isinstance(
-                        owner, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    owner = parent[owner]
-                name = getattr(owner, 'name', '<module>')
-                sites.add((path.relative_to(PACKAGE).as_posix(), name))
+                func = node.func
+                called = (func.attr if isinstance(func, ast.Attribute)
+                          else getattr(func, 'id', None))
+                if called in names:
+                    sites.add((path.relative_to(PACKAGE).as_posix(),
+                               getattr(top, 'name', '<module>')))
     return sites
 
 
 def test_only_cut_cuts_lineage():
-    assert _cut_call_sites() == {('operators/lineage.py', 'cut')}
+    paths = [path for sub in ('operators', 'streaming')
+             for path in sorted((PACKAGE / sub).rglob('*.py'))]
+    assert _call_sites(paths, CUT_CALLS) == {
+        ('operators/lineage.py', 'cut')}
+
+
+def test_only_the_commit_protocol_touches_store_and_cache():
+    path = PACKAGE / 'streaming' / 'incremental.py'
+    assert _call_sites([path], PROTOCOL_CALLS) == {
+        ('streaming/incremental.py', '_exactly_once_sink')}
+
+
+def _release_garbage(spark):
+    """Drop unreachable frames on both sides of py4j; Spark's context
+    cleaner then unpersists their RDDs asynchronously."""
+    gc.collect()
+    spark.sparkContext._jvm.java.lang.System.gc()
+
+
+def test_cut_rdds_are_released_once_results_are_garbage(spark_session):
+    """Graph and dedup queries leave their lineage-cut RDDs persisted
+    after ``collect``; once the results are dropped and both garbage
+    collectors run, the cleaner releases every one of them."""
+    from test_round2_queries import SF
+
+    from ons_utils_spark.plans.queries import QUERIES
+
+    def persisted():
+        return set(spark_session.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    start = persisted()
+    for name in ('q_pagerank', 'q_label_prop', 'q_dedup_keep_best',
+                 'q_bitext_mine', 'q_connected_components'):
+        QUERIES[name](spark_session, SF).collect()
+    held = persisted() - start
+    assert held
+    deadline = time.monotonic() + 120
+    while held & persisted() and time.monotonic() < deadline:
+        _release_garbage(spark_session)
+        time.sleep(0.5)
+    assert not held & persisted()
+    assert len(persisted()) <= len(start)
 
 
 def _pairs(spark):
