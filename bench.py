@@ -398,7 +398,16 @@ def _looks_load_inflated(full: dict, prev: dict) -> bool:
     below the median subtotal and be diverted forever.  A candidate
     lacking ``queries_min`` (pre-r15 fixture) uses its medians on
     both sides, preserving the pinned quiet-regression and
-    uniform-inflation behaviors."""
+    uniform-inflation behaviors.
+
+    Legacy committed artifact (the reverse case): when the candidate
+    carries ``queries_min`` but the committed record predates it,
+    the candidate's MINS are compared against the committed
+    MEDIANS — the very asymmetry described above, so a steady
+    regression smaller than the median-over-min spread still counts
+    as bursty and diverts to ``BENCH_full_loaded.json``.  Accepted
+    for legacy records only: the first equal-repeat run that lands
+    writes ``queries_min`` and restores min-vs-min from then on."""
     import re
 
     if not prev.get('value'):

@@ -21,7 +21,7 @@ import logging
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from .lineage import cut
+from .lineage import cut, scope
 
 _log = logging.getLogger(__name__)
 
@@ -31,7 +31,6 @@ def connected_components(
     id_a: str = 'id_a',
     id_b: str = 'id_b',
     max_iterations: int = 20,
-    broadcast_state_nodes: int = 0,
 ) -> SparkDF:
     """Resolve pair edges to components: ``(node, component)`` where
     component = min node id reachable from ``node``.
@@ -43,133 +42,121 @@ def connected_components(
     warning on this module's logger: the labels returned are then
     not yet the components.
     """
-    # Lazy lineage cuts: each round's cut materializes inside the
-    # next action's job instead of as its own eager job — same
-    # stages, far fewer scheduler round-trips (measured 15.8 → 5.7 s
-    # on a 2000-node path; reliable cuts stay eager, see
-    # :func:`lineage.cut`).
-    edges = pairs.select(
-        F.col(id_a).cast('long').alias('a'),
-        F.col(id_b).cast('long').alias('b'),
-    )
-    # undirected: keep both directions
-    sym = edges.unionByName(
-        edges.select(F.col('b').alias('a'), F.col('a').alias('b'))
-    ).distinct()
-    # A lineage cut (not persist): each round's plan would otherwise
-    # embed every previous round — plan size grows exponentially and
-    # the DRIVER OOMs during analysis after ~10 iterations.
-    # Partition on 'b' — the key EVERY round's label join uses — so
-    # the edge frame is never re-exchanged inside the loop; only the
-    # one-off init aggregate below pays an exchange on 'a'.
-    sym = sym.repartition('b').transform(cut, eager=False)
+    with scope() as s:
+        # Lazy lineage cuts: each round's cut materializes inside the
+        # next action's job instead of as its own eager job — same
+        # stages, far fewer scheduler round-trips (measured 15.8 → 5.7 s
+        # on a 2000-node path; reliable cuts stay eager, see
+        # :func:`lineage.cut`).
+        edges = pairs.select(
+            F.col(id_a).cast('long').alias('a'),
+            F.col(id_b).cast('long').alias('b'),
+        )
+        # undirected: keep both directions
+        sym = edges.unionByName(
+            edges.select(F.col('b').alias('a'), F.col('a').alias('b'))
+        ).distinct()
+        # A lineage cut (not persist): each round's plan would otherwise
+        # embed every previous round — plan size grows exponentially and
+        # the DRIVER OOMs during analysis after ~10 iterations.
+        # Partition on 'b' — the key EVERY round's label join uses — so
+        # the edge frame is never re-exchanged inside the loop; only the
+        # one-off init aggregate below pays an exchange on 'a'.
+        sym = sym.repartition('b').transform(cut, eager=False)
 
-    labels = (
-        sym.groupBy('a')
-        .agg(F.min('b').alias('min_neighbor'))
-        .select(
-            F.col('a').alias('node'),
-            F.least(F.col('a'), F.col('min_neighbor')).alias('comp'),
-        )
-        .transform(cut, eager=False)
-    )
-    # broadcast_state_nodes > 0: every label-side join below
-    # broadcasts while the node count stays under the threshold.
-    # Defaults OFF — the r16 position-matched A/B measured the
-    # broadcast arm consistently slower here (0/4 paired wins, min
-    # 2.50 vs 1.85 s at sf0.1): the per-round driver collects cost
-    # more than the small exchanges they save.  For dense-graph
-    # deployments where re-exchanging the edge frame per round
-    # dominates, turn it on (see graph.BROADCAST_STATE_MAX_NODES).
-    bcast = 0 < broadcast_state_nodes and \
-        labels.count() <= broadcast_state_nodes
-    _b = (lambda d: F.broadcast(d)) if bcast else (lambda d: d)
-
-    for it in range(max_iterations):
-        # pass 1 — neighbor min: label(a) = min(label(a), label(b))
-        # over edges. Alone this moves labels ONE hop per round, so a
-        # path of length L would need L rounds — the 20-iteration cap
-        # would silently return unconverged labels on long chains.
-        lb = _b(labels)
-        neighbor_labels = (
-            sym.join(
-                lb, sym['b'] == lb['node'], 'inner'
-            )
-            .select(sym['a'].alias('node'), F.col('comp'))
-        )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy('node')
-            .agg(F.min('comp').alias('comp'))
-        )
-        # Round 0 checks convergence BETWEEN the passes: near-dup
-        # pair graphs are typically unions of cliques, which the
-        # min-neighbor INITIALIZATION already labels exactly — if
-        # pass 1 changed nothing the labels are a fixed point and
-        # the pointer-doubling join never needs to run at all.
-        #
-        # The checks count changed labels without a limit(1): a
-        # codegen'd limit names its row counter from a JVM-wide
-        # sequence, so every check would compile new classes (two per
-        # limit stage, every call).  On the converged round, the one
-        # that ends the loop, no row passes the filter and a limit
-        # could not stop the scan early anyway.
-        if it == 0:
-            new_labels = cut(new_labels, eager=False)
-            changed = (
-                new_labels.alias('n')
-                .join(_b(labels.alias('o')), 'node')
-                .filter(F.col('n.comp') != F.col('o.comp'))
-                .count()
-            )
-            if changed == 0:
-                return new_labels
-        # pass 2 — pointer doubling: label(node) = label(label(node)).
-        # Labels now jump 2^r hops after r rounds, so even a pure
-        # path converges in O(log L) rounds.
-        pointees = _b(new_labels.select(
-            F.col('node').alias('__pnode'),
-            F.col('comp').alias('__pcomp'),
-        ))
-        new_labels = (
-            new_labels.join(
-                pointees,
-                new_labels['comp'] == pointees['__pnode'],
-                'left',
-            )
+        labels = (
+            sym.groupBy('a')
+            .agg(F.min('b').alias('min_neighbor'))
             .select(
-                'node',
-                F.coalesce(
-                    F.least(F.col('comp'), F.col('__pcomp')),
-                    F.col('comp'),
-                ).alias('comp'),
+                F.col('a').alias('node'),
+                F.least(F.col('a'), F.col('min_neighbor')).alias('comp'),
             )
             .transform(cut, eager=False)
         )
-        # Convergence check every OTHER round: the check is a whole
-        # extra join+count job, and an already-converged round is a
-        # cheap no-op (labels reproduce identically) — skipping half
-        # the checks costs at most one redundant round while saving
-        # ~1/4 of the loop's jobs. Odd rounds and the final round
-        # always check, so reaching the cap means labels still changed.
-        # (Round 0 already checked between the passes above.)
-        labels, prev = new_labels, labels
-        if it % 2 == 1 or it == max_iterations - 1:
-            changed = (
-                labels.alias('n')
-                .join(_b(prev.alias('o')), 'node')
-                .filter(F.col('n.comp') != F.col('o.comp'))
-                .count()
+        for it in range(max_iterations):
+            # pass 1 — neighbor min: label(a) = min(label(a), label(b))
+            # over edges. Alone this moves labels ONE hop per round, so a
+            # path of length L would need L rounds — the 20-iteration cap
+            # would silently return unconverged labels on long chains.
+            neighbor_labels = (
+                sym.join(
+                    labels, sym['b'] == labels['node'], 'inner'
+                )
+                .select(sym['a'].alias('node'), F.col('comp'))
             )
-            if changed == 0:
-                break
-    else:
-        _log.warning(
-            'connected_components stopped at max_iterations=%d with '
-            'labels still changing; the returned labels are not yet '
-            'the components', max_iterations)
+            new_labels = (
+                labels.unionByName(neighbor_labels)
+                .groupBy('node')
+                .agg(F.min('comp').alias('comp'))
+            )
+            # Round 0 checks convergence BETWEEN the passes: near-dup
+            # pair graphs are typically unions of cliques, which the
+            # min-neighbor INITIALIZATION already labels exactly — if
+            # pass 1 changed nothing the labels are a fixed point and
+            # the pointer-doubling join never needs to run at all.
+            #
+            # The checks count changed labels without a limit(1): a
+            # codegen'd limit names its row counter from a JVM-wide
+            # sequence, so every check would compile new classes (two per
+            # limit stage, every call).  On the converged round, the one
+            # that ends the loop, no row passes the filter and a limit
+            # could not stop the scan early anyway.
+            if it == 0:
+                new_labels = cut(new_labels, eager=False)
+                changed = (
+                    new_labels.alias('n')
+                    .join(labels.alias('o'), 'node')
+                    .filter(F.col('n.comp') != F.col('o.comp'))
+                    .count()
+                )
+                if changed == 0:
+                    return s.result(new_labels)
+            # pass 2 — pointer doubling: label(node) = label(label(node)).
+            # Labels now jump 2^r hops after r rounds, so even a pure
+            # path converges in O(log L) rounds.
+            pointees = new_labels.select(
+                F.col('node').alias('__pnode'),
+                F.col('comp').alias('__pcomp'),
+            )
+            new_labels = (
+                new_labels.join(
+                    pointees,
+                    new_labels['comp'] == pointees['__pnode'],
+                    'left',
+                )
+                .select(
+                    'node',
+                    F.coalesce(
+                        F.least(F.col('comp'), F.col('__pcomp')),
+                        F.col('comp'),
+                    ).alias('comp'),
+                )
+                .transform(cut, eager=False)
+            )
+            # Convergence check every OTHER round: the check is a whole
+            # extra join+count job, and an already-converged round is a
+            # cheap no-op (labels reproduce identically) — skipping half
+            # the checks costs at most one redundant round while saving
+            # ~1/4 of the loop's jobs. Odd rounds and the final round
+            # always check, so reaching the cap means labels still changed.
+            # (Round 0 already checked between the passes above.)
+            labels, prev = new_labels, labels
+            if it % 2 == 1 or it == max_iterations - 1:
+                changed = (
+                    labels.alias('n')
+                    .join(prev.alias('o'), 'node')
+                    .filter(F.col('n.comp') != F.col('o.comp'))
+                    .count()
+                )
+                if changed == 0:
+                    break
+        else:
+            _log.warning(
+                'connected_components stopped at max_iterations=%d with '
+                'labels still changing; the returned labels are not yet '
+                'the components', max_iterations)
 
-    return labels
+        return s.result(labels)
 
 
 def dedup_by_components(

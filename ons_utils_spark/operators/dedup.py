@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .lineage import cut
+from .lineage import cut, keep, scope, scoped
 from .text import normalize_text, tokenize
 
 
@@ -425,8 +425,6 @@ def _bucket_pair_join(
     keys: Sequence[str],
     carry: Sequence[str] = (),
     max_bucket_size: Optional[int] = None,
-    eager_census: bool = False,
-    persist_registry: Optional[list] = None,
 ) -> SparkDF:
     """Self-join a banded frame on its bucket ``keys`` with
     ``id_a < id_b`` — the candidate-pair stage shared by the LSH
@@ -448,20 +446,16 @@ def _bucket_pair_join(
     ``carry`` columns are emitted per side as ``<col>_a``/``<col>_b``
     (e.g. SimHash signatures for the Hamming verify).
 
-    ``persist_registry``: with ``eager_census`` the bucket census is
-    a SEPARATE action from the pair join it guards, and exchange
-    reuse does not span actions — the census job and the caller's
-    pair-join job would each shuffle the banded frame.  Passing a
-    list persists the repartitioned frame (the census collect
-    populates the cache, the pair join reads it — ONE shuffle total)
-    and appends the persisted DataFrame so the caller can unpersist
-    after consuming the pairs.
+    Inside a :func:`lineage.scope` (the dedup drivers, which are
+    eager anyway) the bucket census is resolved NOW and the
+    repartitioned frame is kept until the scope exits: the census is
+    then a separate action from the pair join it guards, and
+    exchange reuse does not span actions, so the kept frame is what
+    lets the census collect and the pair join share ONE shuffle.
+    Outside a scope the returned plan is fully lazy and caches
+    nothing.
     """
-    banded = banded.repartition(*keys)
-    if persist_registry is not None and eager_census:
-        from pyspark import StorageLevel
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_registry.append(banded)
+    banded = keep(banded.repartition(*keys))
 
     def _pairs(ldf: SparkDF, rdf: SparkDF) -> SparkDF:
         l, r = ldf.alias('l'), rdf.alias('r')
@@ -490,8 +484,8 @@ def _bucket_pair_join(
         .filter(F.col('__bsz') > max_bucket_size)
         .drop('__bsz')
     )
-    if eager_census:
-        # Resolve the census NOW (callers set this only from already-
+    if scoped():
+        # Resolve the census NOW (scopes are opened only by already-
         # eager contexts like the dedup drivers): in the overwhelming
         # common case there is NO oversized bucket and the plan
         # degenerates to the plain self-join — the split scaffolding
@@ -593,7 +587,6 @@ def minhash_lsh_candidates(
     collapse_identical: bool = True,
     max_bucket_size: Optional[int] = 2000,
     banded_index: Optional[SparkDF] = None,
-    persist_registry: Optional[list] = None,
 ) -> SparkDF:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -636,11 +629,11 @@ def minhash_lsh_candidates(
     and eagerly materializes both, which is the shape to copy at
     scale.
 
-    ``persist_registry``: passing a list persists the family-member
-    frame and the bucket repartition, appends both for the caller to
-    unpersist once the pairs are consumed, and resolves the bucket
-    census eagerly (see :func:`_bucket_pair_join`).  Without it the
-    returned plan is fully lazy and caches nothing.
+    Called inside a :func:`lineage.scope` it keeps the family-member
+    frame and the bucket repartition until the scope exits and
+    resolves the bucket census eagerly (see
+    :func:`_bucket_pair_join`).  Outside one the returned plan is
+    fully lazy and caches nothing.
 
     ``max_bucket_size`` sizing rule: an at-cap bucket emits cap²/2
     pairs from ONE join task (a single bucket key cannot be split by
@@ -688,22 +681,18 @@ def minhash_lsh_candidates(
                     & (F.col('__id') != F.col('__rep')))
             .select('__rep', '__id')
         )
-        if persist_registry is not None:
-            # The member frame is referenced by EVERY downstream
-            # branch (banding anti-join feeds both self-join sides,
-            # the hub/spoke split, and the bucket census): left
-            # uncached, each branch re-runs its window shuffle.  It
-            # is rows-with-a-duplicate sized (small by construction).
-            # With a caller-owned registry a PERSIST is enough — and
-            # one whole job cheaper than an eager checkpoint: the
-            # first downstream action populates it, and AQE cannot
-            # race the cold shingle pipeline because the members
-            # window exchange is that plan's only leaf stage (the
-            # banding repartition exchange depends on it, so stages
-            # run sequentially).
-            from pyspark import StorageLevel
-            members = members.persist(StorageLevel.MEMORY_AND_DISK)
-            persist_registry.append(members)
+        # The member frame is referenced by EVERY downstream branch
+        # (banding anti-join feeds both self-join sides, the
+        # hub/spoke split, and the bucket census): left uncached,
+        # each branch re-runs its window shuffle.  It is
+        # rows-with-a-duplicate sized (small by construction).  Inside
+        # a scope a KEEP is enough — and one whole job cheaper than
+        # an eager checkpoint: the first downstream action populates
+        # it, and AQE cannot race the cold shingle pipeline because
+        # the members window exchange is that plan's only leaf stage
+        # (the banding repartition exchange depends on it, so stages
+        # run sequentially).
+        members = keep(members)
         fam_pairs = members.select(F.col('__rep').alias('id_a'),
                                    F.col('__id').alias('id_b'))
         member_ids = members.select('__id')
@@ -730,9 +719,7 @@ def minhash_lsh_candidates(
     # sides then share one ReusedExchange instead of recomputing and
     # recompiling the minhash pipeline twice.
     pairs = _bucket_pair_join(
-        banded, ('band', 'bucket'), max_bucket_size=max_bucket_size,
-        eager_census=persist_registry is not None,
-        persist_registry=persist_registry)
+        banded, ('band', 'bucket'), max_bucket_size=max_bucket_size)
     if fam_pairs is not None:
         pairs = pairs.unionByName(fam_pairs)
     return pairs.distinct()
@@ -966,57 +953,54 @@ def minhash_dedup(
     k−1 — and buckets still larger than ``max_bucket_size`` after
     the collapse are star-paired on the bucket min.
 
-    The LSH/verify pipeline runs EAGERLY (the drop-list is
-    checkpointed): the expensive shingle cache is released before
-    this returns, so repeated calls in a long-lived session don't
-    accumulate cached partitions, and re-running actions on the
-    result re-executes only the cheap anti-join.  The cut is
+    The LSH/verify pipeline runs EAGERLY inside a
+    :func:`lineage.scope` (the drop-list is its result): the
+    expensive shingle cache is released before this returns, so
+    repeated calls in a long-lived session don't accumulate cached
+    partitions, and re-running actions on the result re-executes
+    only the cheap anti-join.  The drop-list's cut is
     :func:`lineage.cut`: a reliable checkpoint when the session has
     a checkpoint directory, executor-local otherwise.
     """
-    from pyspark import StorageLevel
-
-    # Shingle+hash ONCE and persist (8 B/shingle, spills to disk):
-    # the same frame feeds signature generation AND both sides of the
-    # verification join. Without this the shingle regex/concat
-    # pipeline — the most expensive stage — runs three times.
-    hashed = df.select(
-        F.col(id_col).alias('__id'),
-        shingle_hashes(
-            _shingler(shingles)(text_col, shingle_n)).alias('__hs'),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # The banded frame is consumed exactly ONCE downstream (the
-    # candidate stage's bucket repartition, which _bucket_pair_join
-    # persists via persist_registry), so it carries no persist of its
-    # own; `hashed` stays persisted — the fingerprint census, the
-    # banding, and both verify sides read it.  Cache population is
-    # sequential without an explicit count() pass: the first action
-    # (the family-members checkpoint) computes `hashed` through a
-    # linear census plan, the second (the bucket-census collect)
-    # computes the banded repartition from the then-warm `hashed`,
-    # and the drop-list job reads only cached/checkpointed parents —
-    # no branchy action ever races to compute a cold pipeline (the
-    # 3-4x failure mode an earlier eager-count shape guarded).
-    banded = minhash_band_index(
-        df, id_col, text_col, num_hashes, bands, shingle_n,
-        hashed, shingles,
-    )
-    registry: list = []
-    try:
+    with scope() as s:
+        # Shingle+hash ONCE and keep (8 B/shingle, spills to disk):
+        # the same frame feeds signature generation AND both sides of
+        # the verification join. Without this the shingle
+        # regex/concat pipeline — the most expensive stage — runs
+        # three times.
+        hashed = keep(df.select(
+            F.col(id_col).alias('__id'),
+            shingle_hashes(
+                _shingler(shingles)(text_col, shingle_n)).alias('__hs'),
+        ))
+        # The banded frame is consumed exactly ONCE downstream (the
+        # candidate stage's bucket repartition, which
+        # _bucket_pair_join keeps), so it carries no keep of its own;
+        # `hashed` stays kept — the fingerprint census, the banding,
+        # and both verify sides read it.  Cache population is
+        # sequential without an explicit count() pass: the first
+        # action (the bucket-census collect) computes the family
+        # members and the banded repartition through a linear plan
+        # into the then-warm `hashed`, and the drop-list job reads
+        # only cached parents — no branchy action ever races to
+        # compute a cold pipeline (the 3-4x failure mode an earlier
+        # eager-count shape guarded).
+        banded = minhash_band_index(
+            df, id_col, text_col, num_hashes, bands, shingle_n,
+            hashed, shingles,
+        )
         cands = minhash_lsh_candidates(
             df, id_col, text_col, num_hashes, bands, shingle_n,
             hashed_shingles=hashed,
             collapse_identical=collapse_identical,
             max_bucket_size=max_bucket_size,
             banded_index=banded,
-            persist_registry=registry,
         )
         verified = verify_jaccard_hashed(cands, hashed, jaccard_threshold)
-        # Materialize the (id-only, tiny relative to df) drop-list and
-        # cut its lineage so the shingle cache can be released now
+        # Materialize the (id-only, tiny relative to df) drop-list as
+        # the scope's result, so the shingle cache is released now
         # instead of leaking for the SparkSession lifetime; the blocks
-        # live in executor storage (never the driver) and are cleaned
-        # by the ContextCleaner once the caller drops the result.
+        # live in executor storage (never the driver).
         # No id-level distinct: the anti-join is duplicate-
         # insensitive.  A dropped id repeats once per distinct
         # verified lower-id partner × band collided in — partners
@@ -1028,11 +1012,7 @@ def minhash_dedup(
         # (A/B-measured r10); a pathological clone-heavy corpus
         # should pass ``collapse_identical=True`` (exact clones
         # collapse before banding) or restore a distinct upstream.
-        to_drop = cut(verified.select(F.col('id_b').alias(id_col)))
-    finally:
-        hashed.unpersist()
-        for cached in registry:
-            cached.unpersist()
+        to_drop = s.result(verified.select(F.col('id_b').alias(id_col)))
     return df.join(to_drop, on=id_col, how='left_anti')
 
 
@@ -1389,53 +1369,46 @@ def simhash_dedup(
     """
     # Signatures fully JVM-side (:func:`_simhash_sigs`).  The
     # signature frame (id + 4 bigints, ~40 B/row at ANY corpus
-    # size) is PERSISTED rather than trusting AQE exchange reuse to
+    # size) is KEPT rather than trusting AQE exchange reuse to
     # cover the self-join: reuse silently breaks when the input plan
     # branches don't canonicalize identically (observed with a
     # union-sourced corpus — the whole tokenize pipeline re-ran
-    # per branch, 1.3s -> 3.6s at sf0.1), and persisting the tiny
-    # frame is the cost-stable contract.  The drop-list is evaluated
-    # eagerly so the cache never outlives the call (same structure
-    # as :func:`minhash_dedup`).
-    from pyspark import StorageLevel
-
-    sigs = _simhash_sigs(df, id_col, text_col, 4) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    registry: list = []
-    try:
+    # per branch, 1.3s -> 3.6s at sf0.1), and keeping the tiny
+    # frame is the cost-stable contract.  The drop-list is the
+    # scope's result, evaluated eagerly so the cache never outlives
+    # the call (same structure as :func:`minhash_dedup`).
+    with scope() as s:
+        sigs = keep(_simhash_sigs(df, id_col, text_col, 4))
         fam_drops = None
         if collapse_identical:
-            # The members checkpoint doubles as the cache-populate
-            # action (an explicit sigs.count() first was one full
-            # extra pass).  ONE window over __blocks, not
-            # groupBy-census + join-back: the census/join shape
-            # scans `sigs` twice from sibling leaf stages of one
-            # action — AQE may submit them concurrently and re-race
-            # the cold tokenize+UDF pipeline (r12 ADVICE; the 3.4x
-            # cold-race failure mode) — while the window is a single
-            # scan + a single exchange, LINEAR by construction, and
-            # drops the join-back shuffle the census shape pays once
-            # the family frame outgrows broadcast.
+            # The bucket census doubles as the cache-populate action
+            # (an explicit sigs.count() first was one full extra
+            # pass).  ONE window over __blocks, not groupBy-census +
+            # join-back: the census/join shape scans `sigs` twice
+            # from sibling leaf stages of one action — AQE may submit
+            # them concurrently and re-race the cold tokenize+UDF
+            # pipeline (r12 ADVICE; the 3.4x cold-race failure mode)
+            # — while the window is a single scan + a single
+            # exchange, LINEAR by construction, and drops the
+            # join-back shuffle the census shape pays once the family
+            # frame outgrows broadcast.
             fam_w = Window.partitionBy('__blocks')
-            members = (
+            # KEEP, not an eager cut: the census action populates it
+            # (one whole job cheaper), and the members window
+            # exchange is that plan's only leaf stage — the banding
+            # repartition exchange depends on it, so AQE materializes
+            # them sequentially and the cold tokenize+UDF pipeline is
+            # computed exactly once, into the sigs cache, with no
+            # sibling-stage race.  Small by construction (rows with
+            # an identical-signature twin).
+            members = keep(
                 sigs.select(
                     '__id',
                     F.min('__id').over(fam_w).alias('__rep'),
                     F.count(F.lit(1)).over(fam_w).alias('__fn'))
                 .filter((F.col('__fn') > 1)
                         & (F.col('__id') != F.col('__rep')))
-                .select('__id')
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # PERSIST, not an eager checkpoint: the census action
-            # populates it (one whole job cheaper), and the members
-            # window exchange is that plan's only leaf stage — the
-            # banding repartition exchange depends on it, so AQE
-            # materializes them sequentially and the cold
-            # tokenize+UDF pipeline is computed exactly once, into
-            # the sigs cache, with no sibling-stage race.  Small by
-            # construction (rows with an identical-signature twin);
-            # unpersisted via the registry.
-            registry.append(members)
+                .select('__id'))
             # members are Hamming 0 from a lower id: they always drop
             fam_drops = members
             reps = sigs.join(members, '__id', 'left_anti')
@@ -1453,8 +1426,7 @@ def simhash_dedup(
         dropped = (
             _bucket_pair_join(
                 banded, ('block', 'key'), carry=('__blocks',),
-                max_bucket_size=max_bucket_size, eager_census=True,
-                persist_registry=registry)
+                max_bucket_size=max_bucket_size)
             .filter(
                 hamming_distance_blocks(F.col('__blocks_a'),
                                         F.col('__blocks_b'))
@@ -1475,11 +1447,7 @@ def simhash_dedup(
         # small families dominate real corpora and the saved full
         # shuffle wins (A/B-measured r10); clone-heavy corpora
         # should collapse identical docs upstream.
-        to_drop = cut(dropped.select(F.col('__id').alias(id_col)))
-    finally:
-        sigs.unpersist()
-        for cached in registry:
-            cached.unpersist()
+        to_drop = s.result(dropped.select(F.col('__id').alias(id_col)))
     return df.join(to_drop, on=id_col, how='left_anti')
 
 
@@ -2156,24 +2124,26 @@ def _lsh_near_duplicates(
     fraction is ≈ ``B · 2^−r`` of all n²/2 pairs (r = 16 → ~4·10⁻⁴
     with B = 24), so raise ``planes_per_band`` by ~log₂ of any
     corpus growth factor (and ``bands`` to hold recall) to keep the
-    verify load linear — the standard LSH n^ρ trade.
+    verify load linear — the standard LSH n^ρ trade.  Eager: the
+    verified pairs are its :func:`lineage.scope`'s result.
     """
-    banded = embedding_band_index(
-        src, id_col, vec_col, dim, bands, planes_per_band, seed,
-    ).withColumnRenamed(id_col, '__id')
-    # Eager lineage cut: the bucket census and both self-join sides
-    # each reference this frame — left lazy the signature-GEMM
-    # pipeline recomputes per branch (the r8 dedup-guard regression).
-    banded = cut(banded)
-    cand = _bucket_pair_join(
-        banded, ('band', 'bucket'), max_bucket_size=max_bucket_size,
-        eager_census=True,
-    ).dropDuplicates(['id_a', 'id_b'])
-    return (
-        score_pairs_cosine(cand, src, id_col, vec_col)
-        .filter(F.col('cosine') >= F.lit(float(threshold)))
-        .select('id_a', 'id_b', 'cosine')
-    )
+    with scope() as s:
+        banded = embedding_band_index(
+            src, id_col, vec_col, dim, bands, planes_per_band, seed,
+        ).withColumnRenamed(id_col, '__id')
+        # Eager lineage cut: the bucket census and both self-join
+        # sides each reference this frame — left lazy the
+        # signature-GEMM pipeline recomputes per branch (the r8
+        # dedup-guard regression).
+        banded = cut(banded)
+        cand = _bucket_pair_join(
+            banded, ('band', 'bucket'), max_bucket_size=max_bucket_size,
+        ).dropDuplicates(['id_a', 'id_b'])
+        return s.result(
+            score_pairs_cosine(cand, src, id_col, vec_col)
+            .filter(F.col('cosine') >= F.lit(float(threshold)))
+            .select('id_a', 'id_b', 'cosine')
+        )
 
 
 def embedding_near_duplicates(
@@ -2244,10 +2214,8 @@ def embedding_near_duplicates(
         block_rows = max_broadcast_rows
     num_blocks = max(1, -(-n // block_rows))
     block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks))
-    src = src.withColumn('__block', block)
-    from pyspark import StorageLevel
-    src.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scope() as s:
+        src = keep(src.withColumn('__block', block))
         parts = []
         for b in range(num_blocks):
             ids, mat = _collect_normalized(
@@ -2264,9 +2232,7 @@ def embedding_near_duplicates(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out
-    finally:
-        src.unpersist()
+        return s.result(out)
 
 
 def semantic_dedup_pairs(
@@ -2423,39 +2389,40 @@ def source_overlap(
     Output: ``(g_a, g_b, n_a, n_b, n_common, jaccard)`` for every
     group pair sharing at least one shingle.
     """
-    posting = (
-        df.select(
-            F.col(group_col).alias('g'),
-            F.explode(word_shingles(text_col, n)).alias('sh'))
-        .groupBy('sh').agg(F.collect_set('g').alias('gs'))
-        .transform(cut, eager=False)
-    )
-    sizes = (
-        posting.select(F.explode('gs').alias('g'))
-        .groupBy('g').agg(F.count(F.lit(1)).alias('n_sh'))
-    )
-    inter = (
-        posting
-        .select(F.explode('gs').alias('g_a'), 'gs')
-        .select('g_a', F.explode(
-            F.filter('gs', lambda y: y > F.col('g_a'))).alias('g_b'))
-        .groupBy('g_a', 'g_b')
-        .agg(F.count(F.lit(1)).alias('n_common'))
-    )
-    # group-count table is tiny (one row per shard) — broadcast both
-    # lookups so the pair table never shuffles again.
-    sz_a = F.broadcast(sizes.withColumnsRenamed(
-        {'g': 'g_a', 'n_sh': 'n_a'}))
-    sz_b = F.broadcast(sizes.withColumnsRenamed(
-        {'g': 'g_b', 'n_sh': 'n_b'}))
-    return (
-        inter.join(sz_a, 'g_a').join(sz_b, 'g_b')
-        .withColumn(
-            'jaccard',
-            F.col('n_common')
-            / (F.col('n_a') + F.col('n_b') - F.col('n_common')))
-        .select('g_a', 'g_b', 'n_a', 'n_b', 'n_common', 'jaccard')
-    )
+    with scope() as s:
+        posting = (
+            df.select(
+                F.col(group_col).alias('g'),
+                F.explode(word_shingles(text_col, n)).alias('sh'))
+            .groupBy('sh').agg(F.collect_set('g').alias('gs'))
+            .transform(cut, eager=False)
+        )
+        sizes = (
+            posting.select(F.explode('gs').alias('g'))
+            .groupBy('g').agg(F.count(F.lit(1)).alias('n_sh'))
+        )
+        inter = (
+            posting
+            .select(F.explode('gs').alias('g_a'), 'gs')
+            .select('g_a', F.explode(
+                F.filter('gs', lambda y: y > F.col('g_a'))).alias('g_b'))
+            .groupBy('g_a', 'g_b')
+            .agg(F.count(F.lit(1)).alias('n_common'))
+        )
+        # group-count table is tiny (one row per shard) — broadcast both
+        # lookups so the pair table never shuffles again.
+        sz_a = F.broadcast(sizes.withColumnsRenamed(
+            {'g': 'g_a', 'n_sh': 'n_a'}))
+        sz_b = F.broadcast(sizes.withColumnsRenamed(
+            {'g': 'g_b', 'n_sh': 'n_b'}))
+        return s.result(
+            inter.join(sz_a, 'g_a').join(sz_b, 'g_b')
+            .withColumn(
+                'jaccard',
+                F.col('n_common')
+                / (F.col('n_a') + F.col('n_b') - F.col('n_common')))
+            .select('g_a', 'g_b', 'n_a', 'n_b', 'n_common', 'jaccard')
+        )
 
 
 def exact_substring_pairs(

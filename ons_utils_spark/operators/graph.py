@@ -14,12 +14,14 @@ each iteration is one join + one aggregate, with a lineage cut
 every previous round (driver analysis blow-up — same pattern as
 ``connected_components``).  The cuts are reliable checkpoints when
 the session has a checkpoint directory, executor-local otherwise.
-At 100 TB scale the edge list dominates: it is materialized ONCE,
-and while the node count stays under ``BROADCAST_STATE_MAX_NODES``
-the per-round join broadcasts the O(nodes) rank state so the edge
-frame is scanned, never exchanged; above the threshold the join
-falls back to sort-merge (a billion-node rank vector must not be
-collected).
+Every operator runs in its own :func:`lineage.scope`: it returns a
+materialized result, and its edge frames, node sets and earlier
+rounds are freed when the call returns.  At 100 TB scale the edge
+list dominates: it is materialized ONCE, and while the node count
+stays under ``BROADCAST_STATE_MAX_NODES`` the per-round join
+broadcasts the O(nodes) rank state so the edge frame is scanned,
+never exchanged; above the threshold the join falls back to
+sort-merge (a billion-node rank vector must not be collected).
 
 Two arithmetic modes (same pattern as ``operators/classifier.py``):
 
@@ -40,7 +42,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from .lineage import cut
+from .lineage import cut, scope
 
 __all__ = ['pagerank', 'personalized_pagerank', 'triangle_count',
            'bfs_levels', 'label_propagation', 'harmonic_centrality',
@@ -97,58 +99,59 @@ def label_propagation(
     round exactly.  Isolated nodes (no edges) keep their own label.
     """
     # Per-round cuts are LAZY here (fixed-iteration loop, no
-    # mid-loop actions): the final action materializes the whole
+    # mid-loop actions): the result cut materializes the whole
     # round chain stage-by-stage in ONE job instead of one eager
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
     # loop breaks stay eager, see OPTIMIZATION_r15.md).
-    e = edges.select(F.col(src).cast('long').alias('a'),
-                     F.col(dst).cast('long').alias('b')) \
-        .filter(F.col('a') != F.col('b'))
-    # Materialize the symmetric edge frame FIRST and derive the node
-    # set from the cut (see :func:`pagerank`): separate lineage cuts
-    # each re-execute their upstream during plan compile, so cutting
-    # before the derivations runs the caller's edge build ONCE.  The
-    # pre-checkpoint repartition normalizes the checkpoint's block
-    # parallelism only (it does not survive the cut as a physical
-    # partitioning — OPTIMIZATION_r15.md §18).
-    sym = e.unionByName(
-        e.select(F.col('b').alias('a'), F.col('a').alias('b'))
-    ).distinct().repartition('b').transform(cut, eager=False)
-    nodes = sym.select(F.col('a').alias('node')).distinct() \
-        .transform(cut, eager=False)
-    # node count is exact and cheap here (one job over the
-    # checkpointed node frame); under the threshold every round's
-    # label join broadcasts the node-sized label state — the edge
-    # frame is scanned, never exchanged (see
-    # BROADCAST_STATE_MAX_NODES).
-    bcast = 0 < nodes.count() <= broadcast_state_nodes
-    labels = nodes.select('node', F.col('node').alias('label'))
-    for _ in range(iterations):
-        lb = F.broadcast(labels) if bcast else labels
-        # the self-vote is the label frame itself, unioned BELOW the
-        # aggregation: one (node, own-label) row per node is exactly
-        # the vote the former (node, node) self-edge produced through
-        # the join, without carrying n extra edges in `sym` or
-        # re-deriving the node set during the `sym` build.
-        votes = (
-            sym.join(lb, sym['b'] == lb['node'])
-            .select(sym['a'].alias('n'), 'label')
-        )
-        # deterministic mode = the most frequent label, ties to the
-        # smallest: LPA's rule in ONE aggregation (one shuffle).  The
-        # self-vote union guarantees every node appears (labels spans
-        # all nodes by induction), so the result covers the full node
-        # set — no nodes-frame left join per round.
-        labels = (
-            votes.unionByName(
-                labels.select(F.col('node').alias('n'), 'label'))
-            .groupBy('n')
-            .agg(F.mode('label', deterministic=True).alias('label'))
-            .select(F.col('n').alias('node'), 'label')
+    with scope() as s:
+        e = edges.select(F.col(src).cast('long').alias('a'),
+                         F.col(dst).cast('long').alias('b')) \
+            .filter(F.col('a') != F.col('b'))
+        # Materialize the symmetric edge frame FIRST and derive the node
+        # set from the cut (see :func:`pagerank`): separate lineage cuts
+        # each re-execute their upstream during plan compile, so cutting
+        # before the derivations runs the caller's edge build ONCE.  The
+        # pre-checkpoint repartition normalizes the checkpoint's block
+        # parallelism only (it does not survive the cut as a physical
+        # partitioning — OPTIMIZATION_r15.md §18).
+        sym = e.unionByName(
+            e.select(F.col('b').alias('a'), F.col('a').alias('b'))
+        ).distinct().repartition('b').transform(cut, eager=False)
+        nodes = sym.select(F.col('a').alias('node')).distinct() \
             .transform(cut, eager=False)
-        )
-    return labels
+        # node count is exact and cheap here (one job over the
+        # checkpointed node frame); under the threshold every round's
+        # label join broadcasts the node-sized label state — the edge
+        # frame is scanned, never exchanged (see
+        # BROADCAST_STATE_MAX_NODES).
+        bcast = 0 < nodes.count() <= broadcast_state_nodes
+        labels = nodes.select('node', F.col('node').alias('label'))
+        for _ in range(iterations):
+            lb = F.broadcast(labels) if bcast else labels
+            # the self-vote is the label frame itself, unioned BELOW the
+            # aggregation: one (node, own-label) row per node is exactly
+            # the vote the former (node, node) self-edge produced through
+            # the join, without carrying n extra edges in `sym` or
+            # re-deriving the node set during the `sym` build.
+            votes = (
+                sym.join(lb, sym['b'] == lb['node'])
+                .select(sym['a'].alias('n'), 'label')
+            )
+            # deterministic mode = the most frequent label, ties to the
+            # smallest: LPA's rule in ONE aggregation (one shuffle).  The
+            # self-vote union guarantees every node appears (labels spans
+            # all nodes by induction), so the result covers the full node
+            # set — no nodes-frame left join per round.
+            labels = (
+                votes.unionByName(
+                    labels.select(F.col('node').alias('n'), 'label'))
+                .groupBy('n')
+                .agg(F.mode('label', deterministic=True).alias('label'))
+                .select(F.col('n').alias('node'), 'label')
+                .transform(cut, eager=False)
+            )
+        return s.result(labels)
 
 
 def bfs_levels(
@@ -180,52 +183,53 @@ def bfs_levels(
     bulk hops fall back to sort-merge, each hop choosing from its
     own measured size.
     """
-    e = edges.select(F.col(src).cast('long').alias('s'),
-                     F.col(dst).cast('long').alias('d')).distinct()
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-        ).distinct()
-    e = e.repartition('s').transform(cut)
-    # visited state = the UNION of the per-hop checkpointed
-    # frontiers: each hop's new nodes are materialized exactly once
-    # (as `nxt`), never re-written as part of a growing `levels`
-    # frame — the anti-join and the final result read the same
-    # checkpointed RDDs (one materialization per hop instead of two).
-    first = sources.select(
-        F.col(node).cast('long').alias('n')).distinct().select(
-        'n', F.lit(0).cast('int').alias('hop')).transform(cut)
-    frontier_n = first.count()
-    visited_n = frontier_n
-    parts = [first]
-    # hop 1 expands the checkpointed sources: the caller's `sources`
-    # build runs once, for the cut, not again for the broadcast
-    frontier = visited = first.select('n')
-    for hop in range(1, max_hops + 1):
-        f = F.broadcast(frontier) \
-            if 0 < frontier_n <= broadcast_state_nodes else frontier
-        cand = (
-            f.join(e, f['n'] == e['s'])
-            .select(F.col('d').alias('n')).distinct()
-        )
-        v = F.broadcast(visited) \
-            if 0 < visited_n <= broadcast_state_nodes else visited
-        nxt = cand.join(v, 'n', 'left_anti').transform(cut)
-        # count() doubles as the emptiness check AND the next hop's
-        # broadcast-size measurement; it reads the just-checkpointed
-        # blocks, same cost class as the limit(1).count() it replaces
-        frontier_n = nxt.count()
-        if frontier_n == 0:
-            break
-        part = nxt.select('n', F.lit(hop).cast('int').alias('hop'))
-        parts.append(part)
-        visited = visited.unionByName(nxt)
-        visited_n += frontier_n
-        frontier = nxt
-    levels = parts[0]
-    for part in parts[1:]:
-        levels = levels.unionByName(part)
-    return levels.select(F.col('n').alias('node'), 'hop')
+    with scope() as s:
+        e = edges.select(F.col(src).cast('long').alias('s'),
+                         F.col(dst).cast('long').alias('d')).distinct()
+        if not directed:
+            e = e.unionByName(
+                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
+            ).distinct()
+        e = e.repartition('s').transform(cut)
+        # visited state = the UNION of the per-hop checkpointed
+        # frontiers: each hop's new nodes are materialized exactly once
+        # (as `nxt`), never re-written as part of a growing `levels`
+        # frame — the anti-join and the final result read the same
+        # checkpointed RDDs (one materialization per hop instead of two).
+        first = sources.select(
+            F.col(node).cast('long').alias('n')).distinct().select(
+            'n', F.lit(0).cast('int').alias('hop')).transform(cut)
+        frontier_n = first.count()
+        visited_n = frontier_n
+        parts = [first]
+        # hop 1 expands the checkpointed sources: the caller's `sources`
+        # build runs once, for the cut, not again for the broadcast
+        frontier = visited = first.select('n')
+        for hop in range(1, max_hops + 1):
+            f = F.broadcast(frontier) \
+                if 0 < frontier_n <= broadcast_state_nodes else frontier
+            cand = (
+                f.join(e, f['n'] == e['s'])
+                .select(F.col('d').alias('n')).distinct()
+            )
+            v = F.broadcast(visited) \
+                if 0 < visited_n <= broadcast_state_nodes else visited
+            nxt = cand.join(v, 'n', 'left_anti').transform(cut)
+            # count() doubles as the emptiness check AND the next hop's
+            # broadcast-size measurement; it reads the just-checkpointed
+            # blocks, same cost class as the limit(1).count() it replaces
+            frontier_n = nxt.count()
+            if frontier_n == 0:
+                break
+            part = nxt.select('n', F.lit(hop).cast('int').alias('hop'))
+            parts.append(part)
+            visited = visited.unionByName(nxt)
+            visited_n += frontier_n
+            frontier = nxt
+        levels = parts[0]
+        for part in parts[1:]:
+            levels = levels.unionByName(part)
+        return s.result(levels.select(F.col('n').alias('node'), 'hop'))
 
 
 def triangle_count(
@@ -246,63 +250,64 @@ def triangle_count(
     skewed graphs.  Pure joins/aggregates; all integer arithmetic,
     so the oracle replays it exactly.
     """
-    e = (
-        edges.select(F.col(src).cast('long').alias('u'),
-                     F.col(dst).cast('long').alias('v'))
-        .filter(F.col('u') != F.col('v'))
-        .select(F.least('u', 'v').alias('a'),
-                F.greatest('u', 'v').alias('b'))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col('a').alias('node'))
-        .unionByName(e.select(F.col('b').alias('node')))
-        .groupBy('node').agg(F.count(F.lit(1)).alias('d'))
-    )
-    da = deg.select(F.col('node').alias('a'), F.col('d').alias('da'))
-    db = deg.select(F.col('node').alias('b'), F.col('d').alias('db'))
-    ranked = e.join(da, 'a').join(db, 'b')
-    lower_first = (
-        F.struct(F.col('da'), F.col('a'))
-        < F.struct(F.col('db'), F.col('b'))
-    )
-    oriented = ranked.select(
-        F.when(lower_first, F.col('a')).otherwise(F.col('b'))
-        .alias('s'),
-        F.when(lower_first, F.col('b')).otherwise(F.col('a'))
-        .alias('t'),
-        F.when(lower_first, F.col('da')).otherwise(F.col('db'))
-        .alias('ds'),
-        F.when(lower_first, F.col('db')).otherwise(F.col('da'))
-        .alias('dt'),
-    ).transform(cut)
-    e1, e2 = oriented.alias('e1'), oriented.alias('e2')
-    # wedge (s → t1, s → t2) with t1 before t2 in orientation order
-    wedges = e1.join(e2, on=[
-        F.col('e1.s') == F.col('e2.s'),
-        F.struct(F.col('e1.dt'), F.col('e1.t'))
-        < F.struct(F.col('e2.dt'), F.col('e2.t')),
-    ]).select(F.col('e1.t').alias('w1'), F.col('e2.t').alias('w2'))
-    # ONE pass over the wedge join for both counts: `oriented` is
-    # distinct, so the closing-edge key (w1, w2) is unique and a
-    # left join preserves wedge multiplicity — count(*) is the wedge
-    # count and the matched rows are the triangles.  (Previously the
-    # wedge self-join was executed twice: once for the triangle
-    # inner join, once for the bare wedge count.)
-    closing = oriented.select(F.col('s').alias('w1'),
-                              F.col('t').alias('w2'),
-                              F.lit(1).alias('__hit'))
-    stats = wedges.join(closing, on=['w1', 'w2'], how='left').agg(
-        F.count(F.lit(1)).alias('n_wedges'),
-        F.sum(F.coalesce(F.col('__hit'), F.lit(0))).alias('n_tri'),
-    ).first()
-    n_wedges = stats['n_wedges']
-    n_tri = int(stats['n_tri'] or 0)
-    n_edges = oriented.count()
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        [(n_edges, n_wedges, n_tri)],
-        'n_edges long, n_wedges long, n_triangles long')
+    with scope():
+        e = (
+            edges.select(F.col(src).cast('long').alias('u'),
+                         F.col(dst).cast('long').alias('v'))
+            .filter(F.col('u') != F.col('v'))
+            .select(F.least('u', 'v').alias('a'),
+                    F.greatest('u', 'v').alias('b'))
+            .distinct()
+        )
+        deg = (
+            e.select(F.col('a').alias('node'))
+            .unionByName(e.select(F.col('b').alias('node')))
+            .groupBy('node').agg(F.count(F.lit(1)).alias('d'))
+        )
+        da = deg.select(F.col('node').alias('a'), F.col('d').alias('da'))
+        db = deg.select(F.col('node').alias('b'), F.col('d').alias('db'))
+        ranked = e.join(da, 'a').join(db, 'b')
+        lower_first = (
+            F.struct(F.col('da'), F.col('a'))
+            < F.struct(F.col('db'), F.col('b'))
+        )
+        oriented = ranked.select(
+            F.when(lower_first, F.col('a')).otherwise(F.col('b'))
+            .alias('s'),
+            F.when(lower_first, F.col('b')).otherwise(F.col('a'))
+            .alias('t'),
+            F.when(lower_first, F.col('da')).otherwise(F.col('db'))
+            .alias('ds'),
+            F.when(lower_first, F.col('db')).otherwise(F.col('da'))
+            .alias('dt'),
+        ).transform(cut)
+        e1, e2 = oriented.alias('e1'), oriented.alias('e2')
+        # wedge (s → t1, s → t2) with t1 before t2 in orientation order
+        wedges = e1.join(e2, on=[
+            F.col('e1.s') == F.col('e2.s'),
+            F.struct(F.col('e1.dt'), F.col('e1.t'))
+            < F.struct(F.col('e2.dt'), F.col('e2.t')),
+        ]).select(F.col('e1.t').alias('w1'), F.col('e2.t').alias('w2'))
+        # ONE pass over the wedge join for both counts: `oriented` is
+        # distinct, so the closing-edge key (w1, w2) is unique and a
+        # left join preserves wedge multiplicity — count(*) is the wedge
+        # count and the matched rows are the triangles.  (Previously the
+        # wedge self-join was executed twice: once for the triangle
+        # inner join, once for the bare wedge count.)
+        closing = oriented.select(F.col('s').alias('w1'),
+                                  F.col('t').alias('w2'),
+                                  F.lit(1).alias('__hit'))
+        stats = wedges.join(closing, on=['w1', 'w2'], how='left').agg(
+            F.count(F.lit(1)).alias('n_wedges'),
+            F.sum(F.coalesce(F.col('__hit'), F.lit(0))).alias('n_tri'),
+        ).first()
+        n_wedges = stats['n_wedges']
+        n_tri = int(stats['n_tri'] or 0)
+        n_edges = oriented.count()
+        spark = edges.sparkSession
+        return spark.createDataFrame(
+            [(n_edges, n_wedges, n_tri)],
+            'n_edges long, n_wedges long, n_triangles long')
 
 
 def pagerank(
@@ -345,7 +350,7 @@ def pagerank(
     aggregate.  Set 0 to force the sort-merge shape.
     """
     # Per-round cuts are LAZY here (fixed-iteration loop, no
-    # mid-loop actions): the final action materializes the whole
+    # mid-loop actions): the result cut materializes the whole
     # round chain stage-by-stage in ONE job instead of one eager
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
@@ -357,110 +362,111 @@ def pagerank(
             f"self_loops must be 'dangling', 'all' or 'none', "
             f'got {self_loops!r}')
 
-    # Materialize the distinct edge frame FIRST: `nodes` and `ed`
-    # are separate lineage cuts, and each cut's plan-compile under
-    # AQE executes its whole upstream — without this cut the
-    # caller's edge build (typically the expensive part: fact-table
-    # scans + join + distinct) ran once per derived frame (measured
-    # r16: two full builds inside q_pagerank, three inside
-    # q_personalized_pagerank).  Every derivation below reads the
-    # materialized RDD instead.
-    e = edges.select(F.col(src).cast('long').alias('src'),
-                     F.col(dst).cast('long').alias('dst')) \
-        .distinct().transform(cut, eager=False)
-    nodes = (
-        e.select(F.col('src').alias('node'))
-        .unionByName(e.select(F.col('dst').alias('node')))
-        .distinct()
-        .transform(cut, eager=False)
-    )
-    if self_loops == 'all':
-        # {e} ∪ {(n,n) ∀n} == {e: src≠dst} ∪ {(n,n) ∀n}: dropping
-        # the existing self-edges first makes the union disjoint, so
-        # the post-union distinct (a full exchange + dedup of the
-        # edge set) is unnecessary (guide §2.4 — `e` is already
-        # distinct and the self-loop frame is distinct by
-        # construction from the distinct node set).
-        e = e.filter(F.col('src') != F.col('dst')).unionByName(
-            nodes.select(F.col('node').alias('src'),
-                         F.col('node').alias('dst')))
-    elif self_loops == 'dangling':
-        sinks = nodes.join(
-            e.select(F.col('src').alias('node')).distinct(),
-            on='node', how='left_anti')
-        e = e.unionByName(
-            sinks.select(F.col('node').alias('src'),
-                         F.col('node').alias('dst')))
-    deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
-    # one edge frame carrying out-degree, materialized once; the
-    # repartition normalizes the checkpoint's block parallelism
-    # (it does not survive the cut as a physical partitioning —
-    # OPTIMIZATION_r15.md §18); the loop's exchange elision comes
-    # from broadcasting the rank state
-    ed = (
-        e.join(deg, 'src')
-        .repartition('src')
-        .transform(cut, eager=False)
-    )
-    n = nodes.count()
+    with scope() as s:
+        # Materialize the distinct edge frame FIRST: `nodes` and `ed`
+        # are separate lineage cuts, and each cut's plan-compile under
+        # AQE executes its whole upstream — without this cut the
+        # caller's edge build (typically the expensive part: fact-table
+        # scans + join + distinct) ran once per derived frame (measured
+        # r16: two full builds inside q_pagerank, three inside
+        # q_personalized_pagerank).  Every derivation below reads the
+        # materialized RDD instead.
+        e = edges.select(F.col(src).cast('long').alias('src'),
+                         F.col(dst).cast('long').alias('dst')) \
+            .distinct().transform(cut, eager=False)
+        nodes = (
+            e.select(F.col('src').alias('node'))
+            .unionByName(e.select(F.col('dst').alias('node')))
+            .distinct()
+            .transform(cut, eager=False)
+        )
+        if self_loops == 'all':
+            # {e} ∪ {(n,n) ∀n} == {e: src≠dst} ∪ {(n,n) ∀n}: dropping
+            # the existing self-edges first makes the union disjoint, so
+            # the post-union distinct (a full exchange + dedup of the
+            # edge set) is unnecessary (guide §2.4 — `e` is already
+            # distinct and the self-loop frame is distinct by
+            # construction from the distinct node set).
+            e = e.filter(F.col('src') != F.col('dst')).unionByName(
+                nodes.select(F.col('node').alias('src'),
+                             F.col('node').alias('dst')))
+        elif self_loops == 'dangling':
+            sinks = nodes.join(
+                e.select(F.col('src').alias('node')).distinct(),
+                on='node', how='left_anti')
+            e = e.unionByName(
+                sinks.select(F.col('node').alias('src'),
+                             F.col('node').alias('dst')))
+        deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
+        # one edge frame carrying out-degree, materialized once; the
+        # repartition normalizes the checkpoint's block parallelism
+        # (it does not survive the cut as a physical partitioning —
+        # OPTIMIZATION_r15.md §18); the loop's exchange elision comes
+        # from broadcasting the rank state
+        ed = (
+            e.join(deg, 'src')
+            .repartition('src')
+            .transform(cut, eager=False)
+        )
+        n = nodes.count()
 
-    frac = Fraction(damping).limit_denominator(1000)
-    num, den = frac.numerator, frac.denominator
+        frac = Fraction(damping).limit_denominator(1000)
+        num, den = frac.numerator, frac.denominator
 
-    # With self_loops='all' EVERY node has a self-edge, so the
-    # per-round aggregate already covers every node (each node is the
-    # dst of its own self-edge and `ranks` spans all nodes by
-    # induction from the init).  The nodes-frame left join is then a
-    # no-op — skipping it removes one shuffle join per iteration
-    # (guide §2.4: remove shuffles outright).  The other modes keep
-    # the join: a node with no in-edges is absent from the aggregate.
-    cover = self_loops == 'all'
-    bcast = 0 < n <= broadcast_state_nodes
+        # With self_loops='all' EVERY node has a self-edge, so the
+        # per-round aggregate already covers every node (each node is the
+        # dst of its own self-edge and `ranks` spans all nodes by
+        # induction from the init).  The nodes-frame left join is then a
+        # no-op — skipping it removes one shuffle join per iteration
+        # (guide §2.4: remove shuffles outright).  The other modes keep
+        # the join: a node with no in-edges is absent from the aggregate.
+        cover = self_loops == 'all'
+        bcast = 0 < n <= broadcast_state_nodes
 
-    if mode == 'integer':
-        ranks = nodes.select(
-            'node', F.lit(scale // n).cast('long').alias('r'))
-        base = (den - num) * scale // (den * n)
+        if mode == 'integer':
+            ranks = nodes.select(
+                'node', F.lit(scale // n).cast('long').alias('r'))
+            base = (den - num) * scale // (den * n)
+            for it in range(iterations):
+                r = F.broadcast(ranks) if bcast else ranks
+                inc = (
+                    r.join(ed, r['node'] == ed['src'])
+                    .select(F.col('dst').alias('node'),
+                            F.expr('r DIV od').alias('__c'))
+                )
+                agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
+                upd = agg if cover else nodes.join(agg, 'node', 'left')
+                ranks = upd.select(
+                    'node',
+                    F.expr(
+                        f'CAST({base} + ({num} * coalesce(__inc, 0))'
+                        f' DIV {den} AS BIGINT)').alias('r'),
+                )
+                if (it + 1) % checkpoint_every == 0 \
+                        or it == iterations - 1:
+                    ranks = cut(ranks, eager=False)
+            return s.result(ranks).select('node', F.col('r').alias('rank'))
+
+        ranks = nodes.select('node', F.lit(1.0 / n).alias('r'))
+        base = (1.0 - damping) / n
         for it in range(iterations):
             r = F.broadcast(ranks) if bcast else ranks
             inc = (
                 r.join(ed, r['node'] == ed['src'])
                 .select(F.col('dst').alias('node'),
-                        F.expr('r DIV od').alias('__c'))
+                        (F.col('r') / F.col('od')).alias('__c'))
             )
             agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
             upd = agg if cover else nodes.join(agg, 'node', 'left')
             ranks = upd.select(
                 'node',
-                F.expr(
-                    f'CAST({base} + ({num} * coalesce(__inc, 0))'
-                    f' DIV {den} AS BIGINT)').alias('r'),
+                (F.lit(base)
+                 + damping * F.coalesce('__inc', F.lit(0.0)))
+                .alias('r'),
             )
-            if (it + 1) % checkpoint_every == 0 \
-                    or it == iterations - 1:
+            if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
                 ranks = cut(ranks, eager=False)
-        return ranks.select('node', F.col('r').alias('rank'))
-
-    ranks = nodes.select('node', F.lit(1.0 / n).alias('r'))
-    base = (1.0 - damping) / n
-    for it in range(iterations):
-        r = F.broadcast(ranks) if bcast else ranks
-        inc = (
-            r.join(ed, r['node'] == ed['src'])
-            .select(F.col('dst').alias('node'),
-                    (F.col('r') / F.col('od')).alias('__c'))
-        )
-        agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
-        upd = agg if cover else nodes.join(agg, 'node', 'left')
-        ranks = upd.select(
-            'node',
-            (F.lit(base)
-             + damping * F.coalesce('__inc', F.lit(0.0)))
-            .alias('r'),
-        )
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = cut(ranks, eager=False)
-    return ranks.select('node', F.col('r').alias('rank'))
+        return s.result(ranks).select('node', F.col('r').alias('rank'))
 
 
 def hits(
@@ -504,72 +510,73 @@ def hits(
     if iterations < 1:
         raise ValueError('iterations must be >= 1')
 
-    e = edges.select(F.col(src).cast('long').alias('src'),
-                     F.col(dst).cast('long').alias('dst')).distinct()
-    # the checkpointed edge frame (the repartition normalizes the
-    # checkpoint's block parallelism — it does NOT survive the cut
-    # as a physical partitioning, OPTIMIZATION_r15.md §18)
-    e_by_src = e.repartition('src').transform(cut)
-    # node sets derive from the MATERIALIZED edge frame: every
-    # downstream use (h init, the final outer join — which the
-    # caller may scan more than once) then reads a checkpointed RDD
-    # instead of re-running the caller's whole edge build per use
-    # (observed: the upstream lineitem⋈orders build re-executed four
-    # times in the final action's plan).
-    srcs = e_by_src.select(F.col('src').alias('node')).distinct() \
-        .transform(cut)
-    dsts = e_by_src.select(F.col('dst').alias('node')).distinct() \
-        .transform(cut)
-    nodes = srcs.unionByName(dsts).distinct().transform(cut)
-    bcast = 0 < nodes.count() <= broadcast_state_nodes
-    # with the state broadcast the half-step joins never exchange
-    # the edge frame, so ONE materialized copy serves both
-    # orientations; the sort-merge fallback keeps a second copy
-    # whose build reads the checkpointed frame, not the raw lineage
-    e_by_dst = e_by_src if bcast \
-        else e_by_src.repartition('dst').transform(cut)
+    with scope() as s:
+        e = edges.select(F.col(src).cast('long').alias('src'),
+                         F.col(dst).cast('long').alias('dst')).distinct()
+        # the checkpointed edge frame (the repartition normalizes the
+        # checkpoint's block parallelism — it does NOT survive the cut
+        # as a physical partitioning, OPTIMIZATION_r15.md §18)
+        e_by_src = e.repartition('src').transform(cut)
+        # node sets derive from the MATERIALIZED edge frame: every
+        # downstream use (h init, the final outer join — which the
+        # caller may scan more than once) then reads a checkpointed RDD
+        # instead of re-running the caller's whole edge build per use
+        # (observed: the upstream lineitem⋈orders build re-executed four
+        # times in the final action's plan).
+        srcs = e_by_src.select(F.col('src').alias('node')).distinct() \
+            .transform(cut)
+        dsts = e_by_src.select(F.col('dst').alias('node')).distinct() \
+            .transform(cut)
+        nodes = srcs.unionByName(dsts).distinct().transform(cut)
+        bcast = 0 < nodes.count() <= broadcast_state_nodes
+        # with the state broadcast the half-step joins never exchange
+        # the edge frame, so ONE materialized copy serves both
+        # orientations; the sort-merge fallback keeps a second copy
+        # whose build reads the checkpointed frame, not the raw lineage
+        e_by_dst = e_by_src if bcast \
+            else e_by_src.repartition('dst').transform(cut)
 
-    one = F.lit(1).cast('long') if mode == 'integer' else F.lit(1.0)
-    h = srcs.select('node', one.alias('h'))
-    a = None
-    for _ in range(iterations):
-        # checkpoint the PRE-norm aggregate and apply the norm as a
-        # projection over the cut: the norm's own ``first()`` then
-        # materializes the very frame the next half-step reads,
-        # instead of executing the join+aggregate once for the norm
-        # job and again for the (previously post-norm) checkpoint —
-        # one join+aggregate per half-step, not two.  Values are
-        # unchanged: the division happens on the same aggregate rows
-        # either side of the cut.
-        hh = F.broadcast(h) if bcast else h
-        a = cut(
-            e_by_src.join(hh, e_by_src['src'] == hh['node'])
-            .groupBy(F.col('dst').alias('node'))
-            .agg(F.sum('h').alias('a'))
+        one = F.lit(1).cast('long') if mode == 'integer' else F.lit(1.0)
+        h = srcs.select('node', one.alias('h'))
+        a = None
+        for _ in range(iterations):
+            # checkpoint the PRE-norm aggregate and apply the norm as a
+            # projection over the cut: the norm's own ``first()`` then
+            # materializes the very frame the next half-step reads,
+            # instead of executing the join+aggregate once for the norm
+            # job and again for the (previously post-norm) checkpoint —
+            # one join+aggregate per half-step, not two.  Values are
+            # unchanged: the division happens on the same aggregate rows
+            # either side of the cut.
+            hh = F.broadcast(h) if bcast else h
+            a = cut(
+                e_by_src.join(hh, e_by_src['src'] == hh['node'])
+                .groupBy(F.col('dst').alias('node'))
+                .agg(F.sum('h').alias('a'))
+            )
+            if mode == 'float':
+                norm = a.agg(
+                    F.sqrt(F.sum(F.col('a') * F.col('a')))).first()[0]
+                a = a.select('node', (F.col('a') / norm).alias('a'))
+            aa = F.broadcast(a) if bcast else a
+            h = cut(
+                e_by_dst.join(aa, e_by_dst['dst'] == aa['node'])
+                .groupBy(F.col('src').alias('node'))
+                .agg(F.sum('a').alias('h'))
+            )
+            if mode == 'float':
+                norm = h.agg(
+                    F.sqrt(F.sum(F.col('h') * F.col('h')))).first()[0]
+                h = h.select('node', (F.col('h') / norm).alias('h'))
+        zero = F.lit(0).cast('long') if mode == 'integer' else F.lit(0.0)
+        return s.result(
+            nodes
+            .join(F.broadcast(h) if bcast else h, 'node', 'left')
+            .join(F.broadcast(a) if bcast else a, 'node', 'left')
+            .select('node',
+                    F.coalesce('h', zero).alias('hub'),
+                    F.coalesce('a', zero).alias('authority'))
         )
-        if mode == 'float':
-            norm = a.agg(
-                F.sqrt(F.sum(F.col('a') * F.col('a')))).first()[0]
-            a = a.select('node', (F.col('a') / norm).alias('a'))
-        aa = F.broadcast(a) if bcast else a
-        h = cut(
-            e_by_dst.join(aa, e_by_dst['dst'] == aa['node'])
-            .groupBy(F.col('src').alias('node'))
-            .agg(F.sum('a').alias('h'))
-        )
-        if mode == 'float':
-            norm = h.agg(
-                F.sqrt(F.sum(F.col('h') * F.col('h')))).first()[0]
-            h = h.select('node', (F.col('h') / norm).alias('h'))
-    zero = F.lit(0).cast('long') if mode == 'integer' else F.lit(0.0)
-    return (
-        nodes
-        .join(F.broadcast(h) if bcast else h, 'node', 'left')
-        .join(F.broadcast(a) if bcast else a, 'node', 'left')
-        .select('node',
-                F.coalesce('h', zero).alias('hub'),
-                F.coalesce('a', zero).alias('authority'))
-    )
 
 
 def personalized_pagerank(
@@ -611,7 +618,7 @@ def personalized_pagerank(
     nodes unreachable from them score 0 (integer) / ~0 (float).
     """
     # Per-round cuts are LAZY here (fixed-iteration loop, no
-    # mid-loop actions): the final action materializes the whole
+    # mid-loop actions): the result cut materializes the whole
     # round chain stage-by-stage in ONE job instead of one eager
     # scheduler job per round — same stages, fewer job round-trips
     # (the connected_components precedent; ops with limit/count
@@ -619,111 +626,112 @@ def personalized_pagerank(
     if mode not in ('float', 'integer'):
         raise ValueError(
             f"mode must be 'float' or 'integer', got {mode!r}")
-    # Materialize the distinct edge frame FIRST — see the identical
-    # cut in :func:`pagerank`: the flagged-node and degree-edge
-    # lineage cuts would otherwise each re-execute the caller's
-    # whole edge build during their plan compile.
-    e = edges.select(F.col(src).cast('long').alias('src'),
-                     F.col(dst).cast('long').alias('dst')) \
-        .distinct().transform(cut, eager=False)
-    nodes = (
-        e.select(F.col('src').alias('node'))
-        .unionByName(e.select(F.col('dst').alias('node')))
-        .distinct()
-    )
-    seed_nodes = (
-        seeds.select(F.col(seed_col).cast('long').alias('node'))
-        .distinct()
-        .join(nodes, 'node', 'left_semi')
-    )
-    flagged = nodes.join(
-        F.broadcast(seed_nodes.withColumn('__seed', F.lit(1))),
-        'node', 'left').transform(cut, eager=False)
-    # one materializing job returns BOTH counts (seed count for the
-    # teleport mass, node count for the broadcast-state decision)
-    row = flagged.agg(
-        F.count(F.lit(1)).alias('__n'),
-        F.count('__seed').alias('__s')).first()
-    n, s = row['__n'], row['__s']
-    if s == 0:
-        raise ValueError('no seed appears in the edge list')
-    bcast = 0 < n <= broadcast_state_nodes
-    # disjoint union — see the pagerank self_loops='all' note: `e`
-    # is distinct and the self-loop frame is distinct, so filtering
-    # existing self-edges first removes the post-union distinct (a
-    # full exchange + dedup of the edge set).  Self-loops derive
-    # from the CHECKPOINTED flagged frame (the node set + flag), not
-    # the raw `nodes` lineage — the degree build below then reads
-    # two materialized RDDs and nothing else.
-    e = e.filter(F.col('src') != F.col('dst')).unionByName(
-        flagged.select(F.col('node').alias('src'),
-                       F.col('node').alias('dst')))
-    deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
-    ed = e.join(deg, 'src').repartition('src').transform(cut, eager=False)
+    with scope() as held:
+        # Materialize the distinct edge frame FIRST — see the identical
+        # cut in :func:`pagerank`: the flagged-node and degree-edge
+        # lineage cuts would otherwise each re-execute the caller's
+        # whole edge build during their plan compile.
+        e = edges.select(F.col(src).cast('long').alias('src'),
+                         F.col(dst).cast('long').alias('dst')) \
+            .distinct().transform(cut, eager=False)
+        nodes = (
+            e.select(F.col('src').alias('node'))
+            .unionByName(e.select(F.col('dst').alias('node')))
+            .distinct()
+        )
+        seed_nodes = (
+            seeds.select(F.col(seed_col).cast('long').alias('node'))
+            .distinct()
+            .join(nodes, 'node', 'left_semi')
+        )
+        flagged = nodes.join(
+            F.broadcast(seed_nodes.withColumn('__seed', F.lit(1))),
+            'node', 'left').transform(cut, eager=False)
+        # one materializing job returns BOTH counts (seed count for the
+        # teleport mass, node count for the broadcast-state decision)
+        row = flagged.agg(
+            F.count(F.lit(1)).alias('__n'),
+            F.count('__seed').alias('__s')).first()
+        n, s = row['__n'], row['__s']
+        if s == 0:
+            raise ValueError('no seed appears in the edge list')
+        bcast = 0 < n <= broadcast_state_nodes
+        # disjoint union — see the pagerank self_loops='all' note: `e`
+        # is distinct and the self-loop frame is distinct, so filtering
+        # existing self-edges first removes the post-union distinct (a
+        # full exchange + dedup of the edge set).  Self-loops derive
+        # from the CHECKPOINTED flagged frame (the node set + flag), not
+        # the raw `nodes` lineage — the degree build below then reads
+        # two materialized RDDs and nothing else.
+        e = e.filter(F.col('src') != F.col('dst')).unionByName(
+            flagged.select(F.col('node').alias('src'),
+                           F.col('node').alias('dst')))
+        deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
+        ed = e.join(deg, 'src').repartition('src').transform(cut, eager=False)
 
-    frac = Fraction(damping).limit_denominator(1000)
-    num, den = frac.numerator, frac.denominator
-    is_seed = F.col('__seed').isNotNull()
-    # Every node carries a self-edge, so the per-round aggregate
-    # covers every node (same argument as pagerank self_loops='all').
-    # The per-round teleport only needs the seed FLAG, which the tiny
-    # seed set provides via a broadcast join — replacing the shuffle
-    # join against the full flagged node frame with a zero-shuffle
-    # broadcast hash join (guide §3.1); the rank state keeps its
-    # groupBy partitioning for the next round's edge join.  Derive
-    # the seed rows from the CHECKPOINTED flagged frame: building
-    # them from the raw seed lineage would re-run the whole edge
-    # scan inside every round's broadcast build.
-    seed_marks = flagged.filter(is_seed).select('node', '__seed')
+        frac = Fraction(damping).limit_denominator(1000)
+        num, den = frac.numerator, frac.denominator
+        is_seed = F.col('__seed').isNotNull()
+        # Every node carries a self-edge, so the per-round aggregate
+        # covers every node (same argument as pagerank self_loops='all').
+        # The per-round teleport only needs the seed FLAG, which the tiny
+        # seed set provides via a broadcast join — replacing the shuffle
+        # join against the full flagged node frame with a zero-shuffle
+        # broadcast hash join (guide §3.1); the rank state keeps its
+        # groupBy partitioning for the next round's edge join.  Derive
+        # the seed rows from the CHECKPOINTED flagged frame: building
+        # them from the raw seed lineage would re-run the whole edge
+        # scan inside every round's broadcast build.
+        seed_marks = flagged.filter(is_seed).select('node', '__seed')
 
-    if mode == 'integer':
-        base = (den - num) * scale // (den * s)
+        if mode == 'integer':
+            base = (den - num) * scale // (den * s)
+            ranks = flagged.select(
+                'node', F.when(is_seed, scale // s)
+                .otherwise(0).cast('long').alias('r'))
+            for it in range(iterations):
+                r = F.broadcast(ranks) if bcast else ranks
+                inc = (
+                    r.join(ed, r['node'] == ed['src'])
+                    .select(F.col('dst').alias('node'),
+                            F.expr('r DIV od').alias('__c'))
+                )
+                agg = inc.groupBy('node').agg(
+                    F.sum('__c').alias('__inc'))
+                ranks = agg.join(
+                    F.broadcast(seed_marks), 'node', 'left'
+                ).select(
+                    'node',
+                    (F.when(is_seed, base).otherwise(0)
+                     + F.expr(f'({num} * coalesce(__inc, 0))'
+                              f' DIV {den}')).cast('bigint').alias('r'),
+                )
+                if (it + 1) % checkpoint_every == 0 \
+                        or it == iterations - 1:
+                    ranks = cut(ranks, eager=False)
+            return held.result(ranks).select('node', F.col('r').alias('rank'))
+
+        base = (1.0 - damping) / s
         ranks = flagged.select(
-            'node', F.when(is_seed, scale // s)
-            .otherwise(0).cast('long').alias('r'))
+            'node', F.when(is_seed, 1.0 / s).otherwise(0.0).alias('r'))
         for it in range(iterations):
             r = F.broadcast(ranks) if bcast else ranks
             inc = (
                 r.join(ed, r['node'] == ed['src'])
                 .select(F.col('dst').alias('node'),
-                        F.expr('r DIV od').alias('__c'))
+                        (F.col('r') / F.col('od')).alias('__c'))
             )
-            agg = inc.groupBy('node').agg(
-                F.sum('__c').alias('__inc'))
+            agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
             ranks = agg.join(
                 F.broadcast(seed_marks), 'node', 'left'
             ).select(
                 'node',
-                (F.when(is_seed, base).otherwise(0)
-                 + F.expr(f'({num} * coalesce(__inc, 0))'
-                          f' DIV {den}')).cast('bigint').alias('r'),
+                (F.when(is_seed, base).otherwise(0.0)
+                 + damping * F.coalesce('__inc', F.lit(0.0))).alias('r'),
             )
-            if (it + 1) % checkpoint_every == 0 \
-                    or it == iterations - 1:
+            if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
                 ranks = cut(ranks, eager=False)
-        return ranks.select('node', F.col('r').alias('rank'))
-
-    base = (1.0 - damping) / s
-    ranks = flagged.select(
-        'node', F.when(is_seed, 1.0 / s).otherwise(0.0).alias('r'))
-    for it in range(iterations):
-        r = F.broadcast(ranks) if bcast else ranks
-        inc = (
-            r.join(ed, r['node'] == ed['src'])
-            .select(F.col('dst').alias('node'),
-                    (F.col('r') / F.col('od')).alias('__c'))
-        )
-        agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
-        ranks = agg.join(
-            F.broadcast(seed_marks), 'node', 'left'
-        ).select(
-            'node',
-            (F.when(is_seed, base).otherwise(0.0)
-             + damping * F.coalesce('__inc', F.lit(0.0))).alias('r'),
-        )
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = cut(ranks, eager=False)
-    return ranks.select('node', F.col('r').alias('rank'))
+        return held.result(ranks).select('node', F.col('r').alias('rank'))
 
 
 def harmonic_centrality(
@@ -761,59 +769,60 @@ def harmonic_centrality(
     total is engine-exact (one division per hop level, never a
     row-order-dependent float sum).
     """
-    e = edges.select(F.col(src).cast('long').alias('s'),
-                     F.col(dst).cast('long').alias('d')).distinct()
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-        ).distinct()
-    e = e.repartition('s').transform(cut)
-    nodes = (e.select(F.col('s').alias('node'))
-             .unionByName(e.select(F.col('d').alias('node')))
-             .distinct().transform(cut))
-    # (root, node) pairs at minimum hop; roots walk FORWARD along
-    # edges, so node v accumulates the roots that REACH it.
-    frontier = nodes.select(F.col('node').alias('root'),
-                            F.col('node').alias('n'))
-    # The visited-pair state is the big frame here (O(reached
-    # pairs)): keep it as the UNION of the per-hop checkpointed
-    # frontiers instead of re-materializing the whole growing set
-    # every round — each pair is written once, at the hop that
-    # discovered it.
-    seen = frontier.transform(cut)
-    per_hop = None
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier['n'] == e['s'])
-            .select('root', F.col('d').alias('n')).distinct()
-            .join(seen, ['root', 'n'], 'left_anti')
-            .transform(cut)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        counts = nxt.groupBy(F.col('n').alias('node')).agg(
-            F.count(F.lit(1)).alias(f'__c{hop}'))
-        per_hop = counts if per_hop is None else (
-            per_hop.join(counts, 'node', 'outer'))
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    if per_hop is None:
-        return nodes.select(
-            'node', F.lit(0).cast('bigint').alias('n_reached'),
-            F.lit(0.0).alias('harmonic'))
-    hop_cols = [c for c in per_hop.columns if c.startswith('__c')]
-    out = nodes.join(per_hop, 'node', 'left')
-    reached = None
-    harm = None
-    for c in hop_cols:
-        h = int(c[3:])
-        cnt = F.coalesce(F.col(c), F.lit(0)).cast('bigint')
-        reached = cnt if reached is None else reached + cnt
-        term = cnt.cast('double') / F.lit(float(h))
-        harm = term if harm is None else harm + term
-    return out.select(
-        'node', reached.alias('n_reached'),
-        F.round(harm, 6).alias('harmonic'))
+    with scope() as s:
+        e = edges.select(F.col(src).cast('long').alias('s'),
+                         F.col(dst).cast('long').alias('d')).distinct()
+        if not directed:
+            e = e.unionByName(
+                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
+            ).distinct()
+        e = e.repartition('s').transform(cut)
+        nodes = (e.select(F.col('s').alias('node'))
+                 .unionByName(e.select(F.col('d').alias('node')))
+                 .distinct().transform(cut))
+        # (root, node) pairs at minimum hop; roots walk FORWARD along
+        # edges, so node v accumulates the roots that REACH it.
+        frontier = nodes.select(F.col('node').alias('root'),
+                                F.col('node').alias('n'))
+        # The visited-pair state is the big frame here (O(reached
+        # pairs)): keep it as the UNION of the per-hop checkpointed
+        # frontiers instead of re-materializing the whole growing set
+        # every round — each pair is written once, at the hop that
+        # discovered it.
+        seen = frontier.transform(cut)
+        per_hop = None
+        for hop in range(1, max_hops + 1):
+            nxt = (
+                frontier.join(e, frontier['n'] == e['s'])
+                .select('root', F.col('d').alias('n')).distinct()
+                .join(seen, ['root', 'n'], 'left_anti')
+                .transform(cut)
+            )
+            if nxt.limit(1).count() == 0:
+                break
+            counts = nxt.groupBy(F.col('n').alias('node')).agg(
+                F.count(F.lit(1)).alias(f'__c{hop}'))
+            per_hop = counts if per_hop is None else (
+                per_hop.join(counts, 'node', 'outer'))
+            seen = seen.unionByName(nxt)
+            frontier = nxt
+        if per_hop is None:
+            return s.result(nodes).select(
+                'node', F.lit(0).cast('bigint').alias('n_reached'),
+                F.lit(0.0).alias('harmonic'))
+        hop_cols = [c for c in per_hop.columns if c.startswith('__c')]
+        out = nodes.join(per_hop, 'node', 'left')
+        reached = None
+        harm = None
+        for c in hop_cols:
+            h = int(c[3:])
+            cnt = F.coalesce(F.col(c), F.lit(0)).cast('bigint')
+            reached = cnt if reached is None else reached + cnt
+            term = cnt.cast('double') / F.lit(float(h))
+            harm = term if harm is None else harm + term
+        return s.result(out.select(
+            'node', reached.alias('n_reached'),
+            F.round(harm, 6).alias('harmonic')))
 
 
 # bias-correction constants alpha_m for the HLL estimator, keyed by
@@ -861,72 +870,73 @@ def hyperball_centrality(
     """
     if p < 4:
         raise ValueError(f'p must be >= 4, got {p!r}')
-    m = 1 << p
-    alpha = _HLL_ALPHA.get(p, 0.7213 / (1 + 1.079 / m))
-    e = edges.select(F.col(src).cast('long').alias('s'),
-                     F.col(dst).cast('long').alias('d')).distinct()
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-        ).distinct()
-    e = e.repartition('s').transform(cut)
-    nodes = (e.select(F.col('s').alias('node'))
-             .unionByName(e.select(F.col('d').alias('node')))
-             .distinct())
-    # portable 60-bit hash: first 15 hex chars of md5(node)
-    h = F.conv(F.substring(F.md5(F.col('node').cast('string')),
-                           1, 15), 16, 10).cast('long')
-    idx = (h % m).cast('int')
-    w = F.shiftrightunsigned(h, p)
-    rank = F.when(w == 0, F.lit(60 - p + 1)).otherwise(
-        F.lit(60 - p + 1) - F.length(F.bin(w))).cast('int')
-    regs = (
-        nodes.select('node', idx.alias('__idx'), rank.alias('__rk'))
-        .select('node', '__idx', '__rk',
-                F.explode(F.sequence(F.lit(0), F.lit(m - 1)))
-                .alias('register'))
-        .select('node', 'register',
-                F.when(F.col('register') == F.col('__idx'),
-                       F.col('__rk')).otherwise(F.lit(0))
-                .alias('rank'))
-        .transform(cut)
-    )
-
-    def estimate(r: SparkDF, out: str) -> SparkDF:
-        per = r.groupBy('node').agg(
-            F.sum(F.pow(F.lit(2.0), -F.col('rank'))).alias('__z'),
-            F.sum(F.when(F.col('rank') == 0, 1).otherwise(0))
-            .alias('__v'))
-        raw = F.lit(alpha * m * m) / F.col('__z')
-        small = (raw <= F.lit(2.5 * m)) & (F.col('__v') > 0)
-        est = F.when(
-            small, F.lit(float(m)) * F.log(F.lit(float(m))
-                                           / F.col('__v'))
-        ).otherwise(raw)
-        return per.select('node', est.alias(out))
-
-    balls = estimate(regs, 'e0')
-    for hop in range(1, max_hops + 1):
-        inbound = (
-            e.join(regs, regs['node'] == e['s'])
-            .select(F.col('d').alias('node'), 'register', 'rank')
-        )
+    with scope() as s:
+        m = 1 << p
+        alpha = _HLL_ALPHA.get(p, 0.7213 / (1 + 1.079 / m))
+        e = edges.select(F.col(src).cast('long').alias('s'),
+                         F.col(dst).cast('long').alias('d')).distinct()
+        if not directed:
+            e = e.unionByName(
+                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
+            ).distinct()
+        e = e.repartition('s').transform(cut)
+        nodes = (e.select(F.col('s').alias('node'))
+                 .unionByName(e.select(F.col('d').alias('node')))
+                 .distinct())
+        # portable 60-bit hash: first 15 hex chars of md5(node)
+        h = F.conv(F.substring(F.md5(F.col('node').cast('string')),
+                               1, 15), 16, 10).cast('long')
+        idx = (h % m).cast('int')
+        w = F.shiftrightunsigned(h, p)
+        rank = F.when(w == 0, F.lit(60 - p + 1)).otherwise(
+            F.lit(60 - p + 1) - F.length(F.bin(w))).cast('int')
         regs = (
-            regs.unionByName(inbound)
-            .groupBy('node', 'register')
-            .agg(F.max('rank').alias('rank'))
+            nodes.select('node', idx.alias('__idx'), rank.alias('__rk'))
+            .select('node', '__idx', '__rk',
+                    F.explode(F.sequence(F.lit(0), F.lit(m - 1)))
+                    .alias('register'))
+            .select('node', 'register',
+                    F.when(F.col('register') == F.col('__idx'),
+                           F.col('__rk')).otherwise(F.lit(0))
+                    .alias('rank'))
             .transform(cut)
         )
-        balls = balls.join(estimate(regs, f'e{hop}'), 'node')
-    reached = None
-    harm = None
-    for hop in range(1, max_hops + 1):
-        inc = F.greatest(
-            F.col(f'e{hop}') - F.col(f'e{hop - 1}'), F.lit(0.0))
-        reached = inc if reached is None else reached + inc
-        term = inc / F.lit(float(hop))
-        harm = term if harm is None else harm + term
-    return balls.select(
-        'node',
-        F.round(reached, 6).alias('reached_approx'),
-        F.round(harm, 6).alias('harmonic_approx'))
+
+        def estimate(r: SparkDF, out: str) -> SparkDF:
+            per = r.groupBy('node').agg(
+                F.sum(F.pow(F.lit(2.0), -F.col('rank'))).alias('__z'),
+                F.sum(F.when(F.col('rank') == 0, 1).otherwise(0))
+                .alias('__v'))
+            raw = F.lit(alpha * m * m) / F.col('__z')
+            small = (raw <= F.lit(2.5 * m)) & (F.col('__v') > 0)
+            est = F.when(
+                small, F.lit(float(m)) * F.log(F.lit(float(m))
+                                               / F.col('__v'))
+            ).otherwise(raw)
+            return per.select('node', est.alias(out))
+
+        balls = estimate(regs, 'e0')
+        for hop in range(1, max_hops + 1):
+            inbound = (
+                e.join(regs, regs['node'] == e['s'])
+                .select(F.col('d').alias('node'), 'register', 'rank')
+            )
+            regs = (
+                regs.unionByName(inbound)
+                .groupBy('node', 'register')
+                .agg(F.max('rank').alias('rank'))
+                .transform(cut)
+            )
+            balls = balls.join(estimate(regs, f'e{hop}'), 'node')
+        reached = None
+        harm = None
+        for hop in range(1, max_hops + 1):
+            inc = F.greatest(
+                F.col(f'e{hop}') - F.col(f'e{hop - 1}'), F.lit(0.0))
+            reached = inc if reached is None else reached + inc
+            term = inc / F.lit(float(hop))
+            harm = term if harm is None else harm + term
+        return s.result(balls.select(
+            'node',
+            F.round(reached, 6).alias('reached_approx'),
+            F.round(harm, 6).alias('harmonic_approx')))

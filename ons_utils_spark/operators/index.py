@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .lineage import cut
+from .lineage import cut, scope
 from .text import normalize_text, tokenize
 
 __all__ = ['build_inverted_index', 'search_all_terms', 'bm25_rank',
@@ -221,72 +221,73 @@ def bm25_multi_rank(
     across queries.  No SQL score oracle (ln-float sums, same as
     ``bm25_rank``); rank-level results are engine-stable.
     """
-    qt = (
-        queries.select(
-            F.col(query_id).alias('__q'),
-            F.explode(terms_col).alias('token'))
-        .select('__q', F.lower('token').alias('token'))
-        .distinct())
-    toks = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias('__doc'),
-                F.explode(
-                    tokenize(normalize_text(text_col))).alias('token'))
-    )
-    # ONE corpus tokenize pass computes doc lengths AND matched term
-    # frequencies: unmatched tokens collapse onto a per-doc NULL key
-    # in the same (__doc, token)-keyed aggregation (a broadcast left
-    # join against the distinct term set marks matches), so the old
-    # second explode pass — and its separate doc-length shuffle — is
-    # gone.  Grouping unmatched tokens under NULL keeps the exchange
-    # one row per (doc, matched term) plus one per doc, the same
-    # bytes the tf shuffle alone used to move.  The lazy lineage cut
-    # is what makes the sharing real: ``per`` feeds FOUR consumers
-    # (tf chain, df, dl, global stats) and without the cut Catalyst
-    # specializes the join per branch (the tf branch's not-null
-    # filter turns it back into an inner join) so no two branches
-    # share an exchange — the plan re-tokenized the corpus four
-    # times (counted in plans/r15/q_bm25_hard_negatives_before.txt).
-    # ``per`` is one row per document plus one per (document,
-    # matched term) — corpus-COUNT-scale, never corpus-BYTES-scale —
-    # so materializing it is cheap at any corpus size.
-    marks = F.broadcast(
-        qt.select('token').distinct().withColumn('__m', F.lit(1)))
-    per = (
-        toks.join(marks, 'token', 'left')
-        .groupBy('__doc',
-                 F.when(F.col('__m') == 1, F.col('token'))
-                 .alias('token'))
-        .agg(F.count(F.lit(1)).alias('__tf'))
-        .transform(cut, eager=False)
-    )
-    dl = per.groupBy('__doc').agg(F.sum('__tf').alias('__dl'))
-    stats = dl.agg(F.avg('__dl').alias('__avgdl'),
-                   F.count(F.lit(1)).alias('__n'))
-    tf = per.filter(F.col('token').isNotNull())
-    dfreq = tf.groupBy('token').agg(
-        F.count(F.lit(1)).alias('__df'))
-    scored = (
-        tf.join(F.broadcast(qt), 'token')
-        .join(F.broadcast(dfreq), 'token')
-        .join(dl, '__doc')
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        1.0 + (F.col('__n') - F.col('__df') + 0.5)
-        / (F.col('__df') + 0.5))
-    tf_norm = (
-        F.col('__tf') * (k1 + 1)
-        / (F.col('__tf')
-           + k1 * (1 - b + b * F.col('__dl') / F.col('__avgdl')))
-    )
-    return (
-        scored.select('__q', '__doc', (idf * tf_norm).alias('__s'))
-        .groupBy('__q', '__doc')
-        .agg(F.sum('__s').alias('score'))
-        .select(F.col('__q').alias(query_id),
-                F.col('__doc').alias(id_col), 'score')
-    )
+    with scope() as s:
+        qt = (
+            queries.select(
+                F.col(query_id).alias('__q'),
+                F.explode(terms_col).alias('token'))
+            .select('__q', F.lower('token').alias('token'))
+            .distinct())
+        toks = (
+            df.filter(F.col(text_col).isNotNull())
+            .select(F.col(id_col).alias('__doc'),
+                    F.explode(
+                        tokenize(normalize_text(text_col))).alias('token'))
+        )
+        # ONE corpus tokenize pass computes doc lengths AND matched term
+        # frequencies: unmatched tokens collapse onto a per-doc NULL key
+        # in the same (__doc, token)-keyed aggregation (a broadcast left
+        # join against the distinct term set marks matches), so the old
+        # second explode pass — and its separate doc-length shuffle — is
+        # gone.  Grouping unmatched tokens under NULL keeps the exchange
+        # one row per (doc, matched term) plus one per doc, the same
+        # bytes the tf shuffle alone used to move.  The lazy lineage cut
+        # is what makes the sharing real: ``per`` feeds FOUR consumers
+        # (tf chain, df, dl, global stats) and without the cut Catalyst
+        # specializes the join per branch (the tf branch's not-null
+        # filter turns it back into an inner join) so no two branches
+        # share an exchange — the plan re-tokenized the corpus four
+        # times (counted in plans/r15/q_bm25_hard_negatives_before.txt).
+        # ``per`` is one row per document plus one per (document,
+        # matched term) — corpus-COUNT-scale, never corpus-BYTES-scale —
+        # so materializing it is cheap at any corpus size.
+        marks = F.broadcast(
+            qt.select('token').distinct().withColumn('__m', F.lit(1)))
+        per = (
+            toks.join(marks, 'token', 'left')
+            .groupBy('__doc',
+                     F.when(F.col('__m') == 1, F.col('token'))
+                     .alias('token'))
+            .agg(F.count(F.lit(1)).alias('__tf'))
+            .transform(cut, eager=False)
+        )
+        dl = per.groupBy('__doc').agg(F.sum('__tf').alias('__dl'))
+        stats = dl.agg(F.avg('__dl').alias('__avgdl'),
+                       F.count(F.lit(1)).alias('__n'))
+        tf = per.filter(F.col('token').isNotNull())
+        dfreq = tf.groupBy('token').agg(
+            F.count(F.lit(1)).alias('__df'))
+        scored = (
+            tf.join(F.broadcast(qt), 'token')
+            .join(F.broadcast(dfreq), 'token')
+            .join(dl, '__doc')
+            .crossJoin(F.broadcast(stats))
+        )
+        idf = F.log(
+            1.0 + (F.col('__n') - F.col('__df') + 0.5)
+            / (F.col('__df') + 0.5))
+        tf_norm = (
+            F.col('__tf') * (k1 + 1)
+            / (F.col('__tf')
+               + k1 * (1 - b + b * F.col('__dl') / F.col('__avgdl')))
+        )
+        return s.result(
+            scored.select('__q', '__doc', (idf * tf_norm).alias('__s'))
+            .groupBy('__q', '__doc')
+            .agg(F.sum('__s').alias('score'))
+            .select(F.col('__q').alias(query_id),
+                    F.col('__doc').alias(id_col), 'score')
+        )
 
 
 def mine_hard_negatives(

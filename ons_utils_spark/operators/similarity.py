@@ -33,7 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
-from .lineage import cut
+from .lineage import cut, scope
 
 
 def cosine_topk(
@@ -1039,94 +1039,95 @@ def bitext_mine(
     come from FAISS).  k-nearest means are then means over each
     side's k best CANDIDATE cosines.
     """
-    s = src.select(F.col(src_id).alias('__sid'),
-                   F.col(src_vec).cast('array<double>').alias('__sv'))
-    t = tgt.select(F.col(tgt_id).alias('__tid'),
-                   F.col(tgt_vec).cast('array<double>').alias('__tv'))
-    cos = cosine_similarity(F.col('__sv'), F.col('__tv'))
-    if candidates is not None:
-        pairs = (
-            candidates
-            .select(F.col(src_id).alias('__sid'),
-                    F.col(tgt_id).alias('__tid'))
-            .distinct()
-            .join(s, '__sid')
-            .join(t, '__tid'))
-    else:
-        if broadcast_side == 'auto':
-            broadcast_side = 'tgt' if t.count() <= s.count() \
-                else 'src'
-        # Pre-partition the STREAM side by its id before the cross:
-        # the broadcast cross preserves the stream side's
-        # partitioning, so that side's top-k rank window below is
-        # satisfied without re-exchanging the whole |src|×|tgt|
-        # scored frame — one exchange of |stream| vector rows
-        # replaces one exchange of the cross product (guide §2.4:
-        # operations keyed the same way share one exchange; the
-        # other side's window still pays its full exchange).  The
-        # partition count is pinned to the session's shuffle
-        # parallelism: an unpinned column repartition gets
-        # AQE-coalesced on the (tiny) stream side, which would run
-        # the whole quadratic scoring pass in one task.
-        nparts = int(s.sparkSession.conf.get(
-            'spark.sql.shuffle.partitions'))
-        if broadcast_side == 'tgt':
-            pairs = s.repartition(nparts, '__sid') \
-                .crossJoin(F.broadcast(t))
-        elif broadcast_side == 'src':
-            pairs = t.repartition(nparts, '__tid') \
-                .crossJoin(F.broadcast(s))
+    with scope() as held:
+        s = src.select(F.col(src_id).alias('__sid'),
+                       F.col(src_vec).cast('array<double>').alias('__sv'))
+        t = tgt.select(F.col(tgt_id).alias('__tid'),
+                       F.col(tgt_vec).cast('array<double>').alias('__tv'))
+        cos = cosine_similarity(F.col('__sv'), F.col('__tv'))
+        if candidates is not None:
+            pairs = (
+                candidates
+                .select(F.col(src_id).alias('__sid'),
+                        F.col(tgt_id).alias('__tid'))
+                .distinct()
+                .join(s, '__sid')
+                .join(t, '__tid'))
         else:
-            raise ValueError(
-                "broadcast_side must be 'tgt', 'src' or 'auto', "
-                f'got {broadcast_side!r}')
-    scored = pairs.select('__sid', '__tid', cos.alias('cosine'))
-    w_s = Window.partitionBy('__sid').orderBy(
-        F.col('cosine').desc(), F.col('__tid').asc())
-    w_t = Window.partitionBy('__tid').orderBy(
-        F.col('cosine').desc(), F.col('__sid').asc())
-    # chained (not one select): the STREAM side's window must evaluate
-    # FIRST, while the frame still carries that side's pre-cross
-    # partitioning — evaluated second it would need its own full
-    # re-exchange of the scored frame, on top of the other window's.
-    ranks = [('__rs', F.row_number().over(w_s)),
-             ('__rt', F.row_number().over(w_t))]
-    if candidates is None and broadcast_side == 'src':
-        ranks.reverse()
-    ranked = scored
-    for name, rank in ranks:
-        ranked = ranked.withColumn(name, rank)
-    # Lineage cut on the candidate set (bounded by (|src|+|tgt|)×k):
-    # the hubness means, the margin join, and the mutual-best windows
-    # all reference this frame — without the cut each reference
-    # re-executes the scoring pass + both rank windows (the r15
-    # before-plan held TWELVE copies of the cross product).
-    cands0 = (
-        ranked.where((F.col('__rs') <= k) | (F.col('__rt') <= k))
-        .transform(cut, eager=False))
-    # per-side hubness denominators: mean of the k nearest cosines
-    mean_s = (cands0.where(F.col('__rs') <= k).groupBy('__sid')
-              .agg(F.avg('cosine').alias('__ms')))
-    mean_t = (cands0.where(F.col('__rt') <= k).groupBy('__tid')
-              .agg(F.avg('cosine').alias('__mt')))
-    cands = (cands0
-             .join(F.broadcast(mean_s), '__sid')
-             .join(F.broadcast(mean_t), '__tid')
-             .withColumn('margin',
-                         F.col('cosine')
-                         / ((F.col('__ms') + F.col('__mt')) / 2)))
-    out = cands.where(F.col('margin') >= threshold)
-    if mutual:
-        b_s = Window.partitionBy('__sid').orderBy(
-            F.col('margin').desc(), F.col('__tid').asc())
-        b_t = Window.partitionBy('__tid').orderBy(
-            F.col('margin').desc(), F.col('__sid').asc())
-        out = (out.withColumn('__bs', F.row_number().over(b_s))
-               .withColumn('__bt', F.row_number().over(b_t))
-               .where((F.col('__bs') == 1) & (F.col('__bt') == 1)))
-    return out.select(
-        F.col('__sid').alias(src_id), F.col('__tid').alias(tgt_id),
-        'cosine', 'margin')
+            if broadcast_side == 'auto':
+                broadcast_side = 'tgt' if t.count() <= s.count() \
+                    else 'src'
+            # Pre-partition the STREAM side by its id before the cross:
+            # the broadcast cross preserves the stream side's
+            # partitioning, so that side's top-k rank window below is
+            # satisfied without re-exchanging the whole |src|×|tgt|
+            # scored frame — one exchange of |stream| vector rows
+            # replaces one exchange of the cross product (guide §2.4:
+            # operations keyed the same way share one exchange; the
+            # other side's window still pays its full exchange).  The
+            # partition count is pinned to the session's shuffle
+            # parallelism: an unpinned column repartition gets
+            # AQE-coalesced on the (tiny) stream side, which would run
+            # the whole quadratic scoring pass in one task.
+            nparts = int(s.sparkSession.conf.get(
+                'spark.sql.shuffle.partitions'))
+            if broadcast_side == 'tgt':
+                pairs = s.repartition(nparts, '__sid') \
+                    .crossJoin(F.broadcast(t))
+            elif broadcast_side == 'src':
+                pairs = t.repartition(nparts, '__tid') \
+                    .crossJoin(F.broadcast(s))
+            else:
+                raise ValueError(
+                    "broadcast_side must be 'tgt', 'src' or 'auto', "
+                    f'got {broadcast_side!r}')
+        scored = pairs.select('__sid', '__tid', cos.alias('cosine'))
+        w_s = Window.partitionBy('__sid').orderBy(
+            F.col('cosine').desc(), F.col('__tid').asc())
+        w_t = Window.partitionBy('__tid').orderBy(
+            F.col('cosine').desc(), F.col('__sid').asc())
+        # chained (not one select): the STREAM side's window must evaluate
+        # FIRST, while the frame still carries that side's pre-cross
+        # partitioning — evaluated second it would need its own full
+        # re-exchange of the scored frame, on top of the other window's.
+        ranks = [('__rs', F.row_number().over(w_s)),
+                 ('__rt', F.row_number().over(w_t))]
+        if candidates is None and broadcast_side == 'src':
+            ranks.reverse()
+        ranked = scored
+        for name, rank in ranks:
+            ranked = ranked.withColumn(name, rank)
+        # Lineage cut on the candidate set (bounded by (|src|+|tgt|)×k):
+        # the hubness means, the margin join, and the mutual-best windows
+        # all reference this frame — without the cut each reference
+        # re-executes the scoring pass + both rank windows (the r15
+        # before-plan held TWELVE copies of the cross product).
+        cands0 = (
+            ranked.where((F.col('__rs') <= k) | (F.col('__rt') <= k))
+            .transform(cut, eager=False))
+        # per-side hubness denominators: mean of the k nearest cosines
+        mean_s = (cands0.where(F.col('__rs') <= k).groupBy('__sid')
+                  .agg(F.avg('cosine').alias('__ms')))
+        mean_t = (cands0.where(F.col('__rt') <= k).groupBy('__tid')
+                  .agg(F.avg('cosine').alias('__mt')))
+        cands = (cands0
+                 .join(F.broadcast(mean_s), '__sid')
+                 .join(F.broadcast(mean_t), '__tid')
+                 .withColumn('margin',
+                             F.col('cosine')
+                             / ((F.col('__ms') + F.col('__mt')) / 2)))
+        out = cands.where(F.col('margin') >= threshold)
+        if mutual:
+            b_s = Window.partitionBy('__sid').orderBy(
+                F.col('margin').desc(), F.col('__tid').asc())
+            b_t = Window.partitionBy('__tid').orderBy(
+                F.col('margin').desc(), F.col('__sid').asc())
+            out = (out.withColumn('__bs', F.row_number().over(b_s))
+                   .withColumn('__bt', F.row_number().over(b_t))
+                   .where((F.col('__bs') == 1) & (F.col('__bt') == 1)))
+        return held.result(out.select(
+            F.col('__sid').alias(src_id), F.col('__tid').alias(tgt_id),
+            'cosine', 'margin'))
 
 
 def maxsim_topk(

@@ -15,6 +15,7 @@ simhash), similarity search, text analysis, array diff.
 """
 from __future__ import annotations
 
+import contextvars
 import os
 from typing import Callable, Dict
 
@@ -29,6 +30,7 @@ from ..functions.schema import map_column_names
 from ..functions.windows import get_ordered_window_spec, get_window_spec
 from ..operators import ann_index as ann
 from ..operators import dedup as dd
+from ..operators import lineage
 from ..operators import similarity as sim
 from ..operators import text as tx
 from ..operators.concat import concat
@@ -801,6 +803,8 @@ _ANN_KEY_LOCKS: Dict[str, object] = {}
 
 
 def _artifact(key: str, build: 'Callable[[], object]'):
+    # build() runs outside every open lineage.scope (an empty context):
+    # the query that first builds an artifact must not free it
     with _ANN_LOCK:
         if key in _ANN_ARTIFACTS:
             return _ANN_ARTIFACTS[key]
@@ -808,7 +812,7 @@ def _artifact(key: str, build: 'Callable[[], object]'):
             key, __import__('threading').Lock())
     with lock:
         if key not in _ANN_ARTIFACTS:
-            _ANN_ARTIFACTS[key] = build()
+            _ANN_ARTIFACTS[key] = contextvars.Context().run(build)
     return _ANN_ARTIFACTS[key]
 
 
@@ -3955,7 +3959,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> SparkDF:
     # the CC iteration both read the checkpointed pair frame
     pairs = dd.winnow_dup_pairs(
         documents, 'doc_id', 'text', k=4, w=3,
-        min_shared=20).localCheckpoint(eager=False)
+        min_shared=20).transform(lineage.cut, eager=False)
     # LOUD guard (same pattern as q_incremental_winnow_dedup): the
     # oracle recovers components as least(x, min(partner)), which is
     # only the true component when the pair graph is a union of
@@ -4016,7 +4020,7 @@ def q_dedup_keep_best_embedding(spark: SparkSession,
                  .unionByName(_clone(20_000_000, 0.5))
     pairs = dd.embedding_near_duplicates(
         corpus, 'vec_id', 'embedding', threshold=0.95
-    ).localCheckpoint(eager=False)
+    ).transform(lineage.cut, eager=False)
     # LOUD guard: the oracle assumes the pair set is exactly the
     # planted within-family pairs (3 per family).  Pair count is
     # families-sized, so the collect is driver-bounded.

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import lineage
 from ..operators.dedup import (
     _reassemble_lines,
     embedding_band_index,
@@ -222,15 +223,16 @@ def _exactly_once_sink(stream: SparkDF, filter_step, out_dir: str,
                        bucket_cols, available_now: bool):
     """Start the ``foreachBatch`` sink that runs the module
     docstring's exactly-once protocol around one operator's
-    ``filter_step(batch_df, store, keep) -> (docs_out, store_rows)``.
+    ``filter_step(batch_df, store) -> (docs_out, store_rows)``.
 
     Per non-empty micro-batch: a committed batch is skipped; otherwise
     ``filter_step`` gets the store with the batch's own rows excluded
     (``None`` before the first commit) and returns lazy frames of the
     accepted docs and of the probe-key rows to store (bucketed on
     ``bucket_cols``); then the four appends run in protocol order.
-    ``keep(df)`` persists ``df`` for the rest of the batch; every kept
-    frame is released in one ``finally``, also when ``filter_step``
+    Each batch runs in its own :func:`lineage.scope`: every frame
+    the step keeps (:func:`lineage.keep`) or an operator it calls
+    cuts is released when the batch ends, also when ``filter_step``
     or an append raises.
     """
     spark = stream.sparkSession
@@ -251,14 +253,8 @@ def _exactly_once_sink(stream: SparkDF, filter_step, out_dir: str,
             # (a crashed attempt's rows would make the batch drop
             # against itself)
             store = store.filter(F.col('_batch_id') != batch_id)
-        kept = []
-
-        def keep(df: SparkDF) -> SparkDF:
-            kept.append(df.persist())
-            return df
-
-        try:
-            docs_out, store_rows = filter_step(batch_df, store, keep)
+        with lineage.scope():
+            docs_out, store_rows = filter_step(batch_df, store)
             fields = store_rows.schema.fields
             # begin FIRST: it is the only crash evidence a batch with
             # zero store rows leaves
@@ -282,9 +278,6 @@ def _exactly_once_sink(stream: SparkDF, filter_step, out_dir: str,
             _append_store(
                 _marker_row(spark, fields, batch_id, 'commit'),
                 store_dir, layout, bucket_cols)
-        finally:
-            for df in kept:
-                df.unpersist()
 
     return foreach_batch_sink(
         stream, process, checkpoint,
@@ -322,7 +315,7 @@ def incremental_exact_dedup(
 
     Returns the started streaming query.
     """
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         # 1. in-batch: lowest id per key
         clean = (
             batch_df.withColumn(
@@ -376,7 +369,7 @@ def incremental_winnow_dedup(
 
     Returns the started streaming query.
     """
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         # 1. in-batch dedup
         losers = (
             winnow_dup_pairs(batch_df, id_col, text_col,
@@ -388,8 +381,8 @@ def incremental_winnow_dedup(
         # (a <=_STORE_BUCKETS collect — the LINEAR cache-populate
         # action), the overlap join, and the store append all read
         # the same batch-sized frame.
-        fps = keep(winnow_fingerprints(clean, id_col, text_col,
-                                       k=k, w=w))
+        fps = lineage.keep(winnow_fingerprints(
+            clean, id_col, text_col, k=k, w=w))
         # 2. drop docs overlapping the store (the store read is
         # partition-pruned to the batch's fp buckets — equal fps
         # hash to equal buckets, so the dropped directories cannot
@@ -482,14 +475,14 @@ def incremental_minhash_dedup(
                 _shingler(shingles)(text_col, shingle_n))
             .alias('__hs'))
 
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         # 1. in-batch near-dedup (full LSH + verify + greedy)
         clean = minhash_dedup(
             batch_df, id_col, text_col, num_hashes, bands,
             shingle_n, jaccard_threshold, shingles,
             max_bucket_size=max_bucket_size)
         # band ONCE; three consumers (bucket list, probe, append)
-        band_rows = new_banded = keep(minhash_band_index(
+        band_rows = new_banded = lineage.keep(minhash_band_index(
             clean, id_col, text_col, num_hashes, bands, shingle_n,
             shingles=shingles))
         # 2. drop batch docs near-duplicating anything accepted
@@ -582,13 +575,13 @@ def incremental_simhash_dedup(
         simhash_index_probe,
     )
 
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         # 1. in-batch near-dedup (banding + Hamming verify + greedy)
         clean = simhash_dedup(
             batch_df, id_col, text_col, max_hamming=max_hamming,
             max_bucket_size=max_bucket_size)
         # sign ONCE; three consumers (bucket list, probe, append)
-        band_rows = new_banded = keep(simhash_block_index(
+        band_rows = new_banded = lineage.keep(simhash_block_index(
             clean, id_col, text_col, n_blocks))
         # 2. drop batch docs within max_hamming of anything accepted
         # (self-verifying: the store carries full signatures)
@@ -670,7 +663,7 @@ def incremental_embedding_dedup(
     """
     spark = vecs_stream.sparkSession
 
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         # 1. in-batch dedup (exact precision at any size: 'auto'
         # switches to LSH-then-verify past max_broadcast_rows)
         losers = (
@@ -688,7 +681,7 @@ def incremental_embedding_dedup(
         # second GEMM).  Kept: three consumers, and the first (the
         # <=_STORE_BUCKETS bucket-list collect) is a LINEAR action
         # that populates the cache race-free.
-        band_rows = new_banded = keep(embedding_band_index(
+        band_rows = new_banded = lineage.keep(embedding_band_index(
             clean, id_col, vec_col, dim=dim, bands=bands,
             planes_per_band=planes_per_band, seed=seed))
         # 2. drop vectors near-duplicating anything accepted (the
@@ -856,7 +849,7 @@ def incremental_line_dedup(
 
     Returns the started streaming query.
     """
-    def filter_step(batch_df: SparkDF, store, keep):
+    def filter_step(batch_df: SparkDF, store):
         other_cols = [c for c in batch_df.columns if c != text_col]
         lines = batch_df.select(
             *other_cols,

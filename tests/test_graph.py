@@ -375,8 +375,6 @@ def test_broadcast_state_paths_agree(spark_session):
     fixture scale) and the sort-merge fallback (threshold 0) must
     produce identical rows for every iterative operator."""
     import ons_utils_spark.operators.graph as G
-    from ons_utils_spark.operators.clustering import (
-        connected_components)
 
     edges = spark_session.createDataFrame(
         [(i, (i * 7) % 23) for i in range(40)] + [(3, 3), (5, 9)],
@@ -408,12 +406,4 @@ def test_broadcast_state_paths_agree(spark_session):
         edges, src, max_hops=3).collect()))
     b = sorted(map(tuple, G.bfs_levels(
         edges, src, max_hops=3, broadcast_state_nodes=0).collect()))
-    assert a == b and a
-
-    pairs = edges.selectExpr('src as id_a', 'dst as id_b')
-    a = sorted(map(tuple, connected_components(pairs).collect()))
-    # CC defaults to the sort-merge shape (the broadcast arm measured
-    # slower there) — exercise the broadcast path explicitly.
-    b = sorted(map(tuple, connected_components(
-        pairs, broadcast_state_nodes=4_000_000).collect()))
     assert a == b and a

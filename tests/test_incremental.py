@@ -1161,20 +1161,19 @@ class TestIncrementalLineDedup:
         assert got[11] == 'another fresh line'
 
 
-def _kept_rdds(spark) -> int:
-    """Persisted RDDs other than local checkpoints: what ``persist``
-    holds.  Operator lineage cuts (local checkpoints) are released by
-    garbage collection instead; tests/test_lineage.py covers them."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return sum(not rdds.get(k).rdd().isLocallyCheckpointed()
-               for k in rdds.keySet().toArray())
+def _kept_rdds(spark) -> set:
+    """Ids of every persisted RDD, local checkpoints included.  Tests
+    compare the ids a batch adds, so RDDs that earlier tests left to
+    the garbage collector may be freed meanwhile without effect."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs()
+               .keySet().toArray())
 
 
 @pytest.mark.slow
 class TestPerBatchRelease:
-    """Every frame a filter step keeps is unpersisted when its batch
-    ends, without waiting for garbage collection — also when the
-    step raises."""
+    """Every frame a filter step keeps, and every lineage cut of the
+    operators it calls, is unpersisted when its batch ends, without
+    waiting for garbage collection — also when the step raises."""
 
     DOCS = [
         (1, TestIncrementalMinhashDedup.BASE),
@@ -1217,18 +1216,19 @@ class TestPerBatchRelease:
         ).awaitTermination(300)
         assert spark_session.read.parquet(
             str(tmp_path / 'accepted')).count() >= 2
-        assert _kept_rdds(spark_session) == start
+        assert not _kept_rdds(spark_session) - start
 
     def test_raising_filter_step_releases_kept_frames(
             self, spark_session, tmp_path):
         from pyspark.errors import StreamingQueryException
 
+        from ons_utils_spark.operators.lineage import keep
         from ons_utils_spark.streaming.incremental import (
             _exactly_once_sink)
 
-        def filter_step(batch_df, store, keep):
+        def filter_step(batch_df, store):
             keep(batch_df.select('doc_id')).count()
-            assert _kept_rdds(spark_session) > start
+            assert _kept_rdds(spark_session) - start
             raise RuntimeError('filter step failed')
 
         start = _kept_rdds(spark_session)
@@ -1242,5 +1242,5 @@ class TestPerBatchRelease:
         with pytest.raises(StreamingQueryException,
                            match='filter step failed'):
             q.awaitTermination(300)
-        assert _kept_rdds(spark_session) == start
+        assert not _kept_rdds(spark_session) - start
         assert not (tmp_path / 'store').exists()

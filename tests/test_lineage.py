@@ -3,9 +3,11 @@
 Operators never choose between local and reliable cuts themselves:
 :func:`lineage.cut` reads the session's checkpoint directory, and a
 source scan keeps every other operator and streaming module from
-cutting lineage on its own.  In ``streaming/incremental.py`` only the
-exactly-once protocol function touches the commit helpers and the
-cache.  Cut RDDs are released once their frames are garbage.
+cutting lineage or persisting on its own.  In
+``streaming/incremental.py`` only the exactly-once protocol function
+touches the commit helpers.  A :func:`lineage.scope` frees what was
+cut or kept inside it when it exits; outside any scope, cut RDDs are
+released once their frames are garbage.
 """
 from __future__ import annotations
 
@@ -14,14 +16,20 @@ import gc
 import time
 from pathlib import Path
 
+import pytest
+
 import ons_utils_spark
+from ons_utils_spark.operators import lineage
 from ons_utils_spark.operators.clustering import connected_components
 from ons_utils_spark.operators.lineage import cut
 
 PACKAGE = Path(ons_utils_spark.__file__).parent
-CUT_CALLS = {'localCheckpoint', 'checkpoint', 'setCheckpointDir'}
+CUT_CALLS = {'localCheckpoint', 'checkpoint', 'setCheckpointDir',
+             'persist', 'cache'}
 PROTOCOL_CALLS = {'_batch_state', '_marker_row', '_append_store',
-                  'isEmpty', 'persist', 'unpersist'}
+                  'isEmpty'}
+SCOPED_QUERIES = ('q_pagerank', 'q_label_prop', 'q_dedup_keep_best',
+                  'q_bitext_mine', 'q_connected_components')
 
 
 def _call_sites(paths, names) -> set:
@@ -47,13 +55,18 @@ def test_only_cut_cuts_lineage():
     paths = [path for sub in ('operators', 'streaming')
              for path in sorted((PACKAGE / sub).rglob('*.py'))]
     assert _call_sites(paths, CUT_CALLS) == {
-        ('operators/lineage.py', 'cut')}
+        ('operators/lineage.py', 'cut'), ('operators/lineage.py', 'keep')}
 
 
 def test_only_the_commit_protocol_touches_store_and_cache():
     path = PACKAGE / 'streaming' / 'incremental.py'
     assert _call_sites([path], PROTOCOL_CALLS) == {
         ('streaming/incremental.py', '_exactly_once_sink')}
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs()
+               .keySet().toArray())
 
 
 def _release_garbage(spark):
@@ -72,12 +85,10 @@ def test_cut_rdds_are_released_once_results_are_garbage(spark_session):
     from ons_utils_spark.plans.queries import QUERIES
 
     def persisted():
-        return set(spark_session.sparkContext._jsc.getPersistentRDDs()
-                   .keySet().toArray())
+        return _persisted(spark_session)
 
     start = persisted()
-    for name in ('q_pagerank', 'q_label_prop', 'q_dedup_keep_best',
-                 'q_bitext_mine', 'q_connected_components'):
+    for name in SCOPED_QUERIES:
         QUERIES[name](spark_session, SF).collect()
     held = persisted() - start
     assert held
@@ -87,6 +98,60 @@ def test_cut_rdds_are_released_once_results_are_garbage(spark_session):
         time.sleep(0.5)
     assert not held & persisted()
     assert len(persisted()) <= len(start)
+
+
+def test_scope_releases_query_rdds_without_gc(spark_session):
+    """Built and collected inside a scope, each query leaves the
+    persisted-RDD set exactly as it found it — no garbage collector
+    runs."""
+    from test_round2_queries import SF
+
+    from ons_utils_spark.plans.queries import QUERIES
+
+    for name in SCOPED_QUERIES:
+        start = _persisted(spark_session)
+        with lineage.scope():
+            QUERIES[name](spark_session, SF).collect()
+        assert _persisted(spark_session) == start, name
+
+
+def _edges(spark):
+    return spark.createDataFrame(
+        [(i, (i * 7) % 23) for i in range(40)], 'src long, dst long')
+
+
+def test_operator_outside_a_scope_holds_only_its_result(spark_session):
+    """An operator frees its own intermediates when it returns; only
+    the materialized result's RDD stays, for the GC to release."""
+    from ons_utils_spark.operators.graph import pagerank
+
+    start = _persisted(spark_session)
+    ranks = pagerank(_edges(spark_session), iterations=3)
+    held = _persisted(spark_session) - start
+    assert len(held) == 1
+    assert len(ranks.collect()) == 40
+    assert _persisted(spark_session) - start == held
+
+
+def test_frame_read_after_its_scope_closed_raises(spark_session):
+    with lineage.scope():
+        inner = cut(_edges(spark_session).groupBy('dst').count())
+        assert inner.count() == 23
+    with pytest.raises(Exception, match='CHECKPOINT_RDD_BLOCK_ID'):
+        inner.collect()
+
+
+def test_result_moves_to_the_enclosing_scope(spark_session):
+    start = _persisted(spark_session)
+    with lineage.scope():
+        with lineage.scope() as s:
+            kept = lineage.keep(_edges(spark_session).select('src'))
+            out = s.result(kept.groupBy('src').count())
+        assert _persisted(spark_session) - start
+        assert out.count() == 40
+    assert _persisted(spark_session) == start
+    assert lineage.keep(spark_session.range(3)).count() == 3
+    assert _persisted(spark_session) == start
 
 
 def _pairs(spark):

@@ -19,6 +19,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from ons_utils_spark import get_spark  # noqa: E402
+from ons_utils_spark.operators import lineage  # noqa: E402
 
 
 def normalize(rows, columns):
@@ -141,9 +142,12 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            # one release scope per query: every frame its operators
+            # cut or keep is freed when the query's rows are in hand
+            with lineage.scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f'FAIL  {name}: spark error: {e}')
             failures.append(name)

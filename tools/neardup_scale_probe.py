@@ -74,26 +74,28 @@ def main() -> None:
     # replicated corpus (clone mega-families — the star-cap case).
     from ons_utils_spark.operators.dedup import (  # noqa: E402
         _bucket_pair_join)
-    from ons_utils_spark.operators.lineage import cut  # noqa: E402
+    from ons_utils_spark.operators.lineage import cut, scope  # noqa: E402
     from ons_utils_spark.operators.similarity import (  # noqa: E402
         hyperplane_band_udf)
 
     def _lsh_candidates(df, cap):
+        # the scope makes the bucket census eager and frees the cut
         dim = len(df.select('embedding').first()['embedding'])
         sig = hyperplane_band_udf(dim)
-        banded = cut(
-            df.select(F.col('vec_id').alias('__id'),
-                      sig(F.col('embedding')).alias('__keys'))
-            .select('__id',
-                    F.posexplode('__keys').alias('band', 'bucket')))
-        return _bucket_pair_join(
-            banded, ('band', 'bucket'), max_bucket_size=cap,
-            eager_census=True).dropDuplicates(['id_a', 'id_b'])
+        with scope():
+            banded = cut(
+                df.select(F.col('vec_id').alias('__id'),
+                          sig(F.col('embedding')).alias('__keys'))
+                .select('__id',
+                        F.posexplode('__keys').alias('band', 'bucket')))
+            return _bucket_pair_join(
+                banded, ('band', 'bucket'), max_bucket_size=cap,
+            ).dropDuplicates(['id_a', 'id_b']).count()
 
     base_n = emb.count()
     t1 = time.time()
     cand_organic = _lsh_candidates(
-        emb.select('vec_id', 'embedding'), 2000).count()
+        emb.select('vec_id', 'embedding'), 2000)
     organic_sec = round(time.time() - t1, 2)
     t2 = time.time()
     lsh_pairs = embedding_near_duplicates(
