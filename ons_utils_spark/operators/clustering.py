@@ -64,6 +64,19 @@ def connected_components(
         # one-off init aggregate below pays an exchange on 'a'.
         sym = sym.repartition('b').transform(cut, eager=False)
 
+        def changed(new: SparkDF, old: SparkDF) -> int:
+            # counted without a limit(1): a codegen'd limit names its
+            # row counter from a JVM-wide sequence, so every check would
+            # compile new classes (two per limit stage, every call).  On
+            # the converged round, the one that ends the loop, no row
+            # passes the filter and a limit could not stop the scan
+            # early anyway.
+            return (
+                new.alias('n').join(old.alias('o'), 'node')
+                .filter(F.col('n.comp') != F.col('o.comp'))
+                .count()
+            )
+
         labels = (
             sym.groupBy('a')
             .agg(F.min('b').alias('min_neighbor'))
@@ -94,22 +107,9 @@ def connected_components(
             # min-neighbor INITIALIZATION already labels exactly — if
             # pass 1 changed nothing the labels are a fixed point and
             # the pointer-doubling join never needs to run at all.
-            #
-            # The checks count changed labels without a limit(1): a
-            # codegen'd limit names its row counter from a JVM-wide
-            # sequence, so every check would compile new classes (two per
-            # limit stage, every call).  On the converged round, the one
-            # that ends the loop, no row passes the filter and a limit
-            # could not stop the scan early anyway.
             if it == 0:
                 new_labels = cut(new_labels, eager=False)
-                changed = (
-                    new_labels.alias('n')
-                    .join(labels.alias('o'), 'node')
-                    .filter(F.col('n.comp') != F.col('o.comp'))
-                    .count()
-                )
-                if changed == 0:
+                if changed(new_labels, labels) == 0:
                     return s.result(new_labels)
             # pass 2 — pointer doubling: label(node) = label(label(node)).
             # Labels now jump 2^r hops after r rounds, so even a pure
@@ -141,15 +141,9 @@ def connected_components(
             # always check, so reaching the cap means labels still changed.
             # (Round 0 already checked between the passes above.)
             labels, prev = new_labels, labels
-            if it % 2 == 1 or it == max_iterations - 1:
-                changed = (
-                    labels.alias('n')
-                    .join(prev.alias('o'), 'node')
-                    .filter(F.col('n.comp') != F.col('o.comp'))
-                    .count()
-                )
-                if changed == 0:
-                    break
+            if (it % 2 == 1 or it == max_iterations - 1) \
+                    and changed(labels, prev) == 0:
+                break
         else:
             _log.warning(
                 'connected_components stopped at max_iterations=%d with '

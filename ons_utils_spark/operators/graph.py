@@ -22,6 +22,9 @@ stays under ``BROADCAST_STATE_MAX_NODES`` the per-round join
 broadcasts the O(nodes) rank state so the edge frame is scanned,
 never exchanged; above the threshold the join falls back to
 sort-merge (a billion-node rank vector must not be collected).
+``BROADCAST_STATE_MAX_NODES`` is the one sizing setting: the
+operators read it at call time, so a deployment sizes it on this
+module, not per call.
 
 Two arithmetic modes (same pattern as ``operators/classifier.py``):
 
@@ -68,12 +71,23 @@ __all__ = ['pagerank', 'personalized_pagerank', 'triangle_count',
 BROADCAST_STATE_MAX_NODES = 4_000_000
 
 
+def _edges(edges: SparkDF, src: str, dst: str, directed: bool) -> SparkDF:
+    """The distinct ``(s, d)`` long edge frame, both directions when
+    not ``directed``, repartitioned on ``s`` and eagerly cut."""
+    e = edges.select(F.col(src).cast('long').alias('s'),
+                     F.col(dst).cast('long').alias('d')).distinct()
+    if not directed:
+        e = e.unionByName(
+            e.select(F.col('d').alias('s'), F.col('s').alias('d'))
+        ).distinct()
+    return e.repartition('s').transform(cut)
+
+
 def label_propagation(
     edges: SparkDF,
     src: str = 'src',
     dst: str = 'dst',
     iterations: int = 5,
-    broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Community detection by synchronous label propagation
     (Raghavan et al. 2007) → ``(node, label)``.
@@ -91,7 +105,7 @@ def label_propagation(
     one edge join + one per-node deterministic ``mode`` aggregation
     (most frequent label, ties to the smallest), state O(nodes),
     per-round lineage cuts.  While the node count is at most
-    ``broadcast_state_nodes`` a round is ONE shuffle (the
+    ``BROADCAST_STATE_MAX_NODES`` a round is ONE shuffle (the
     aggregation) plus a broadcast of the node-sized label state;
     above it the join falls back to sort-merge, which also shuffles
     the edge frame and the labels: THREE shuffles per round.  All
@@ -125,7 +139,7 @@ def label_propagation(
         # label join broadcasts the node-sized label state — the edge
         # frame is scanned, never exchanged (see
         # BROADCAST_STATE_MAX_NODES).
-        bcast = 0 < nodes.count() <= broadcast_state_nodes
+        bcast = 0 < nodes.count() <= BROADCAST_STATE_MAX_NODES
         labels = nodes.select('node', F.col('node').alias('label'))
         for _ in range(iterations):
             lb = F.broadcast(labels) if bcast else labels
@@ -154,6 +168,50 @@ def label_propagation(
         return s.result(labels)
 
 
+def _frontier(e: SparkDF, first: SparkDF, max_hops: int) -> list:
+    """Frontier expansion from ``first`` over an :func:`_edges` frame
+    → the frames newly reached at hops 1, 2, …, each eagerly cut; the
+    list ends early at the first hop that reaches nothing.
+
+    ``first`` is keyed by ``['n']`` or ``['root', 'n']``.  Each hop
+    joins ONLY the newest frontier against the edge list and
+    anti-joins the visited state, so per-hop work is O(frontier ×
+    avg-degree) — never |V|×|E|.  The visited state is the UNION of
+    the per-hop cut frames: each key is materialized once, at the hop
+    that reached it, never re-written as part of a growing frame.
+    The expand join and the anti-join broadcast their state side PER
+    HOP while its exact count stays under
+    ``BROADCAST_STATE_MAX_NODES`` — on a huge graph the early
+    small-frontier hops broadcast and the bulk hops fall back to
+    sort-merge, each hop choosing from its own measured size.
+    """
+    keys = first.columns
+    frontier_n = visited_n = first.count()
+    frontier = visited = first
+    hops = []
+    for _ in range(max_hops):
+        f = F.broadcast(frontier) \
+            if 0 < frontier_n <= BROADCAST_STATE_MAX_NODES else frontier
+        v = F.broadcast(visited) \
+            if 0 < visited_n <= BROADCAST_STATE_MAX_NODES else visited
+        nxt = (
+            f.join(e, f['n'] == e['s'])
+            .select(*keys[:-1], F.col('d').alias('n')).distinct()
+            .join(v, keys, 'left_anti')
+            .transform(cut)
+        )
+        # count() doubles as the emptiness check AND the next hop's
+        # broadcast-size measurement; it reads the just-cut blocks
+        frontier_n = nxt.count()
+        if frontier_n == 0:
+            break
+        hops.append(nxt)
+        visited = visited.unionByName(nxt)
+        visited_n += frontier_n
+        frontier = nxt
+    return hops
+
+
 def bfs_levels(
     edges: SparkDF,
     sources: SparkDF,
@@ -162,7 +220,6 @@ def bfs_levels(
     node: str = 'node',
     max_hops: int = 6,
     directed: bool = True,
-    broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Minimum hop distance from a source set → ``(node, hop)``.
 
@@ -175,60 +232,19 @@ def bfs_levels(
     the DuckDB oracle replays it with a UNION (deduplicating)
     recursive CTE whose state is bounded by nodes × hops.
 
-    The expand join and the anti-join broadcast their state side
-    PER HOP while its exact count (the emptiness check already
-    materializes each frontier) stays under
-    ``broadcast_state_nodes`` (see ``BROADCAST_STATE_MAX_NODES``) —
-    on a huge graph the early small-frontier hops broadcast and the
-    bulk hops fall back to sort-merge, each hop choosing from its
-    own measured size.
+    The expansion is :func:`_frontier`: its joins broadcast their
+    state side PER HOP, sized from each hop's measured count.
     """
     with scope() as s:
-        e = edges.select(F.col(src).cast('long').alias('s'),
-                         F.col(dst).cast('long').alias('d')).distinct()
-        if not directed:
-            e = e.unionByName(
-                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-            ).distinct()
-        e = e.repartition('s').transform(cut)
-        # visited state = the UNION of the per-hop checkpointed
-        # frontiers: each hop's new nodes are materialized exactly once
-        # (as `nxt`), never re-written as part of a growing `levels`
-        # frame — the anti-join and the final result read the same
-        # checkpointed RDDs (one materialization per hop instead of two).
+        e = _edges(edges, src, dst, directed)
+        # hop 1 expands the cut sources: the caller's `sources` build
+        # runs once, for the cut, not again for the broadcast
         first = sources.select(
-            F.col(node).cast('long').alias('n')).distinct().select(
-            'n', F.lit(0).cast('int').alias('hop')).transform(cut)
-        frontier_n = first.count()
-        visited_n = frontier_n
-        parts = [first]
-        # hop 1 expands the checkpointed sources: the caller's `sources`
-        # build runs once, for the cut, not again for the broadcast
-        frontier = visited = first.select('n')
-        for hop in range(1, max_hops + 1):
-            f = F.broadcast(frontier) \
-                if 0 < frontier_n <= broadcast_state_nodes else frontier
-            cand = (
-                f.join(e, f['n'] == e['s'])
-                .select(F.col('d').alias('n')).distinct()
-            )
-            v = F.broadcast(visited) \
-                if 0 < visited_n <= broadcast_state_nodes else visited
-            nxt = cand.join(v, 'n', 'left_anti').transform(cut)
-            # count() doubles as the emptiness check AND the next hop's
-            # broadcast-size measurement; it reads the just-checkpointed
-            # blocks, same cost class as the limit(1).count() it replaces
-            frontier_n = nxt.count()
-            if frontier_n == 0:
-                break
-            part = nxt.select('n', F.lit(hop).cast('int').alias('hop'))
-            parts.append(part)
-            visited = visited.unionByName(nxt)
-            visited_n += frontier_n
-            frontier = nxt
-        levels = parts[0]
-        for part in parts[1:]:
-            levels = levels.unionByName(part)
+            F.col(node).cast('long').alias('n')).distinct().transform(cut)
+        levels = first.select('n', F.lit(0).cast('int').alias('hop'))
+        for hop, nxt in enumerate(_frontier(e, first, max_hops), 1):
+            levels = levels.unionByName(
+                nxt.select('n', F.lit(hop).cast('int').alias('hop')))
         return s.result(levels.select(F.col('n').alias('node'), 'hop'))
 
 
@@ -310,6 +326,76 @@ def triangle_count(
             'n_edges long, n_wedges long, n_triangles long')
 
 
+def _walk(
+    e: SparkDF,
+    nodes: SparkDF,
+    spread,
+    attach,
+    n: int,
+    targets: int,
+    iterations: int,
+    damping: float,
+    mode: str,
+    scale: int,
+) -> SparkDF:
+    """The rank walk of :func:`pagerank` and
+    :func:`personalized_pagerank` → the last round's lazily cut
+    ``(node, r)`` frame.
+
+    Each round is ``r' = teleport + damp(Σ share(r, od))`` over the
+    distinct ``(src, dst)`` edge frame ``e`` (self-loops included):
+    ONE join + ONE aggregate, with a lazy cut per round.  ``mode``
+    picks the arithmetic — integer: ``share = r DIV od``,
+    ``damp(x) = (num * x) DIV den`` with ``damping`` snapped to
+    ``num/den``, ranks cast to bigint; float: ``share = r / od``,
+    ``damp(x) = damping * x``.  Rank mass starts on and teleports to
+    ``targets`` nodes: ``spread(m)`` is the column giving a node its
+    share ``m`` of it, over ``nodes`` for the start and over
+    ``attach(agg)`` — the ``(node, __inc)`` aggregate with the nodes
+    and columns ``spread`` needs — for each round.  While the node
+    count ``n`` is at most ``BROADCAST_STATE_MAX_NODES`` the rank
+    state is broadcast into the edge join.
+    """
+    # Per-round cuts are LAZY (fixed-iteration loop, no mid-loop
+    # actions): the result cut materializes the whole round chain
+    # stage-by-stage in ONE job instead of one eager scheduler job per
+    # round — same stages, fewer job round-trips (the
+    # connected_components precedent; ops with count loop breaks stay
+    # eager, see OPTIMIZATION_r15.md).
+    deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
+    # one edge frame carrying out-degree, materialized once; the
+    # repartition normalizes the checkpoint's block parallelism (it
+    # does not survive the cut as a physical partitioning —
+    # OPTIMIZATION_r15.md §18); the loop's exchange elision comes from
+    # broadcasting the rank state
+    ed = e.join(deg, 'src').repartition('src').transform(cut, eager=False)
+    if mode == 'integer':
+        frac = Fraction(damping).limit_denominator(1000)
+        num, den = frac.numerator, frac.denominator
+        start, base = scale // targets, (den - num) * scale // (den * targets)
+        share = F.expr('r DIV od')
+        damped = F.expr(f'({num} * coalesce(__inc, 0)) DIV {den}')
+        rtype = 'bigint'
+    else:
+        start, base = 1.0 / targets, (1.0 - damping) / targets
+        share = F.col('r') / F.col('od')
+        damped = damping * F.coalesce('__inc', F.lit(0.0))
+        rtype = 'double'
+    bcast = 0 < n <= BROADCAST_STATE_MAX_NODES
+    ranks = nodes.select('node', spread(start).cast(rtype).alias('r'))
+    for _ in range(iterations):
+        r = F.broadcast(ranks) if bcast else ranks
+        agg = (
+            r.join(ed, r['node'] == ed['src'])
+            .select(F.col('dst').alias('node'), share.alias('__c'))
+            .groupBy('node').agg(F.sum('__c').alias('__inc'))
+        )
+        ranks = attach(agg).select(
+            'node', (spread(base) + damped).cast(rtype).alias('r')
+        ).transform(cut, eager=False)
+    return ranks
+
+
 def pagerank(
     edges: SparkDF,
     src: str = 'src',
@@ -319,8 +405,6 @@ def pagerank(
     mode: str = 'float',
     scale: int = 10 ** 12,
     self_loops: str = 'dangling',
-    checkpoint_every: int = 1,
-    broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """PageRank of a directed edge list → ``(node, rank)``.
 
@@ -336,25 +420,12 @@ def pagerank(
     scaled long; ``damping`` is snapped to an exact fraction
     (0.85 → 17/20).  ``mode='float'`` emits a double summing ≈ 1.
 
-    ``checkpoint_every`` trades plan depth for checkpoint jobs:
-    lineage is cut every N iterations (plus always on the last).
-    Measured at sf0.1, N=1 (the default) beats N=2 — the deeper
-    two-round plans re-optimize and re-shuffle worse than the extra
-    materialization costs — so raise N only after measuring on your
-    own graph/cluster.
-
-    ``broadcast_state_nodes``: when the graph has at most this many
-    nodes the per-round join BROADCASTS the rank state (see
-    ``BROADCAST_STATE_MAX_NODES``) — the edge frame is scanned, never
+    Lineage is cut every round.  While the graph has at most
+    ``BROADCAST_STATE_MAX_NODES`` nodes the per-round join
+    BROADCASTS the rank state: the edge frame is scanned, never
     exchanged, and each round's only shuffle is the post-combine
-    aggregate.  Set 0 to force the sort-merge shape.
+    aggregate.
     """
-    # Per-round cuts are LAZY here (fixed-iteration loop, no
-    # mid-loop actions): the result cut materializes the whole
-    # round chain stage-by-stage in ONE job instead of one eager
-    # scheduler job per round — same stages, fewer job round-trips
-    # (the connected_components precedent; ops with limit/count
-    # loop breaks stay eager, see OPTIMIZATION_r15.md).
     if mode not in ('float', 'integer'):
         raise ValueError(f"mode must be 'float' or 'integer', got {mode!r}")
     if self_loops not in ('dangling', 'all', 'none'):
@@ -397,22 +468,7 @@ def pagerank(
             e = e.unionByName(
                 sinks.select(F.col('node').alias('src'),
                              F.col('node').alias('dst')))
-        deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
-        # one edge frame carrying out-degree, materialized once; the
-        # repartition normalizes the checkpoint's block parallelism
-        # (it does not survive the cut as a physical partitioning —
-        # OPTIMIZATION_r15.md §18); the loop's exchange elision comes
-        # from broadcasting the rank state
-        ed = (
-            e.join(deg, 'src')
-            .repartition('src')
-            .transform(cut, eager=False)
-        )
         n = nodes.count()
-
-        frac = Fraction(damping).limit_denominator(1000)
-        num, den = frac.numerator, frac.denominator
-
         # With self_loops='all' EVERY node has a self-edge, so the
         # per-round aggregate already covers every node (each node is the
         # dst of its own self-edge and `ranks` spans all nodes by
@@ -420,52 +476,11 @@ def pagerank(
         # no-op — skipping it removes one shuffle join per iteration
         # (guide §2.4: remove shuffles outright).  The other modes keep
         # the join: a node with no in-edges is absent from the aggregate.
-        cover = self_loops == 'all'
-        bcast = 0 < n <= broadcast_state_nodes
-
-        if mode == 'integer':
-            ranks = nodes.select(
-                'node', F.lit(scale // n).cast('long').alias('r'))
-            base = (den - num) * scale // (den * n)
-            for it in range(iterations):
-                r = F.broadcast(ranks) if bcast else ranks
-                inc = (
-                    r.join(ed, r['node'] == ed['src'])
-                    .select(F.col('dst').alias('node'),
-                            F.expr('r DIV od').alias('__c'))
-                )
-                agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
-                upd = agg if cover else nodes.join(agg, 'node', 'left')
-                ranks = upd.select(
-                    'node',
-                    F.expr(
-                        f'CAST({base} + ({num} * coalesce(__inc, 0))'
-                        f' DIV {den} AS BIGINT)').alias('r'),
-                )
-                if (it + 1) % checkpoint_every == 0 \
-                        or it == iterations - 1:
-                    ranks = cut(ranks, eager=False)
-            return s.result(ranks).select('node', F.col('r').alias('rank'))
-
-        ranks = nodes.select('node', F.lit(1.0 / n).alias('r'))
-        base = (1.0 - damping) / n
-        for it in range(iterations):
-            r = F.broadcast(ranks) if bcast else ranks
-            inc = (
-                r.join(ed, r['node'] == ed['src'])
-                .select(F.col('dst').alias('node'),
-                        (F.col('r') / F.col('od')).alias('__c'))
-            )
-            agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
-            upd = agg if cover else nodes.join(agg, 'node', 'left')
-            ranks = upd.select(
-                'node',
-                (F.lit(base)
-                 + damping * F.coalesce('__inc', F.lit(0.0)))
-                .alias('r'),
-            )
-            if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-                ranks = cut(ranks, eager=False)
+        ranks = _walk(
+            e, nodes, F.lit,
+            lambda agg: agg if self_loops == 'all'
+            else nodes.join(agg, 'node', 'left'),
+            n, n, iterations, damping, mode, scale)
         return s.result(ranks).select('node', F.col('r').alias('rank'))
 
 
@@ -475,7 +490,6 @@ def hits(
     dst: str = 'dst',
     iterations: int = 3,
     mode: str = 'float',
-    broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """HITS hubs and authorities (Kleinberg 1999) of a directed edge
     list → ``(node, hub, authority)`` — hubs point AT good content,
@@ -487,11 +501,10 @@ def hits(
     Power iteration, one join + one aggregate per half-step
     (``a_t = Eᵀ·h_{t-1}`` then ``h_t = E·a_t``), lineage cut per
     round — identical scale shape to :func:`pagerank`, including the
-    size-adaptive state broadcast (``broadcast_state_nodes``; see
-    ``BROADCAST_STATE_MAX_NODES``): under the threshold each
-    half-step broadcasts the node-sized score vector and the edge
-    frame is scanned, never exchanged.  Duplicate edges collapse
-    first.
+    size-adaptive state broadcast (``BROADCAST_STATE_MAX_NODES``):
+    under the threshold each half-step broadcasts the node-sized
+    score vector and the edge frame is scanned, never exchanged.
+    Duplicate edges collapse first.
 
     ``mode='float'`` (production): L2-normalize both vectors each
     round — the standard convergent form.  ``mode='integer'``
@@ -528,7 +541,7 @@ def hits(
         dsts = e_by_src.select(F.col('dst').alias('node')).distinct() \
             .transform(cut)
         nodes = srcs.unionByName(dsts).distinct().transform(cut)
-        bcast = 0 < nodes.count() <= broadcast_state_nodes
+        bcast = 0 < nodes.count() <= BROADCAST_STATE_MAX_NODES
         # with the state broadcast the half-step joins never exchange
         # the edge frame, so ONE materialized copy serves both
         # orientations; the sort-merge fallback keeps a second copy
@@ -589,8 +602,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     mode: str = 'float',
     scale: int = 10 ** 12,
-    checkpoint_every: int = 1,
-    broadcast_state_nodes: int = BROADCAST_STATE_MAX_NODES,
 ) -> SparkDF:
     """Personalized PageRank (random walk with restart to a SEED
     set) → ``(node, rank)``: proximity to the seeds instead of
@@ -599,12 +610,11 @@ def personalized_pagerank(
     quality-classifier bootstrapping) and the standard
     related-entity scorer.
 
-    Same per-iteration shape as :func:`pagerank` (ONE join + ONE
+    The same rank walk as :func:`pagerank` (ONE join + ONE
     aggregate on node ids, edge frame materialized once, node-sized
-    rank state broadcast under ``broadcast_state_nodes``, lineage
-    cut every ``checkpoint_every`` rounds); only the teleport
-    differs — restart mass
-    ``(1-damping)`` returns to the seeds (uniformly), not to all
+    rank state broadcast under ``BROADCAST_STATE_MAX_NODES``,
+    lineage cut every round); only the teleport differs — restart
+    mass ``(1-damping)`` returns to the seeds (uniformly), not to all
     nodes, and the walk starts ON the seeds.  Every node carries a
     self-edge (the :func:`pagerank` ``self_loops='all'`` variant),
     which keeps the one-pass update covering every node — the
@@ -617,12 +627,6 @@ def personalized_pagerank(
     production scorer.  Rank mass concentrates near the seeds:
     nodes unreachable from them score 0 (integer) / ~0 (float).
     """
-    # Per-round cuts are LAZY here (fixed-iteration loop, no
-    # mid-loop actions): the result cut materializes the whole
-    # round chain stage-by-stage in ONE job instead of one eager
-    # scheduler job per round — same stages, fewer job round-trips
-    # (the connected_components precedent; ops with limit/count
-    # loop breaks stay eager, see OPTIMIZATION_r15.md).
     if mode not in ('float', 'integer'):
         raise ValueError(
             f"mode must be 'float' or 'integer', got {mode!r}")
@@ -655,82 +659,32 @@ def personalized_pagerank(
         n, s = row['__n'], row['__s']
         if s == 0:
             raise ValueError('no seed appears in the edge list')
-        bcast = 0 < n <= broadcast_state_nodes
         # disjoint union — see the pagerank self_loops='all' note: `e`
         # is distinct and the self-loop frame is distinct, so filtering
         # existing self-edges first removes the post-union distinct (a
         # full exchange + dedup of the edge set).  Self-loops derive
         # from the CHECKPOINTED flagged frame (the node set + flag), not
-        # the raw `nodes` lineage — the degree build below then reads
-        # two materialized RDDs and nothing else.
+        # the raw `nodes` lineage — the degree build then reads two
+        # materialized RDDs and nothing else.
         e = e.filter(F.col('src') != F.col('dst')).unionByName(
             flagged.select(F.col('node').alias('src'),
                            F.col('node').alias('dst')))
-        deg = e.groupBy('src').agg(F.count(F.lit(1)).alias('od'))
-        ed = e.join(deg, 'src').repartition('src').transform(cut, eager=False)
-
-        frac = Fraction(damping).limit_denominator(1000)
-        num, den = frac.numerator, frac.denominator
         is_seed = F.col('__seed').isNotNull()
         # Every node carries a self-edge, so the per-round aggregate
         # covers every node (same argument as pagerank self_loops='all').
         # The per-round teleport only needs the seed FLAG, which the tiny
         # seed set provides via a broadcast join — replacing the shuffle
         # join against the full flagged node frame with a zero-shuffle
-        # broadcast hash join (guide §3.1); the rank state keeps its
-        # groupBy partitioning for the next round's edge join.  Derive
-        # the seed rows from the CHECKPOINTED flagged frame: building
-        # them from the raw seed lineage would re-run the whole edge
-        # scan inside every round's broadcast build.
-        seed_marks = flagged.filter(is_seed).select('node', '__seed')
-
-        if mode == 'integer':
-            base = (den - num) * scale // (den * s)
-            ranks = flagged.select(
-                'node', F.when(is_seed, scale // s)
-                .otherwise(0).cast('long').alias('r'))
-            for it in range(iterations):
-                r = F.broadcast(ranks) if bcast else ranks
-                inc = (
-                    r.join(ed, r['node'] == ed['src'])
-                    .select(F.col('dst').alias('node'),
-                            F.expr('r DIV od').alias('__c'))
-                )
-                agg = inc.groupBy('node').agg(
-                    F.sum('__c').alias('__inc'))
-                ranks = agg.join(
-                    F.broadcast(seed_marks), 'node', 'left'
-                ).select(
-                    'node',
-                    (F.when(is_seed, base).otherwise(0)
-                     + F.expr(f'({num} * coalesce(__inc, 0))'
-                              f' DIV {den}')).cast('bigint').alias('r'),
-                )
-                if (it + 1) % checkpoint_every == 0 \
-                        or it == iterations - 1:
-                    ranks = cut(ranks, eager=False)
-            return held.result(ranks).select('node', F.col('r').alias('rank'))
-
-        base = (1.0 - damping) / s
-        ranks = flagged.select(
-            'node', F.when(is_seed, 1.0 / s).otherwise(0.0).alias('r'))
-        for it in range(iterations):
-            r = F.broadcast(ranks) if bcast else ranks
-            inc = (
-                r.join(ed, r['node'] == ed['src'])
-                .select(F.col('dst').alias('node'),
-                        (F.col('r') / F.col('od')).alias('__c'))
-            )
-            agg = inc.groupBy('node').agg(F.sum('__c').alias('__inc'))
-            ranks = agg.join(
-                F.broadcast(seed_marks), 'node', 'left'
-            ).select(
-                'node',
-                (F.when(is_seed, base).otherwise(0.0)
-                 + damping * F.coalesce('__inc', F.lit(0.0))).alias('r'),
-            )
-            if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-                ranks = cut(ranks, eager=False)
+        # broadcast hash join (guide §3.1).  Derive the seed rows from
+        # the CHECKPOINTED flagged frame: building them from the raw
+        # seed lineage would re-run the whole edge scan inside every
+        # round's broadcast build.
+        seed_marks = F.broadcast(
+            flagged.filter(is_seed).select('node', '__seed'))
+        ranks = _walk(
+            e, flagged, lambda m: F.when(is_seed, m).otherwise(0),
+            lambda agg: agg.join(seed_marks, 'node', 'left'),
+            n, s, iterations, damping, mode, scale)
         return held.result(ranks).select('node', F.col('r').alias('rank'))
 
 
@@ -750,14 +704,16 @@ def harmonic_centrality(
     unreachable pairs contribute 0 instead of poisoning the mean).
 
     Exact multi-source BFS: state is the ``(root, node, hop)``
-    shortest-pair frontier, expanded one join + anti-join per round
-    exactly like :func:`bfs_levels` but keyed by (root, node) — work
-    is O(reached pairs × avg degree) per round and lineage is cut
-    every round.  Exact all-pairs state is O(V²) at full diameter:
-    right for host/domain graphs (10⁵–10⁷ nodes after the host
-    rollup, and ``max_hops`` truncates the frontier), NOT for the
-    raw page graph — at that scale run HyperBall (Boldi & Vigna
-    2013): per-node HLL neighbourhood sketches unioned over
+    shortest-pair frontier, expanded by :func:`bfs_levels`' frontier
+    loop (:func:`_frontier`) keyed by (root, node) — work is
+    O(reached pairs × avg degree) per round, lineage is cut every
+    round, and each round's joins broadcast their state side while
+    its measured pair count stays under
+    ``BROADCAST_STATE_MAX_NODES``.  Exact all-pairs state is O(V²)
+    at full diameter: right for host/domain graphs (10⁵–10⁷ nodes
+    after the host rollup, and ``max_hops`` truncates the frontier),
+    NOT for the raw page graph — at that scale run HyperBall (Boldi &
+    Vigna 2013): per-node HLL neighbourhood sketches unioned over
     in-neighbours per round, |ball(v,h)| differences weighted 1/h —
     the same per-round join shape with O(V · registers) state.
 
@@ -770,57 +726,31 @@ def harmonic_centrality(
     row-order-dependent float sum).
     """
     with scope() as s:
-        e = edges.select(F.col(src).cast('long').alias('s'),
-                         F.col(dst).cast('long').alias('d')).distinct()
-        if not directed:
-            e = e.unionByName(
-                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-            ).distinct()
-        e = e.repartition('s').transform(cut)
+        e = _edges(edges, src, dst, directed)
         nodes = (e.select(F.col('s').alias('node'))
                  .unionByName(e.select(F.col('d').alias('node')))
                  .distinct().transform(cut))
         # (root, node) pairs at minimum hop; roots walk FORWARD along
         # edges, so node v accumulates the roots that REACH it.
-        frontier = nodes.select(F.col('node').alias('root'),
-                                F.col('node').alias('n'))
-        # The visited-pair state is the big frame here (O(reached
-        # pairs)): keep it as the UNION of the per-hop checkpointed
-        # frontiers instead of re-materializing the whole growing set
-        # every round — each pair is written once, at the hop that
-        # discovered it.
-        seen = frontier.transform(cut)
-        per_hop = None
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier['n'] == e['s'])
-                .select('root', F.col('d').alias('n')).distinct()
-                .join(seen, ['root', 'n'], 'left_anti')
-                .transform(cut)
-            )
-            if nxt.limit(1).count() == 0:
-                break
-            counts = nxt.groupBy(F.col('n').alias('node')).agg(
-                F.count(F.lit(1)).alias(f'__c{hop}'))
-            per_hop = counts if per_hop is None else (
-                per_hop.join(counts, 'node', 'outer'))
-            seen = seen.unionByName(nxt)
-            frontier = nxt
-        if per_hop is None:
+        hops = _frontier(e, nodes.select(F.col('node').alias('root'),
+                                         F.col('node').alias('n')),
+                         max_hops)
+        if not hops:
             return s.result(nodes).select(
                 'node', F.lit(0).cast('bigint').alias('n_reached'),
                 F.lit(0.0).alias('harmonic'))
-        hop_cols = [c for c in per_hop.columns if c.startswith('__c')]
-        out = nodes.join(per_hop, 'node', 'left')
-        reached = None
-        harm = None
-        for c in hop_cols:
-            h = int(c[3:])
+        per_hop = reached = harm = None
+        for hop, nxt in enumerate(hops, 1):
+            c = f'__c{hop}'
+            counts = nxt.groupBy(F.col('n').alias('node')).agg(
+                F.count(F.lit(1)).alias(c))
+            per_hop = counts if per_hop is None else (
+                per_hop.join(counts, 'node', 'outer'))
             cnt = F.coalesce(F.col(c), F.lit(0)).cast('bigint')
             reached = cnt if reached is None else reached + cnt
-            term = cnt.cast('double') / F.lit(float(h))
+            term = cnt.cast('double') / F.lit(float(hop))
             harm = term if harm is None else harm + term
-        return s.result(out.select(
+        return s.result(nodes.join(per_hop, 'node', 'left').select(
             'node', reached.alias('n_reached'),
             F.round(harm, 6).alias('harmonic')))
 
@@ -873,13 +803,7 @@ def hyperball_centrality(
     with scope() as s:
         m = 1 << p
         alpha = _HLL_ALPHA.get(p, 0.7213 / (1 + 1.079 / m))
-        e = edges.select(F.col(src).cast('long').alias('s'),
-                         F.col(dst).cast('long').alias('d')).distinct()
-        if not directed:
-            e = e.unionByName(
-                e.select(F.col('d').alias('s'), F.col('s').alias('d'))
-            ).distinct()
-        e = e.repartition('s').transform(cut)
+        e = _edges(edges, src, dst, directed)
         nodes = (e.select(F.col('s').alias('node'))
                  .unionByName(e.select(F.col('d').alias('node')))
                  .distinct())

@@ -66,6 +66,35 @@ def test_self_loops_all_covers_isolated_sources(spark_session):
     assert ranks[2] > ranks[1]
 
 
+def test_integer_dangling_matches_local_fold(spark_session):
+    """self_loops='dangling' covers nodes without in-edges through the
+    nodes-frame left join: source-only nodes 1 and 4 keep exactly the
+    teleport mass, and sink 5 keeps its mass through its self-edge."""
+    from fractions import Fraction
+
+    edges = [(1, 2), (2, 3), (3, 2), (4, 2), (2, 5), (4, 3)]
+    got = {r['node']: r['rank'] for r in pagerank(
+        spark_session.createDataFrame(edges, 'src long, dst long'),
+        iterations=3, mode='integer', self_loops='dangling').collect()}
+    # local replay: self-edge on each sink, scale 1e12, 17/20
+    scale = 10 ** 12
+    nodes = sorted({x for e in edges for x in e})
+    sinks = set(nodes) - {a for a, _ in edges}
+    es = sorted(set(edges) | {(n, n) for n in sinks})
+    od = {n: sum(1 for a, _ in es if a == n) for n in nodes}
+    frac = Fraction(0.85).limit_denominator(1000)
+    num, den = frac.numerator, frac.denominator
+    base = (den - num) * scale // (den * len(nodes))
+    r = {n: scale // len(nodes) for n in nodes}
+    for _ in range(3):
+        inc = {n: 0 for n in nodes}
+        for a, b in es:
+            inc[b] += r[a] // od[a]
+        r = {n: base + (num * inc[n]) // den for n in nodes}
+    assert got == r
+    assert got[1] == got[4] == base
+
+
 class TestTriangles:
     def _count(self, spark, rows):
         from ons_utils_spark.operators.graph import triangle_count
@@ -369,8 +398,8 @@ class TestPersonalizedPagerank:
                 self._seeds(spark_session, [1]), mode='bad')
 
 
-def test_broadcast_state_paths_agree(spark_session):
-    """r16: the size-adaptive state broadcast (broadcast_state_nodes)
+def test_broadcast_state_paths_agree(spark_session, monkeypatch):
+    """r16: the size-adaptive state broadcast (BROADCAST_STATE_MAX_NODES)
     is a join-strategy choice only — the broadcast path (default at
     fixture scale) and the sort-merge fallback (threshold 0) must
     produce identical rows for every iterative operator."""
@@ -380,6 +409,11 @@ def test_broadcast_state_paths_agree(spark_session):
         [(i, (i * 7) % 23) for i in range(40)] + [(3, 3), (5, 9)],
         'src long, dst long')
 
+    def sort_merge(run):
+        with monkeypatch.context() as m:
+            m.setattr(G, 'BROADCAST_STATE_MAX_NODES', 0)
+            return run()
+
     for fn, kw in [
         (G.pagerank,
          dict(iterations=3, mode='integer', self_loops='all')),
@@ -387,23 +421,23 @@ def test_broadcast_state_paths_agree(spark_session):
          dict(iterations=3, mode='integer', self_loops='dangling')),
         (G.hits, dict(iterations=2, mode='integer')),
         (G.label_propagation, dict(iterations=3)),
+        (G.harmonic_centrality, dict(max_hops=3)),
     ]:
         a = sorted(map(tuple, fn(edges, **kw).collect()))
-        b = sorted(map(tuple, fn(
-            edges, broadcast_state_nodes=0, **kw).collect()))
+        b = sorted(map(tuple, sort_merge(
+            lambda: fn(edges, **kw).collect())))
         assert a == b and a, (fn.__name__, kw)
 
     seeds = spark_session.createDataFrame([(1,), (2,)], 'node long')
     a = sorted(map(tuple, G.personalized_pagerank(
         edges, seeds, iterations=3, mode='integer').collect()))
-    b = sorted(map(tuple, G.personalized_pagerank(
-        edges, seeds, iterations=3, mode='integer',
-        broadcast_state_nodes=0).collect()))
+    b = sorted(map(tuple, sort_merge(lambda: G.personalized_pagerank(
+        edges, seeds, iterations=3, mode='integer').collect())))
     assert a == b and a
 
     src = spark_session.createDataFrame([(0,), (1,)], 'node long')
     a = sorted(map(tuple, G.bfs_levels(
         edges, src, max_hops=3).collect()))
-    b = sorted(map(tuple, G.bfs_levels(
-        edges, src, max_hops=3, broadcast_state_nodes=0).collect()))
+    b = sorted(map(tuple, sort_merge(lambda: G.bfs_levels(
+        edges, src, max_hops=3).collect())))
     assert a == b and a

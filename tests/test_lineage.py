@@ -5,9 +5,10 @@ Operators never choose between local and reliable cuts themselves:
 source scan keeps every other operator and streaming module from
 cutting lineage or persisting on its own.  In
 ``streaming/incremental.py`` only the exactly-once protocol function
-touches the commit helpers.  A :func:`lineage.scope` frees what was
-cut or kept inside it when it exits; outside any scope, cut RDDs are
-released once their frames are garbage.
+touches the commit helpers.  No operator or streaming module counts a
+``limit``.  A :func:`lineage.scope` frees what was cut or kept inside
+it when it exits; outside any scope, cut RDDs are released once their
+frames are garbage.
 """
 from __future__ import annotations
 
@@ -32,30 +33,53 @@ SCOPED_QUERIES = ('q_pagerank', 'q_label_prop', 'q_dedup_keep_best',
                   'q_bitext_mine', 'q_connected_components')
 
 
-def _call_sites(paths, names) -> set:
+OPERATOR_PATHS = [path for sub in ('operators', 'streaming')
+                  for path in sorted((PACKAGE / sub).rglob('*.py'))]
+
+
+def _called(node):
+    """The name ``node`` calls, as a method or a bare function, or None
+    when ``node`` is not a call."""
+    if not isinstance(node, ast.Call):
+        return None
+    func = node.func
+    return (func.attr if isinstance(func, ast.Attribute)
+            else getattr(func, 'id', None))
+
+
+def _call_sites(paths, names, on=None) -> set:
     """(module path, top-level definition) of every call to one of
-    ``names``, as a method or a bare function, in ``paths``."""
+    ``names``, as a method or a bare function, in ``paths``; with
+    ``on``, only method calls on the result of a call to one of
+    ``on``."""
     sites = set()
     for path in paths:
         tree = ast.parse(path.read_text())
         for top in tree.body:
             for node in ast.walk(top):
-                if not isinstance(node, ast.Call):
+                if _called(node) not in names:
                     continue
-                func = node.func
-                called = (func.attr if isinstance(func, ast.Attribute)
-                          else getattr(func, 'id', None))
-                if called in names:
-                    sites.add((path.relative_to(PACKAGE).as_posix(),
-                               getattr(top, 'name', '<module>')))
+                if on is not None \
+                        and _called(getattr(node.func, 'value', None)) \
+                        not in on:
+                    continue
+                sites.add((path.relative_to(PACKAGE).as_posix(),
+                           getattr(top, 'name', '<module>')))
     return sites
 
 
 def test_only_cut_cuts_lineage():
-    paths = [path for sub in ('operators', 'streaming')
-             for path in sorted((PACKAGE / sub).rglob('*.py'))]
-    assert _call_sites(paths, CUT_CALLS) == {
+    assert _call_sites(OPERATOR_PATHS, CUT_CALLS) == {
         ('operators/lineage.py', 'cut'), ('operators/lineage.py', 'keep')}
+
+
+def test_no_operator_counts_a_limit():
+    """No ``.limit(...).count()`` under ``operators/`` or
+    ``streaming/``: a codegen'd ``limit`` takes a fresh
+    ``_limit_counter_N`` name in every plan, so every call recompiles
+    its generated classes, which the compiled-class cache cannot
+    serve.  Count the rows (a zero count is the emptiness check)."""
+    assert _call_sites(OPERATOR_PATHS, {'count'}, on={'limit'}) == set()
 
 
 def test_only_the_commit_protocol_touches_store_and_cache():
