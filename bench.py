@@ -44,14 +44,15 @@ def main() -> None:
         extra_confs={
             'spark.driver.memory': '8g',
             'spark.sql.warehouse.dir': '/tmp/ons-utils-spark-bench-wh',
-            # FAIR pools for the CONCURRENT warmup below: the five
-            # incremental streams are latency-bound (many small
-            # driver-coordinated jobs per micro-batch) and under
-            # FIFO their jobs queue behind whole-cluster jobs from
-            # sibling warmup threads, serializing the pool.  Each
-            # warmup thread runs in its own FAIR pool (equal share,
-            # no allocation file needed); the timed passes are
-            # sequential single-job so FAIR is a no-op there.
+            # FAIR pools for the CONCURRENT warmup below: the six
+            # incremental dedup streams and the mjpeg stream are
+            # latency-bound (many small driver-coordinated jobs per
+            # micro-batch) and under FIFO their jobs queue behind
+            # whole-cluster jobs from sibling warmup threads,
+            # serializing the pool.  Each warmup thread runs in its
+            # own FAIR pool (equal share, no allocation file needed);
+            # the timed passes are sequential single-job so FAIR is a
+            # no-op there.
             'spark.scheduler.mode': 'FAIR',
         },
     )

@@ -16,7 +16,10 @@ simhash), similarity search, text analysis, array diff.
 from __future__ import annotations
 
 import contextvars
+import hashlib
 import os
+import tempfile
+import time
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame as SparkDF
@@ -816,6 +819,68 @@ def _artifact(key: str, build: 'Callable[[], object]'):
     return _ANN_ARTIFACTS[key]
 
 
+def _session_dir(spark: SparkSession, sf_dir: str, name: str,
+                 build: 'Callable[[str], object]') -> str:
+    """Run ``build(path)`` once per session (artifact-cached, like
+    the ANN artifacts) and return ``path``.  Staged chunks, written
+    corpora and streaming state (store, checkpoint, output) live
+    under the system temp dir keyed by ``(name, sf_dir,
+    applicationId)`` — the artifact key's triple, so two data
+    directories that share a basename never share a directory.  A
+    re-run in the same session returns the built path untouched."""
+    app = spark.sparkContext.applicationId
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
+    path = os.path.join(
+        tempfile.gettempdir(), f'ons_{name}', f'{tag}-{digest}', app)
+
+    def _build():
+        build(path)
+        return path
+
+    return _artifact(f'{name}:{sf_dir}@{app}', _build)
+
+
+def _stage_chunks(frame: SparkDF, path: str, key: str,
+                  fmt: str = 'json'):
+    """Write ``frame`` to ``path`` as three ``key``-range chunks for a
+    file-source stream.  The file source delivers in mtime order and
+    range partition i is written as ``part-0000i``, so staggering the
+    mtimes by file name pins batch order = key order."""
+    (frame.repartitionByRange(3, key)
+     .write.mode('overwrite').format(fmt).save(path))
+    parts = sorted(p for p in os.listdir(path) if p.startswith('part-'))
+    base = time.time() - 1000
+    for i, p in enumerate(parts):
+        os.utime(os.path.join(path, p), (base + 10 * i, base + 10 * i))
+
+
+def _run_stream(spark: SparkSession, query: str, src: str, schema: str,
+                start: 'Callable[[SparkDF], object]', fmt: str = 'json'):
+    """Read the staged chunks in ``src`` one file per trigger, start
+    the streaming query ``start(stream)`` and wait for it to drain; a
+    stream still running after 600s is stopped and raises."""
+    stream = (spark.readStream.schema(schema)
+              .option('maxFilesPerTrigger', 1).format(fmt).load(src))
+    q = start(stream)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(
+            f'{query} stream did not terminate within 600s')
+
+
+def _dedup_stream(spark: SparkSession, query: str, root: str,
+                  src: str, schema: str, dedup, **kw) -> str:
+    """Run one ``streaming.incremental`` dedup operator over the
+    staged chunks in ``src``, its accepted/store/checkpoint dirs under
+    ``root``, and return the accepted dir."""
+    out = os.path.join(root, 'accepted')
+    _run_stream(spark, query, src, schema, lambda stream: dedup(
+        stream, out_dir=out, store_dir=os.path.join(root, 'store'),
+        checkpoint=os.path.join(root, 'ckpt'), **kw))
+    return out
+
+
 def _cached_pq_books(corpus: SparkDF, key: str, **train_kw):
     return _artifact(key, lambda: sim.pq_train(corpus, **train_kw))
 
@@ -1410,51 +1475,27 @@ def q_mjpeg_stream_stats(spark: SparkSession,
     batch ledger — a replayed batch overwrites, never duplicates).
     Same closed-form constant-gray-tile oracle as
     ``q_mjpeg_keyframe_decode``: batch boundaries cannot move a
-    per-row decode.  Streaming state lives under the system temp
-    dir keyed by applicationId."""
-    import tempfile
-    import time
-
+    per-row decode."""
     from ..operators.multimodal import (
         decode_jpeg_frames, keyframe_payloads)
     from ..streaming.sinks import write_stream_parquet
 
-    media = _mjpeg_media(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_mjpeg_stream', tag, app)
-
-    def _run():
+    def _run(root):
         src = os.path.join(root, 'src')
-        (media.repartitionByRange(3, 'media_id')
-         .write.mode('overwrite').parquet(src))
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        stream = (
-            spark.readStream
-            .schema('media_id bigint, payload binary')
-            .option('maxFilesPerTrigger', 1)
-            .parquet(src)
-        )
-        stats = decode_jpeg_frames(keyframe_payloads(stream))
-        q = write_stream_parquet(
-            stats, os.path.join(root, 'stats'),
-            checkpoint=os.path.join(root, 'ckpt'),
-            available_now=True)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'mjpeg frame-stat stream did not terminate'
-                ' within 600s')
-        return os.path.join(root, 'stats')
+        _stage_chunks(_mjpeg_media(spark, sf_dir), src, 'media_id',
+                      'parquet')
+        _run_stream(
+            spark, 'q_mjpeg_stream_stats', src,
+            'media_id bigint, payload binary',
+            lambda stream: write_stream_parquet(
+                decode_jpeg_frames(keyframe_payloads(stream)),
+                os.path.join(root, 'stats'),
+                checkpoint=os.path.join(root, 'ckpt'),
+                available_now=True),
+            fmt='parquet')
 
-    out_dir = _artifact(f'mjpeg_stream:{sf_dir}@{app}', _run)
-    return spark.read.parquet(out_dir).select(
+    root = _session_dir(spark, sf_dir, 'mjpeg_stream', _run)
+    return spark.read.parquet(os.path.join(root, 'stats')).select(
         'media_id', 'sample_idx', 'pts_ms',
         F.col('decoded').cast('int').alias('decoded'),
         'width', 'height', 'n_pixels',
@@ -1536,20 +1577,11 @@ def q_incremental_url_dedup(spark: SparkSession,
     the accepted set GLOBALLY "min doc_id per canonical URL" under
     id-ordered arrival — the oracle replays it with one window over
     the closed-form canonical, no clique caveat.  A loud guard
-    recomputes the closed form batch-side and raises on divergence.
-    Streaming state lives under the system temp dir keyed by
-    applicationId."""
-    import tempfile
-    import time
-
+    recomputes the closed form batch-side and raises on divergence."""
     from ..operators import web
     from ..streaming.incremental import incremental_exact_dedup
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_url', tag, app)
 
     def _messy(df):
         d = F.col('doc_id')
@@ -1568,36 +1600,17 @@ def q_incremental_url_dedup(spark: SparkSession,
             .otherwise(''),
             F.when(d % 2 == 0, F.lit('#top')).otherwise(''))
 
-    def _run():
+    def _run(root):
         src = os.path.join(root, 'src')
-        (documents.select('doc_id', 'source', 'lang')
-         .repartitionByRange(3, 'doc_id')
-         .write.mode('overwrite').json(src))
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        stream = (
-            spark.readStream
-            .schema('doc_id long, source string, lang string')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        keyed = stream.withColumn(
-            'key', web.canonicalize_url(_messy(stream)))
-        q = incremental_exact_dedup(
-            keyed,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental url dedup stream did not terminate'
-                ' within 600s')
+        _stage_chunks(documents.select('doc_id', 'source', 'lang'),
+                      src, 'doc_id')
+        accepted = _dedup_stream(
+            spark, 'q_incremental_url_dedup', root, src,
+            'doc_id long, source string, lang string',
+            lambda stream, **kw: incremental_exact_dedup(
+                stream.withColumn(
+                    'key', web.canonicalize_url(_messy(stream))),
+                **kw))
         # LOUD guard: the closed form the oracle replays.  The
         # compare stays DISTRIBUTED (exceptAll both ways, bounded
         # limit-collects for the message) — collecting the full
@@ -1611,8 +1624,7 @@ def q_incremental_url_dedup(spark: SparkSession,
                 Window.partitionBy('key')))
             .filter(F.col('doc_id') == F.col('__m'))
             .select('doc_id'))
-        got = spark.read.parquet(
-            os.path.join(root, 'accepted')).select('doc_id')
+        got = spark.read.parquet(accepted).select('doc_id')
         missing = [r['doc_id']
                    for r in want.exceptAll(got).limit(5).collect()]
         extra = [r['doc_id']
@@ -1624,11 +1636,10 @@ def q_incremental_url_dedup(spark: SparkSession,
                 f'(missing {missing}…, extra {extra}…) — check '
                 'arrival-order assumptions before blaming the '
                 'sink.')
-        return os.path.join(root, 'accepted')
 
-    out_dir = _artifact(f'inc_url_dedup:{sf_dir}@{app}', _run)
+    root = _session_dir(spark, sf_dir, 'inc_url_dedup', _run)
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(os.path.join(root, 'accepted'))
         .select('doc_id', F.col('key').alias('canonical_url'))
     )
 
@@ -1719,9 +1730,8 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> SparkDF:
     and the read-back manifest (per-shard row count and position
     range) must equal the closed form ``shard = position // 64`` the
     DuckDB oracle recomputes from the md5 order.  Any mis-sharded,
-    dropped, or duplicated row breaks the match.  Shards live under
-    the system temp dir keyed by applicationId (written once per
-    session, like the ANN artifacts)."""
+    dropped, or duplicated row breaks the match.  Shards are written
+    once per session (:func:`_session_dir`)."""
     from ..sources.shards import shard_manifest
 
     out = _ensure_training_shards(spark, sf_dir)
@@ -1733,28 +1743,20 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> SparkDF:
 
 def _ensure_training_shards(spark: SparkSession, sf_dir: str) -> str:
     """Write the 64-row training-shard layout of the md5 'epoch1'
-    order once per session (artifact-cached, keyed by applicationId
-    like the ANN artifacts) and return its path — shared by
-    ``q_training_shards`` (manifest) and ``q_shard_resume``
-    (resumable reader)."""
-    import tempfile
-
+    order once per session (:func:`_session_dir`) and return its
+    path — shared by ``q_training_shards`` (manifest) and
+    ``q_shard_resume`` (resumable reader)."""
     from ..operators.sampling import global_order_index
     from ..sources.shards import write_training_shards
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(
-        tempfile.gettempdir(), 'ons_shards', tag, app)
 
-    def _write():
+    def _write(path):
         ordered = global_order_index(
             documents.select('doc_id'), 'doc_id', salt='epoch1')
         write_training_shards(ordered, path, shard_size=64)
-        return path
 
-    return _artifact(f'training_shards:{sf_dir}@{app}', _write)
+    return _session_dir(spark, sf_dir, 'training_shards', _write)
 
 
 def q_shard_resume(spark: SparkSession, sf_dir: str) -> SparkDF:
@@ -3881,66 +3883,32 @@ def q_incremental_embedding_dedup(spark: SparkSession,
     single NOT EXISTS in DuckDB.  Batch boundaries cannot move the
     result (a clone is dropped in-batch against a same-chunk lower
     sibling or cross-batch against its accepted minimum), so the
-    oracle is chunking-independent.  Streaming state (source chunks,
-    store, checkpoint, accepted) lives under the system temp dir
-    keyed by applicationId; a re-run in the same session resumes the
-    committed checkpoint and returns the identical accepted set."""
-    import tempfile
-    import time
-
+    oracle is chunking-independent.  A re-run in the same session
+    returns the identical accepted set."""
     from ..streaming.incremental import incremental_embedding_dedup
 
     (embeddings,) = _t(spark, sf_dir, 'embeddings')
     _, corpus = _planted_ann(embeddings)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_emb', tag, app)
 
-    def _run():
+    def _run(root):
         src = os.path.join(root, 'src')
         # Stage as DOUBLE so the json text round-trips to exactly
         # the values the oracle gets from CAST(embedding AS
         # DOUBLE[]) (float-shortest text parsed as double would
         # differ in the low bits; decisions would survive, but keep
         # the engines bit-aligned anyway).
-        (corpus.select(
+        _stage_chunks(corpus.select(
             'vec_id',
             F.col('embedding').cast('array<double>')
-            .alias('embedding'))
-         .repartitionByRange(3, 'vec_id')
-         .write.mode('overwrite').json(src))
-        # file source delivers in mtime order; range partition i is
-        # written as part-0000i, so stagger mtimes by file name to
-        # pin batch order = id order
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        stream = (
-            spark.readStream
-            .schema('vec_id long, embedding array<double>')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        q = incremental_embedding_dedup(
-            stream,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-            threshold=0.95,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental embedding dedup stream did not '
-                'terminate within 600s')
-        return os.path.join(root, 'accepted')
+            .alias('embedding')), src, 'vec_id')
+        _dedup_stream(
+            spark, 'q_incremental_embedding_dedup', root, src,
+            'vec_id long, embedding array<double>',
+            incremental_embedding_dedup, threshold=0.95)
 
-    out_dir = _artifact(f'inc_emb_dedup:{sf_dir}@{app}', _run)
-    return spark.read.parquet(out_dir).select('vec_id')
+    root = _session_dir(spark, sf_dir, 'inc_emb_dedup', _run)
+    return spark.read.parquet(
+        os.path.join(root, 'accepted')).select('vec_id')
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> SparkDF:
@@ -4066,60 +4034,26 @@ def q_incremental_winnow_dedup(spark: SparkSession,
     NOT IN.  Chunk boundaries cannot move the result.  A LOUD guard
     recomputes the closed form batch-side and raises on divergence,
     distinguishing "testdata regeneration broke the union-of-cliques
-    structure" from a streaming regression.  Streaming state lives
-    under the system temp dir keyed by applicationId."""
-    import tempfile
-    import time
-
+    structure" from a streaming regression."""
     from ..streaming.incremental import incremental_winnow_dedup
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_win', tag, app)
 
-    def _run():
+    def _run(root):
         src = os.path.join(root, 'src')
-        (documents.select('doc_id', 'text')
-         .repartitionByRange(3, 'doc_id')
-         .write.mode('overwrite').json(src))
-        # file source delivers in mtime order; range partition i is
-        # written as part-0000i, so stagger mtimes by file name to
-        # pin batch order = id order
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        stream = (
-            spark.readStream
-            .schema('doc_id long, text string')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        q = incremental_winnow_dedup(
-            stream,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-            k=4, w=3, min_shared=20,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental winnow dedup stream did not terminate'
-                ' within 600s')
+        _stage_chunks(documents.select('doc_id', 'text'), src, 'doc_id')
+        accepted = _dedup_stream(
+            spark, 'q_incremental_winnow_dedup', root, src,
+            'doc_id long, text string', incremental_winnow_dedup,
+            k=4, w=3, min_shared=20)
         # LOUD guard: the closed form the oracle replays
         dropped = {r['id_b'] for r in dd.winnow_dup_pairs(
             documents, 'doc_id', 'text', k=4, w=3,
             min_shared=20).select('id_b').distinct().collect()}
         all_ids = {r['doc_id']
                    for r in documents.select('doc_id').collect()}
-        got = {r['doc_id'] for r in spark.read.parquet(
-            os.path.join(root, 'accepted'))
-            .select('doc_id').collect()}
+        got = {r['doc_id'] for r in spark.read.parquet(accepted)
+               .select('doc_id').collect()}
         want = all_ids - dropped
         if got != want:
             raise ValueError(
@@ -4130,10 +4064,10 @@ def q_incremental_winnow_dedup(spark: SparkSession,
                 ' regenerated corpus has a non-clique winnow pair'
                 ' graph (chunk-boundary-sensitive fold — re-check'
                 ' tools-side) or the streaming fold regressed.')
-        return os.path.join(root, 'accepted')
 
-    out_dir = _artifact(f'inc_win_dedup:{sf_dir}@{app}', _run)
-    return spark.read.parquet(out_dir).select('doc_id')
+    root = _session_dir(spark, sf_dir, 'inc_win_dedup', _run)
+    return spark.read.parquet(
+        os.path.join(root, 'accepted')).select('doc_id')
 
 
 def _ensure_doc_stream_chunks(spark: SparkSession,
@@ -4148,30 +4082,15 @@ def _ensure_doc_stream_chunks(spark: SparkSession,
     per-query; only the read-only source chunks are shared (a file
     source tracks progress in its own checkpoint, so N streams can
     read one directory)."""
-    import tempfile
-    import time
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    src = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_docsrc', tag, app)
-
-    def _stage():
+    def _stage(src):
         (documents,) = _t(spark, sf_dir, 'documents')
-        (documents.select('doc_id', 'text')
-         .filter(F.col('doc_id') % 3 == 0)
-         .unionByName(_planted_dedup_families(spark))
-         .repartitionByRange(3, 'doc_id')
-         .write.mode('overwrite').json(src))
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        return src
+        _stage_chunks(
+            documents.select('doc_id', 'text')
+            .filter(F.col('doc_id') % 3 == 0)
+            .unionByName(_planted_dedup_families(spark)),
+            src, 'doc_id')
 
-    return _artifact(f'inc_docsrc:{sf_dir}@{app}', _stage)
+    return _session_dir(spark, sf_dir, 'inc_docsrc', _stage)
 
 
 def q_incremental_minhash_dedup(spark: SparkSession,
@@ -4196,43 +4115,19 @@ def q_incremental_minhash_dedup(spark: SparkSession,
     0``): planted decisions are provably independent of which
     organic docs ride along (disjoint token sets), and the sample
     keeps the one-off streaming build inside the bench warmup
-    budget while still exercising cross-batch organic traffic.
-    Streaming state lives under the system temp dir keyed by
-    applicationId."""
-    import tempfile
-
+    budget while still exercising cross-batch organic traffic."""
     from ..streaming.incremental import incremental_minhash_dedup
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_mh', tag, app)
+    def _run(root):
+        _dedup_stream(
+            spark, 'q_incremental_minhash_dedup', root,
+            _ensure_doc_stream_chunks(spark, sf_dir),
+            'doc_id long, text string', incremental_minhash_dedup,
+            num_hashes=64, bands=16, jaccard_threshold=0.5)
 
-    def _run():
-        src = _ensure_doc_stream_chunks(spark, sf_dir)
-        stream = (
-            spark.readStream
-            .schema('doc_id long, text string')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        q = incremental_minhash_dedup(
-            stream,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-            num_hashes=64, bands=16, jaccard_threshold=0.5,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental minhash dedup stream did not terminate'
-                ' within 600s')
-        return os.path.join(root, 'accepted')
-
-    out_dir = _artifact(f'inc_mh_dedup:{sf_dir}@{app}', _run)
-    kept = spark.read.parquet(out_dir)
-    return _planted_survivors(kept)
+    root = _session_dir(spark, sf_dir, 'inc_mh_dedup', _run)
+    return _planted_survivors(
+        spark.read.parquet(os.path.join(root, 'accepted')))
 
 
 def q_incremental_simhash_dedup(spark: SparkSession,
@@ -4254,55 +4149,34 @@ def q_incremental_simhash_dedup(spark: SparkSession,
     dataset).  A LOUD guard checks that assumption per run, exactly
     like ``q_simhash_dedup``, whose oracle SQL this query shares
     verbatim."""
-    import tempfile
-
     from ..streaming.incremental import incremental_simhash_dedup
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_sh', tag, app)
+    def _run(root):
+        accepted = _dedup_stream(
+            spark, 'q_incremental_simhash_dedup', root,
+            _ensure_doc_stream_chunks(spark, sf_dir),
+            'doc_id long, text string', incremental_simhash_dedup,
+            max_hamming=3)
+        # LOUD guard, once per session with the stream (bounded by
+        # the planted-family size — 16 survivors expected)
+        expected = {8_000_000 + f * 10 + j for f in range(8)
+                    for j in (0, 3)}
+        got = {r['kept_doc_id'] for r in _planted_survivors(
+            spark.read.parquet(accepted)).collect()}
+        if got != expected:
+            raise ValueError(
+                'q_incremental_simhash_dedup planted-survivor guard '
+                'tripped: unexpectedly dropped '
+                f'{sorted(expected - got)}, unexpectedly kept '
+                f'{sorted(got - expected)}.  Either a'
+                ' cross-subgroup/planted-vs-sample SimHash pair within'
+                ' Hamming 3 exists in this dataset (the ~1e-10'
+                ' collision the oracle assumes away — move the planted'
+                ' token namespace) or the streaming fold regressed.')
 
-    def _run():
-        src = _ensure_doc_stream_chunks(spark, sf_dir)
-        stream = (
-            spark.readStream
-            .schema('doc_id long, text string')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        q = incremental_simhash_dedup(
-            stream,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-            max_hamming=3,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental simhash dedup stream did not terminate'
-                ' within 600s')
-        return os.path.join(root, 'accepted')
-
-    out_dir = _artifact(f'inc_sh_dedup:{sf_dir}@{app}', _run)
-    out = _planted_survivors(spark.read.parquet(out_dir))
-    expected = {8_000_000 + f * 10 + j for f in range(8)
-                for j in (0, 3)}
-    # Collect ONCE for both the guard and the result (bounded by
-    # the planted-family size — 16 survivors expected).
-    rows = out.collect()
-    got = {r['kept_doc_id'] for r in rows}
-    if got != expected:
-        raise ValueError(
-            'q_incremental_simhash_dedup planted-survivor guard '
-            f'tripped: unexpectedly dropped {sorted(expected - got)},'
-            f' unexpectedly kept {sorted(got - expected)}.  Either a'
-            ' cross-subgroup/planted-vs-sample SimHash pair within'
-            ' Hamming 3 exists in this dataset (the ~1e-10 collision'
-            ' the oracle assumes away — move the planted token'
-            ' namespace) or the streaming fold regressed.')
-    return spark.createDataFrame(rows, out.schema)
+    root = _session_dir(spark, sf_dir, 'inc_sh_dedup', _run)
+    return _planted_survivors(
+        spark.read.parquet(os.path.join(root, 'accepted')))
 
 
 def q_minhash_dedup_verified(spark: SparkSession,
@@ -4886,19 +4760,14 @@ def q_outlink_graph(spark: SparkSession, sf_dir: str) -> SparkDF:
 
 def _ensure_warc_archives(spark: SparkSession, sf_dir: str) -> str:
     """Stage the documents corpus as WARC archives once per session
-    (artifact-cached, keyed by applicationId like the ANN/shard
-    artifacts) and return the directory: four ``part-*.warc`` files
-    cut by a range repartition on the planted crawl URI."""
-    import tempfile
-
+    (:func:`_session_dir`) and return the directory: four
+    ``part-*.warc`` files cut by a range repartition on the planted
+    crawl URI."""
     from ..sources.warc import write_warc
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), 'ons_warc', tag, app)
 
-    def _write():
+    def _write(path):
         pages = documents.select(
             F.concat(F.lit('https://'), F.col('source'),
                      F.lit('.com/'), F.col('lang'), F.lit('/doc'),
@@ -4910,9 +4779,8 @@ def _ensure_warc_archives(spark: SparkSession, sf_dir: str) -> str:
         n = manifest.count()  # runs the distributed write
         if n != 4:  # action must run even under ``python -O``
             raise RuntimeError(f'expected 4 WARC archives, wrote {n}')
-        return path
 
-    return _artifact(f'warc:{sf_dir}@{app}', _write)
+    return _session_dir(spark, sf_dir, 'warc', _write)
 
 
 def q_warc_records(spark: SparkSession, sf_dir: str) -> SparkDF:
@@ -4980,19 +4848,13 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> SparkDF:
 
 def _ensure_mime_warc(spark: SparkSession, sf_dir: str) -> str:
     """Stage gzip WARC archives whose payloads carry planted magic
-    bytes (one content kind per ``doc_id % 8``) — once per session,
-    keyed by applicationId."""
-    import tempfile
-
+    bytes (one content kind per ``doc_id % 8``) — once per session
+    (:func:`_session_dir`)."""
     from ..sources.warc import write_warc
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(
-        tempfile.gettempdir(), 'ons_warc_mime', tag, app)
 
-    def _write():
+    def _write(path):
         k = F.col('doc_id') % 8
         body = F.encode(F.col('text'), 'utf-8')
         payload = (
@@ -5020,9 +4882,8 @@ def _ensure_mime_warc(spark: SparkSession, sf_dir: str) -> str:
         n = manifest.count()  # action must run even under ``python -O``
         if n != 4:
             raise RuntimeError(f'expected 4 WARC archives, wrote {n}')
-        return path
 
-    return _artifact(f'warc_mime:{sf_dir}@{app}', _write)
+    return _session_dir(spark, sf_dir, 'warc_mime', _write)
 
 
 def q_warc_mime_stats(spark: SparkSession, sf_dir: str) -> SparkDF:
@@ -5920,22 +5781,15 @@ def q_unimax_mixture(spark: SparkSession, sf_dir: str) -> SparkDF:
 
 def _ensure_orc_corpus(spark: SparkSession, sf_dir: str) -> str:
     """Stage the documents corpus as ORC once per session
-    (artifact-cached like the WARC/ANN artifacts) and return the
-    directory: four files cut by doc_id range."""
-    import tempfile
-
+    (:func:`_session_dir`) and return the directory: four files cut
+    by doc_id range."""
     from ..sources.readers import write_orc
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), 'ons_orc', tag, app)
-
-    def _write():
-        write_orc(documents.repartitionByRange(4, 'doc_id'), path)
-        return path
-
-    return _artifact(f'orc:{sf_dir}@{app}', _write)
+    return _session_dir(
+        spark, sf_dir, 'orc',
+        lambda path: write_orc(
+            documents.repartitionByRange(4, 'doc_id'), path))
 
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> SparkDF:
@@ -6160,17 +6014,10 @@ def q_incremental_line_dedup(spark: SparkSession,
     query shares :func:`q_line_dedup`'s closed-form oracle verbatim
     (same per-source aggregate).  A loud distributed guard raises if
     the folded corpus diverges from the batch rewrite."""
-    import tempfile
-    import time
-
     from ..operators.dedup import line_dedup
     from ..streaming.incremental import incremental_line_dedup
 
     (documents,) = _t(spark, sf_dir, 'documents')
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    app = spark.sparkContext.applicationId
-    root = os.path.join(
-        tempfile.gettempdir(), 'ons_inc_line', tag, app)
 
     toks = documents.select(
         'doc_id', 'source', F.split('text', ' ').alias('t'))
@@ -6188,34 +6035,13 @@ def q_incremental_line_dedup(spark: SparkSession,
         ).alias('text'),
     )
 
-    def _run():
+    def _run(root):
         src = os.path.join(root, 'src')
-        (seg.repartitionByRange(3, 'doc_id')
-         .write.mode('overwrite').json(src))
-        parts = sorted(p for p in os.listdir(src)
-                       if p.startswith('part-'))
-        base = time.time() - 1000
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(src, p),
-                     (base + 10 * i, base + 10 * i))
-        stream = (
-            spark.readStream
-            .schema('doc_id long, source string, text string')
-            .option('maxFilesPerTrigger', 1)
-            .json(src)
-        )
-        q = incremental_line_dedup(
-            stream,
-            out_dir=os.path.join(root, 'accepted'),
-            store_dir=os.path.join(root, 'store'),
-            checkpoint=os.path.join(root, 'ckpt'),
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                'incremental line dedup stream did not terminate'
-                ' within 600s')
-        accepted = spark.read.parquet(os.path.join(root, 'accepted'))
+        _stage_chunks(seg, src, 'doc_id')
+        accepted = spark.read.parquet(_dedup_stream(
+            spark, 'q_incremental_line_dedup', root, src,
+            'doc_id long, source string, text string',
+            incremental_line_dedup))
         # LOUD guard: the fold must equal the batch rewrite.  The
         # compare stays DISTRIBUTED (exceptAll both ways, bounded
         # limit-collects for the message only).
@@ -6228,10 +6054,9 @@ def q_incremental_line_dedup(spark: SparkSession,
             raise RuntimeError(
                 'incremental line dedup diverged from the batch '
                 f'closed form: extra={extra} missing={missing}')
-        return os.path.join(root, 'accepted')
 
-    out_dir = _artifact(f'inc_line:{sf_dir}@{app}', _run)
-    accepted = spark.read.parquet(out_dir)
+    root = _session_dir(spark, sf_dir, 'inc_line', _run)
+    accepted = spark.read.parquet(os.path.join(root, 'accepted'))
     return accepted.groupBy('source').agg(
         F.count(F.lit(1)).alias('n_docs'),
         F.sum(F.length('text')).alias('total_chars_after'),

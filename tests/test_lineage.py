@@ -5,10 +5,12 @@ Operators never choose between local and reliable cuts themselves:
 source scan keeps every other operator and streaming module from
 cutting lineage or persisting on its own.  In
 ``streaming/incremental.py`` only the exactly-once protocol function
-touches the commit helpers.  No operator or streaming module counts a
-``limit``.  A :func:`lineage.scope` frees what was cut or kept inside
-it when it exits; outside any scope, cut RDDs are released once their
-frames are garbage.
+touches the commit helpers, and in ``plans/queries.py`` only three
+session helpers pick temp directories, stage chunks and run streams.
+No operator or streaming module counts a ``limit``.  A
+:func:`lineage.scope` frees what was cut or kept inside it when it
+exits; outside any scope, cut RDDs are released once their frames are
+garbage.
 """
 from __future__ import annotations
 
@@ -29,6 +31,7 @@ CUT_CALLS = {'localCheckpoint', 'checkpoint', 'setCheckpointDir',
              'persist', 'cache'}
 PROTOCOL_CALLS = {'_batch_state', '_marker_row', '_append_store',
                   'isEmpty'}
+SESSION_CALLS = {'gettempdir', 'utime', 'awaitTermination'}
 SCOPED_QUERIES = ('q_pagerank', 'q_label_prop', 'q_dedup_keep_best',
                   'q_bitext_mine', 'q_connected_components')
 
@@ -88,6 +91,20 @@ def test_only_the_commit_protocol_touches_store_and_cache():
         ('streaming/incremental.py', '_exactly_once_sink')}
 
 
+def test_only_the_session_helpers_stage_and_run_streams():
+    """In ``plans/queries.py`` only ``_session_dir`` picks a temp
+    directory, only ``_stage_chunks`` staggers chunk mtimes and only
+    ``_run_stream`` opens and waits on a file-source stream."""
+    path = PACKAGE / 'plans' / 'queries.py'
+    reads = {('plans/queries.py', getattr(top, 'name', '<module>'))
+             for top in ast.parse(path.read_text()).body
+             for node in ast.walk(top)
+             if getattr(node, 'attr', None) == 'readStream'}
+    assert _call_sites([path], SESSION_CALLS) | reads == {
+        ('plans/queries.py', name)
+        for name in ('_session_dir', '_stage_chunks', '_run_stream')}
+
+
 def _persisted(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs()
                .keySet().toArray())
@@ -98,6 +115,17 @@ def _release_garbage(spark):
     cleaner then unpersists their RDDs asynchronously."""
     gc.collect()
     spark.sparkContext._jvm.java.lang.System.gc()
+
+
+def _await_release(spark, rdds: set) -> set:
+    """Run both garbage collectors until none of ``rdds`` is persisted
+    (the cleaner unpersists asynchronously), for up to 120 s; return
+    those still persisted."""
+    deadline = time.monotonic() + 120
+    while rdds & _persisted(spark) and time.monotonic() < deadline:
+        _release_garbage(spark)
+        time.sleep(0.5)
+    return rdds & _persisted(spark)
 
 
 def test_cut_rdds_are_released_once_results_are_garbage(spark_session):
@@ -116,11 +144,7 @@ def test_cut_rdds_are_released_once_results_are_garbage(spark_session):
         QUERIES[name](spark_session, SF).collect()
     held = persisted() - start
     assert held
-    deadline = time.monotonic() + 120
-    while held & persisted() and time.monotonic() < deadline:
-        _release_garbage(spark_session)
-        time.sleep(0.5)
-    assert not held & persisted()
+    assert not _await_release(spark_session, held)
     assert len(persisted()) <= len(start)
 
 
@@ -146,7 +170,8 @@ def _edges(spark):
 
 def test_operator_outside_a_scope_holds_only_its_result(spark_session):
     """An operator frees its own intermediates when it returns; only
-    the materialized result's RDD stays, for the GC to release."""
+    the materialized result's RDD stays, and the GC releases it once
+    the result is garbage (so later tests start from a settled set)."""
     from ons_utils_spark.operators.graph import pagerank
 
     start = _persisted(spark_session)
@@ -155,6 +180,8 @@ def test_operator_outside_a_scope_holds_only_its_result(spark_session):
     assert len(held) == 1
     assert len(ranks.collect()) == 40
     assert _persisted(spark_session) - start == held
+    del ranks
+    assert not _await_release(spark_session, held)
 
 
 def test_frame_read_after_its_scope_closed_raises(spark_session):
