@@ -5,10 +5,20 @@
 Each query is fully materialized through the `noop` sink (executes the
 whole plan, no driver collect). Each query runs ``--repeat N`` times
 (default 3, env ``SPARK_GRAFT_REPEAT``) and reports the per-query
-MEDIAN — repeated identical suites on this host vary by ±6 s (~9%),
-so single-shot round-over-round deltas are mostly noise. Prints:
+MEDIAN. Prints:
     {"metric": "suite_total", "value": <sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>, "repeat": N}
+
+The full record, written next to this file, also carries the load
+each timed pass ran under, read from ``/proc``: ``load`` holds one
+``{steal_share, foreign_cpu_share}`` per pass (host steal, and CPU
+used outside this process tree, each as a share of the machine's CPU
+time), and ``queries_cpu`` each query's median CPU seconds in this
+process tree (driver, JVM and Python workers), next to the wall
+``queries``.  The record lands in ``BENCH_full.json`` unless
+:func:`_artifact_filename` sends it to a side file: another scale
+factor, fewer passes than the committed record, or a pass whose
+recorded load is over ``LOAD_LIMIT``.
 """
 from __future__ import annotations
 
@@ -18,11 +28,29 @@ import os
 import statistics
 import sys
 import time
+from collections import namedtuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from ons_utils_spark import get_spark  # noqa: E402
 from ons_utils_spark.plans.queries import QUERIES  # noqa: E402
+
+# Threads of the concurrent warmup pass (see main).
+WARMUP_WORKERS = 6
+
+# A timed pass that lost more than this share of the machine's CPU
+# time to host steal plus processes outside the bench is loaded, and
+# one loaded pass sends the record to BENCH_full_loaded.json.  Why 5%,
+# measured on a shared 4-vCPU VM: the idle machine lost 0.1% to steal
+# and 0.7% to other processes, and three quiet sf0.01 passes recorded
+# 0.1-0.2% steal and 1.5% foreign CPU, 1.7% at most together; host
+# steal averaging up to 16%, in bursts, slowed whole perfbench runs
+# 1.7x.  5% is three times the quiet level, so quiet passes land, and
+# a third of that steal, so such a pass diverts.
+LOAD_LIMIT = 0.05
+
+Snapshot = namedtuple('Snapshot', 'busy steal total own')
 
 
 def main() -> None:
@@ -36,6 +64,15 @@ def main() -> None:
     sf_dir = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
     cpus = os.environ.get('SPARK_GRAFT_CPUS', '32')
     sf = os.path.basename(sf_dir.rstrip('/')).replace('sf', '')
+    sf = float(sf) if sf.replace('.', '').isdigit() else sf
+    # The committed record: its scale factor and repeat route this
+    # run's record; at the same scale factor it also sizes the first
+    # timed pass and orders the warmup.
+    try:
+        with open(os.path.join(HERE, 'BENCH_full.json')) as fh:
+            prev = json.load(fh)
+    except (OSError, ValueError):  # missing or corrupt
+        prev = {}
 
     spark = get_spark(
         'bench',
@@ -79,22 +116,12 @@ def main() -> None:
     # (SPARK_GRAFT_BENCH_BUDGET seconds) bounds the TOTAL run: as the
     # suite grows, later repeat passes are dropped rather than blowing
     # the harness timeout — one complete pass is always finished, and
-    # `repeat` in the output records how many actually ran.
-    # The default budget SCALES with the suite (r11 postmortem: a
-    # fixed 540s was outgrown by the 161-query warmup under host load
-    # and the driver recorded a repeat=0 cold fallback): warmup
-    # ~0.4s/query idle to ~2s/query contended, plus ~1.1-1.25s/query
-    # per warm pass (re-measured r15 at 200 queries: quiet warmup
-    # ~0.8s/query, quiet pass ~1.15s/query — 150 + 3.5s/query left
-    # exactly 2 passes, a knife edge that silently demoted the
-    # artifact to repeat-2).  150 + 4.2s/query restores headroom for
-    # warmup + 3 timed passes at the current per-query costs.  The
+    # `repeat` in the output records how many actually ran.  The
     # progressive result emission below (a flushed line after every
     # completed pass) makes a harness kill near the timeout lose at
     # most the in-flight pass, never the whole artifact.
-    budget_s = float(
-        os.environ.get('SPARK_GRAFT_BENCH_BUDGET')
-        or max(560, 150 + 4.2 * len(QUERIES)))
+    budget_s = float(os.environ.get('SPARK_GRAFT_BENCH_BUDGET')
+                     or _default_budget(len(QUERIES)))
     bench_t0 = time.time()
     # Warmup pass, CONCURRENT: each query's first execution pays
     # whole-stage-codegen compilation + JIT (measured ~2x steady
@@ -109,7 +136,6 @@ def main() -> None:
     # cold ⇒ pessimistic; flagged in the output).
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = int(os.environ.get('SPARK_GRAFT_WARMUP_WORKERS', '6'))
     cold: dict = {}
 
     def _warm(name: str) -> None:
@@ -129,17 +155,17 @@ def main() -> None:
     # submitted first they overlap the rest of the suite instead of
     # extending the pool's tail (the r12 warmup spent ~140 of its
     # 189.5s on the three incremental streams scheduled by registry
-    # order).  Expected costs come from the prior artifact's
-    # cold_artifact_sec record; artifact-cached queries without one
-    # are assumed heavy.
-    sf_val_w = float(sf) if sf.replace('.', '').isdigit() else sf
-    prior_cold = _prior_cold_costs(sf_val_w)
+    # order).  Expected costs come from the committed record's
+    # cold_artifact_sec at the same scale factor; artifact-cached
+    # queries without one are assumed heavy.
+    prior_cold = ((prev.get('extras') or {}).get('cold_artifact_sec')
+                  or {}) if prev.get('sf') == sf else {}
     warm_order = sorted(
         QUERIES,
         key=lambda n: -prior_cold.get(
             n, 60.0 if n in _ARTIFACT_CACHED_QUERIES else 0.0))
     failed = []
-    with ThreadPoolExecutor(max_workers=workers) as pool:
+    with ThreadPoolExecutor(max_workers=WARMUP_WORKERS) as pool:
         futs = {pool.submit(_warm, name): name for name in warm_order}
         for fut, name in futs.items():
             try:
@@ -150,40 +176,33 @@ def main() -> None:
         _warm(name)
     warmup_time = time.time() - bench_t0
     samples: dict = {name: [] for name in QUERIES}
-    passes_done = 0
-    # First-pass estimate must be EVIDENCE-based (r11 postmortem:
-    # `last_pass = warmup_time` let a loaded-host 329s concurrent
-    # warmup veto every timed pass, recording the contended cold
-    # warmup as the measurement).  Best evidence for a warm
-    # sequential pass is the prior committed warm artifact's suite
-    # total (x1.3 load margin); lacking one, the concurrent warmup
-    # wall (idle-host ratio warm-pass/warmup ~2.2x, so this
-    # UNDER-estimates — acceptable: the budget check only gates
-    # STARTING a pass, and a started pass always completes and is
-    # emitted).  After pass 1 the actual pass wall takes over.
-    sf_val = float(sf) if sf.replace('.', '').isdigit() else sf
-    prior_warm = _prior_warm_suite_total(sf_val)
-    last_pass = (prior_warm * 1.3) if prior_warm else warmup_time
+    cpu: dict = {name: [] for name in QUERIES}
+    load: list = []
+    last_pass = _first_pass_estimate(prev, sf, warmup_time)
     for p in range(repeat):
         if (time.time() - bench_t0) + last_pass > budget_s:
             break
         p_t0 = time.time()
+        pass_start = snap = _snapshot()
         for name, fn in QUERIES.items():
             t0 = time.time()
             fn(spark, sf_dir).write.mode('overwrite').format(
                 'noop'
             ).save()
             samples[name].append(time.time() - t0)
+            before, snap = snap, _snapshot()
+            cpu[name].append(
+                (snap.own - before.own) / os.sysconf('SC_CLK_TCK'))
+        load.append(_load(pass_start, snap))
         last_pass = time.time() - p_t0
-        passes_done += 1
-        # Progressive emission: flush a complete result line + the
-        # artifact file after EVERY pass, so a harness kill during a
-        # later pass still leaves a parseable warm line in the
-        # driver's 2000-char stdout tail (only the LAST ~2000 chars
-        # survive, i.e. the freshest completed pass).
-        _emit(samples, passes_done, warmup_time, cold, sf, {},
-              final=False)
-    repeat = passes_done
+        # Progressive emission: flush a complete result line after
+        # EVERY pass, so a harness kill during a later pass still
+        # leaves a parseable warm line in a 2000-char stdout tail
+        # (only the LAST ~2000 chars survive, i.e. the freshest
+        # completed pass).
+        print(_compact_line(
+            _record(samples, cpu, load, warmup_time, cold, sf, {})),
+            flush=True)
 
     extras = _bucketed_join_comparison(spark, sf_dir)
     extras.update(_partition_pruning_comparison(spark, sf_dir))
@@ -199,18 +218,26 @@ def main() -> None:
         for name in _ARTIFACT_CACHED_QUERIES if name in cold
     }
     # Label the measurement conditions LOUDLY: these walls are
-    # per-stream time measured while `workers` warmup threads share
-    # the executor (FAIR pools), so each INCLUDES contention wait —
-    # an upper bound on per-stream cost, not sequential cost.  An
-    # unwary reader comparing them to the sequential warm medians
-    # would otherwise misread contention as per-query work.
+    # per-stream time measured while the warmup threads share the
+    # executor (FAIR pools), so each INCLUDES contention wait — an
+    # upper bound on per-stream cost, not sequential cost.  An unwary
+    # reader comparing them to the sequential warm medians would
+    # otherwise misread contention as per-query work.
     extras['cold_artifact_measurement'] = {
         'concurrent': True,
-        'warmup_pool_workers': workers,
+        'warmup_pool_workers': WARMUP_WORKERS,
         'scheduler': 'FAIR (one pool per warmup thread)',
     }
 
-    _emit(samples, repeat, warmup_time, cold, sf, extras, final=True)
+    full = _record(samples, cpu, load, warmup_time, cold, sf, extras)
+    # Full detail goes to the record file; the stdout line below must
+    # stay under a 2000-char tail capture or it gets truncated
+    # mid-line and fails to parse (round 2).
+    with open(os.path.join(HERE, _artifact_filename(full, prev)),
+              'w') as fh:
+        json.dump(full, fh, indent=1)
+    print('extras:', json.dumps(extras), flush=True)
+    print(_compact_line(full), flush=True)
     spark.stop()
 
 
@@ -231,208 +258,140 @@ _ARTIFACT_CACHED_QUERIES = (
 )
 
 
-def _prior_warm_suite_total(sf_val) -> float | None:
-    """Last committed warm BENCH_full suite total, if any — the best
-    available evidence for what one warm sequential pass costs.
+def _default_budget(n_queries: int) -> float:
+    """Wall-clock budget of a whole run of ``n_queries`` queries.
 
-    Only valid when the committed artifact ran at the SAME scale
-    factor: an sf0.01 run estimating its first pass from an sf0.1
-    artifact would see warmup + prior*1.3 > budget and veto every
-    timed pass, recording the repeat=0 cold fallback (the r11
-    failure mode this estimator exists to fix — r12 ADVICE)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, 'BENCH_full.json')) as fh:
-            prev = json.load(fh)
-        if prev.get('sf') != sf_val:
-            return None
-        if prev.get('repeat', 0) >= 1 and prev.get('value'):
-            return float(prev['value'])
-    except Exception:  # noqa: BLE001 — missing/corrupt prior file
-        pass
-    return None
+    It scales with the suite (r11 postmortem: a fixed 540s was
+    outgrown by the 161-query warmup under host load and the run
+    recorded a repeat=0 cold fallback).  Re-measured r15 at 200
+    queries: quiet warmup ~0.8s/query, quiet pass ~1.15s/query, so
+    150 + 3.5s/query left exactly 2 passes, a knife edge that silently
+    demoted the artifact to repeat-2.  150 + 4.2s/query leaves room
+    for the warmup and 3 timed passes at those costs."""
+    return max(560, 150 + 4.2 * n_queries)
 
 
-def _prior_cold_costs(sf_val) -> dict:
-    """The committed artifact's recorded cold costs for the
-    artifact-cached queries (same-SF only) — drives the warmup
-    pool's longest-job-first submission order."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, 'BENCH_full.json')) as fh:
-            prev = json.load(fh)
-        if prev.get('sf') != sf_val:
-            return {}
-        return dict(
-            (prev.get('extras') or {}).get('cold_artifact_sec') or {})
-    except Exception:  # noqa: BLE001 — missing/corrupt prior file
-        return {}
+def _first_pass_estimate(prev: dict, sf, warmup_time: float) -> float:
+    """Expected wall of the first timed pass, which decides whether it
+    starts inside the budget; later passes use the previous pass.
+
+    It must be evidence-based (r11 postmortem: using the warmup wall
+    let a loaded-host 329s concurrent warmup veto every timed pass).
+    The best evidence is the committed record's warm suite total at
+    the SAME scale factor, with a 1.3 load margin: an sf0.01 run
+    sized from an sf0.1 record would veto every pass (r12).  Lacking
+    one, the concurrent warmup wall (which under-estimates a warm
+    sequential pass ~2.2x on an idle host; acceptable, since a
+    started pass always completes and is emitted)."""
+    if prev.get('sf') == sf and prev.get('repeat', 0) >= 1 \
+            and prev.get('value'):
+        return float(prev['value']) * 1.3
+    return warmup_time
 
 
-def _emit(samples: dict, repeat: int, warmup_time: float, cold: dict,
-          sf: str, extras: dict, final: bool) -> None:
-    """Emit a complete, flushed result line (and, on the final call,
-    the BENCH_full.json artifact).
+def _snapshot() -> Snapshot:
+    """CPU counters now, in clock ticks: the machine's busy, steal and
+    total time from the first line of ``/proc/stat``, and ``own``, the
+    CPU of this process and its live descendants (the JVM and its
+    Python workers), utime + stime + cutime + cstime, found through
+    the ppid field of ``/proc/<pid>/stat``."""
+    with open('/proc/stat') as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    # busy is user, nice, system, irq and softirq, as perfbench/run.py
+    # counts it; idle and iowait are the rest of the total
+    busy, steal, total = f[0] + f[1] + f[2] + f[5] + f[6], f[7], sum(f)
+    children: dict = {}
+    stats: dict = {}
+    for pid in filter(str.isdigit, os.listdir('/proc')):
+        try:
+            with open(f'/proc/{pid}/stat', 'rb') as fh:
+                # fields after the parenthesized command name
+                rest = fh.read().rsplit(b')', 1)[1].split()
+        except OSError:  # exited since the listing
+            continue
+        children.setdefault(int(rest[1]), []).append(int(pid))
+        stats[int(pid)] = rest
+    own, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        own += sum(map(int, stats[pid][11:15])) if pid in stats else 0
+        todo.extend(children.get(pid, ()))
+    return Snapshot(busy, steal, total, own)
 
-    Called after EVERY completed timed pass so a harness kill near
-    the timeout loses at most the in-flight pass: the driver's
-    2000-char stdout tail keeps the freshest completed line (each
-    line is capped below 2000 chars, so the last full line always
-    survives the tail cut).
-    """
-    if repeat == 0:  # budget blown during warmup — report cold
+
+def _load(a: Snapshot, b: Snapshot) -> dict:
+    """Shares of the machine's CPU time (total ticks, i.e. wall ×
+    ncpu) between two snapshots lost to host steal and used outside
+    this process tree."""
+    total = max(b.total - a.total, 1)
+    foreign = (b.busy - a.busy) - (b.own - a.own)
+    return {'steal_share': round((b.steal - a.steal) / total, 4),
+            'foreign_cpu_share': round(max(foreign, 0) / total, 4)}
+
+
+def _record(samples: dict, cpu: dict, load: list, warmup_time: float,
+            cold: dict, sf, extras: dict) -> dict:
+    """The full record of a run: ``len(load)`` timed passes, or the
+    warmup's cold walls when none ran (budget blown in warmup)."""
+    repeat = len(load)
+    if repeat == 0:
         samples = {name: [t] for name, t in cold.items()}
     timings = {name: round(statistics.median(ts), 3)
                for name, ts in samples.items()}
-    # Per-query MIN across passes — the load-robust statistic this
-    # round's A/B methodology rests on.  Recorded so the value-aware
-    # displacement guard can tell a bursty-load median inflation
-    # (min stays fast) from a genuine steady-state regression (min
-    # rises too); see _looks_load_inflated.
-    timings_min = {name: round(min(ts), 3)
-                   for name, ts in samples.items()}
-    # Host-variance error bars (VERDICT r4: ±12% same-code spread):
-    # suite totals under the best / median / worst per-query sample.
-    spread = {
-        'suite_min': round(sum(min(ts) for ts in samples.values()), 3),
-        'suite_median': round(sum(timings.values()), 3),
-        'suite_max': round(sum(max(ts) for ts in samples.values()), 3),
-    }
-    sf_val = float(sf) if sf.replace('.', '').isdigit() else sf
-    full = {
+    return {
         'metric': 'suite_total',
         'value': round(sum(timings.values()), 3),
         'unit': 'sec',
         'queries': timings,
-        'queries_min': timings_min,
-        'sf': sf_val,
+        # Per-query MIN across passes: the load-robust statistic of
+        # the A/B methodology (a burst inflates the median, not the
+        # min).
+        'queries_min': {name: round(min(ts), 3)
+                        for name, ts in samples.items()},
+        'queries_cpu': {name: round(statistics.median(ts), 3)
+                        for name, ts in cpu.items() if ts},
+        'load': load,
+        'sf': sf,
         'repeat': repeat,
         'cold_fallback': repeat == 0,
-        'spread': spread,
+        # Host-variance error bars (VERDICT r4: ±12% same-code
+        # spread): suite totals under the best / median / worst
+        # per-query sample.
+        'spread': {
+            'suite_min': round(sum(min(ts) for ts in samples.values()), 3),
+            'suite_median': round(sum(timings.values()), 3),
+            'suite_max': round(sum(max(ts) for ts in samples.values()), 3),
+        },
         'warmup_sec': round(warmup_time, 1),
         'extras': extras,
     }
-    if final:
-        # Full detail for the repo (judge-readable); the stdout line
-        # below must stay under the driver's 2000-char tail capture or
-        # it gets truncated mid-line and fails to parse (round 2).
-        # Artifact discipline (r5/r6 postmortems): never replace a
-        # HIGHER-repeat BENCH_full.json with a lower-repeat run — a
-        # lower-repeat run lands in BENCH_full_cold.json instead; the
-        # stdout line (what the driver records) is unaffected.
-        here = os.path.dirname(os.path.abspath(__file__))
-        out_path = os.path.join(here, 'BENCH_full.json')
-        try:
-            with open(out_path) as fh:
-                prev = json.load(fh)
-            prev_repeat = prev.get('repeat', 0)
-            prev_sf = prev.get('sf')
-        except Exception:  # noqa: BLE001 — missing/corrupt prior
-            prev, prev_repeat, prev_sf = {}, 0, None
-        out_path = os.path.join(
-            here, _artifact_filename(full, prev, repeat, prev_repeat,
-                                     prev_sf, sf_val, sf))
-        with open(out_path, 'w') as fh:
-            json.dump(full, fh, indent=1)
-        print('extras:', json.dumps(extras), flush=True)
-    print(_compact_line(full), flush=True)
 
 
-def _artifact_filename(full: dict, prev: dict, repeat: int,
-                       prev_repeat: int, prev_sf, sf_val,
-                       sf: str) -> str:
-    """Which file this run's full record lands in.
+def _artifact_filename(full: dict, prev: dict) -> str:
+    """Which file this run's record ``full`` lands in, given the
+    committed record ``prev`` (r5/r6 postmortems):
 
-    Artifact discipline (r5/r6 postmortems + r12/r15 guard cases):
-
-    * a different-SF run (e.g. a quick sf0.01 smoke) never displaces
-      the canonical artifact — ``BENCH_full_sf<sf>.json``;
+    * another scale factor (e.g. a quick sf0.01 smoke) never displaces
+      the canonical record — ``BENCH_full_sf<sf>.json``;
     * a LOWER-repeat run never displaces a higher-repeat record —
       ``BENCH_full_cold.json``;
-    * the VALUE-AWARE guard (r12 judge finding): a run displaces the
-      committed artifact only if its common-query subtotal improves
-      OR its untouched TPC-H controls read at least as quiet —
-      uniform control inflation is host load, not code
-      (``BENCH_full_loaded.json``).  r15 loophole closed: this check
-      now applies to HIGHER-repeat runs too — a repeat-5 run under
-      intermittent load auto-promoted over the quiet repeat-3 record
-      purely on the repeat count (controls 1.17x), so repeat count
-      alone no longer buys displacement.
+    * a run with a pass over ``LOAD_LIMIT`` of steal plus foreign CPU
+      — ``BENCH_full_loaded.json``, at any repeat, so repeat count
+      alone never buys displacement (the r15 loophole).  Only this
+      run's own recorded load counts, never its times against
+      ``prev``'s: a slower quiet run is a regression and lands;
+    * anything else — ``BENCH_full.json``.
     """
-    if prev_repeat >= 1 and prev_sf is not None and prev_sf != sf_val:
-        return f'BENCH_full_sf{sf}.json'
-    if repeat < prev_repeat:
+    sf, prev_repeat = full['sf'], prev.get('repeat', 0)
+    if prev_repeat >= 1 and prev.get('sf') not in (None, sf):
+        return f'BENCH_full_sf{sf:g}.json' if isinstance(sf, float) \
+            else f'BENCH_full_sf{sf}.json'
+    if full['repeat'] < prev_repeat:
         return 'BENCH_full_cold.json'
-    if _looks_load_inflated(full, prev):
+    if any(p['steal_share'] + p['foreign_cpu_share'] > LOAD_LIMIT
+           for p in full['load']):
         return 'BENCH_full_loaded.json'
     return 'BENCH_full.json'
-
-
-def _looks_load_inflated(full: dict, prev: dict) -> bool:
-    """True when an equal-repeat run should NOT displace the
-    committed BENCH_full.json: it is slower over the queries the two
-    runs SHARE and its TPC-H control queries (names ``q<digit>...``
-    — untouched, pure-JVM plans) are uniformly slower than the
-    committed run's, the documented noisy-neighbor signature
-    (TODO.md pitfall 24).
-
-    Slower-ness is judged on the COMMON-query subtotal, never the
-    raw suite totals: a broader-coverage run (new queries added
-    since the committed artifact) has a higher total by construction
-    and must land without manual promotion when its shared queries
-    are no slower (r13 judge finding — the 182→184 false positive
-    behind commit 2bcaf83).
-
-    A slower run must additionally prove the slowdown is a STEADY
-    STATE, not bursts: its per-query MINS across passes (recorded as
-    ``queries_min``) must also exceed the committed record's own
-    mins (its medians when the artifact predates ``queries_min``).
-    The r15 hypervisor-steal postmortem showed BURSTY load that
-    spares the scattered sub-second controls while inflating
-    heavy-query medians — under the old controls-only test such a
-    run displaced a strictly better same-code record twice in one
-    session.  A genuine code regression raises the min too; a burst
-    does not (the min is the round's load-robust A/B statistic).
-    The baseline must be min-vs-min (r15 advisor finding): comparing
-    candidate mins against committed MEDIANS let any regression
-    smaller than the documented ~10-25% median-over-min spread hide
-    below the median subtotal and be diverted forever.  A candidate
-    lacking ``queries_min`` (pre-r15 fixture) uses its medians on
-    both sides, preserving the pinned quiet-regression and
-    uniform-inflation behaviors.
-
-    Legacy committed artifact (the reverse case): when the candidate
-    carries ``queries_min`` but the committed record predates it,
-    the candidate's MINS are compared against the committed
-    MEDIANS — the very asymmetry described above, so a steady
-    regression smaller than the median-over-min spread still counts
-    as bursty and diverts to ``BENCH_full_loaded.json``.  Accepted
-    for legacy records only: the first equal-repeat run that lands
-    writes ``queries_min`` and restores min-vs-min from then on."""
-    import re
-
-    if not prev.get('value'):
-        return False
-    prev_q = prev.get('queries') or {}
-    common = [k for k, v in full['queries'].items()
-              if prev_q.get(k, 0) > 0 and v is not None]
-    if not common:
-        return False
-    if sum(full['queries'][k] for k in common) \
-            <= sum(prev_q[k] for k in common):
-        return False
-    mins = full.get('queries_min') or full['queries']
-    prev_mins = prev.get('queries_min') or prev_q
-    if sum(mins.get(k, full['queries'][k]) for k in common) \
-            <= sum(prev_mins.get(k, prev_q[k]) for k in common):
-        return True  # quiet-state mins beat the record's own mins: bursty
-    ratios = [
-        full['queries'][k] / prev_q[k]
-        for k in common if re.match(r'^q\d', k)
-    ]
-    if not ratios:
-        return False
-    return statistics.median(ratios) > 1.05
 
 
 def _compact_line(full: dict, budget: int = 1800) -> str:

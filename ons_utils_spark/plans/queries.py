@@ -15,9 +15,11 @@ simhash), similarity search, text analysis, array diff.
 """
 from __future__ import annotations
 
+import atexit
 import contextvars
 import hashlib
 import os
+import shutil
 import tempfile
 import time
 from typing import Callable, Dict
@@ -827,7 +829,9 @@ def _session_dir(spark: SparkSession, sf_dir: str, name: str,
     under the system temp dir keyed by ``(name, sf_dir,
     applicationId)`` — the artifact key's triple, so two data
     directories that share a basename never share a directory.  A
-    re-run in the same session returns the built path untouched."""
+    re-run in the same session returns the built path untouched; the
+    directory is removed when the interpreter exits (no later process
+    has this applicationId)."""
     app = spark.sparkContext.applicationId
     tag = os.path.basename(os.path.normpath(sf_dir))
     digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
@@ -835,6 +839,7 @@ def _session_dir(spark: SparkSession, sf_dir: str, name: str,
         tempfile.gettempdir(), f'ons_{name}', f'{tag}-{digest}', app)
 
     def _build():
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         build(path)
         return path
 
@@ -6051,9 +6056,10 @@ def q_incremental_line_dedup(spark: SparkSession,
         extra = got.exceptAll(want).limit(5).collect()
         missing = want.exceptAll(got).limit(5).collect()
         if extra or missing:
-            raise RuntimeError(
-                'incremental line dedup diverged from the batch '
-                f'closed form: extra={extra} missing={missing}')
+            raise ValueError(
+                'q_incremental_line_dedup guard tripped: the streaming '
+                'fold diverged from the batch closed form: '
+                f'extra={extra} missing={missing}')
 
     root = _session_dir(spark, sf_dir, 'inc_line', _run)
     accepted = spark.read.parquet(os.path.join(root, 'accepted'))

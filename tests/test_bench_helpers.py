@@ -1,14 +1,18 @@
-"""Pin bench.py's harness invariants (r11 postmortem: the driver's
-bench artifact collapsed to a repeat=0 cold fallback because the
-first-pass estimate used the warmup wall).
+"""Pin bench.py's harness invariants: the budget and first-pass
+estimate (r11 postmortem: the bench artifact collapsed to a
+repeat=0 cold fallback because the first-pass estimate used the
+warmup wall), and which file a run's record lands in, read from the
+load it recorded.
 
-These tests are pure-Python — no SparkSession."""
+These tests are pure-Python — no SparkSession; the routing tests
+build their load from synthetic ``/proc`` snapshots."""
 from __future__ import annotations
 
 import ast
 import json
 import os
 import sys
+import time
 
 import pytest
 
@@ -57,17 +61,22 @@ def test_artifact_cached_list_matches_queries_source():
     assert set(bench._ARTIFACT_CACHED_QUERIES) == _queries_cached_by_ast()
 
 
-def test_prior_warm_suite_total_reads_committed_artifact():
+def _committed():
     path = os.path.join(ROOT, 'BENCH_full.json')
     if not os.path.exists(path):
-        assert bench._prior_warm_suite_total(0.1) is None
-        return
-    prev = json.load(open(path))
-    got = bench._prior_warm_suite_total(prev.get('sf'))
+        pytest.skip('no committed BENCH_full.json')
+    return json.load(open(path))
+
+
+def test_prior_warm_suite_total_reads_committed_artifact():
+    """At the committed record's scale factor, the first timed pass is
+    sized from its warm suite total with a 1.3 load margin."""
+    prev = _committed()
+    est = bench._first_pass_estimate(prev, prev['sf'], 1.0)
     if prev.get('repeat', 0) >= 1:
-        assert got == pytest.approx(float(prev['value']))
+        assert est == pytest.approx(float(prev['value']) * 1.3)
     else:
-        assert got is None
+        assert est == 1.0
 
 
 def test_prior_warm_suite_total_ignores_other_sf():
@@ -75,179 +84,198 @@ def test_prior_warm_suite_total_ignores_other_sf():
     artifact must fall back to the warmup-wall estimate, not inherit
     the larger corpus's suite total (which would veto every timed
     pass and record the repeat=0 cold fallback)."""
-    path = os.path.join(ROOT, 'BENCH_full.json')
-    if not os.path.exists(path):
-        pytest.skip('no committed BENCH_full.json')
-    prev = json.load(open(path))
+    prev = _committed()
     other_sf = 0.01 if prev.get('sf') != 0.01 else 0.1
-    assert bench._prior_warm_suite_total(other_sf) is None
+    assert bench._first_pass_estimate(prev, other_sf, 42.0) == 42.0
+    assert bench._first_pass_estimate({}, prev['sf'], 42.0) == 42.0
 
 
 def test_first_pass_estimate_is_not_warmup_wall_when_prior_exists():
     """The r11 failure shape: warmup 329s under load, estimate =
-    warmup wall -> 329 + 329 > 540 -> zero timed passes.  With a
-    prior warm artifact the estimate must come from it instead, and
-    at the r11 numbers it must admit a first timed pass."""
-    path = os.path.join(ROOT, 'BENCH_full.json')
-    if not os.path.exists(path):
-        pytest.skip('no committed warm BENCH_full.json')
-    prev_sf = json.load(open(path)).get('sf')
-    prior = bench._prior_warm_suite_total(prev_sf)
-    if prior is None:
-        pytest.skip('no committed warm BENCH_full.json')
-    warmup_r11, budget = 328.8, max(560, 150 + 3.5 * 161)
-    est = prior * 1.3
-    assert warmup_r11 + est <= budget, (
+    warmup wall -> zero timed passes.  With a prior warm record the
+    estimate comes from it instead, and at the r11 warmup it admits a
+    first timed pass inside bench's default budget."""
+    from ons_utils_spark.plans.queries import QUERIES
+
+    prev = _committed()
+    warmup_r11 = 328.8
+    est = bench._first_pass_estimate(prev, prev['sf'], warmup_r11)
+    assert est != warmup_r11
+    assert warmup_r11 + est <= bench._default_budget(len(QUERIES)), (
         'estimate would veto the first timed pass at r11 load')
 
 
 def test_default_budget_scales_with_suite_size():
+    """The default budget fits the warmup and three timed passes at
+    the r15 quiet per-query costs (0.8 s warmup, 1.15 s a pass), at
+    the current suite size and at twice it, and never drops under
+    560 s."""
     from ons_utils_spark.plans.queries import QUERIES
-    budget = max(560, 150 + 3.5 * len(QUERIES))
-    # 161 queries: warmup (<=330s loaded) + one warm pass (~175s)
-    # must fit, so at least one timed pass always lands.
-    assert budget >= 150 + 3.5 * len(QUERIES)
-    assert budget >= 700 or len(QUERIES) < 158
+
+    for n in (len(QUERIES), 2 * len(QUERIES)):
+        assert bench._default_budget(n) >= (0.8 + 3 * 1.15) * n
+    assert bench._default_budget(10) == 560
 
 
-def _full(value, controls, heavies=()):
-    q = {f'q{i + 1}_ctrl': t for i, t in enumerate(controls)}
-    q.update({f'q_heavy_{i}': t for i, t in enumerate(heavies)})
-    return {'value': value, 'queries': q}
+# Synthetic passes: 60 s on 4 CPUs at 100 ticks/s, between two fake
+# snapshots; the shares are of the pass's total ticks.
+PASS_TICKS = 4 * 100 * 60
 
 
-def test_load_inflated_guard_refuses_uniform_control_inflation():
-    """r12 judge finding: equal-repeat run with worse total AND
-    uniformly slower TPC-H controls is host load — must divert."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(140.0, [1.4, 1.5, 1.4], [5.6])
-    assert bench._looks_load_inflated(new, prev)
+def _pass(own=0.9, steal=0.0, foreign=0.0):
+    a = bench.Snapshot(busy=52_000, steal=900, total=400_000, own=1_500)
+    b = bench.Snapshot(
+        busy=a.busy + round((own + foreign) * PASS_TICKS),
+        steal=a.steal + round(steal * PASS_TICKS),
+        total=a.total + PASS_TICKS,
+        own=a.own + round(own * PASS_TICKS))
+    return bench._load(a, b)
+
+
+# A quiet sf0.01 pass, as recorded.
+QUIET = {'steal_share': 0.002, 'foreign_cpu_share': 0.0148}
+
+
+def _full(load, queries=None, repeat=None, sf=0.1):
+    return {'queries': queries or {'q1_ctrl': 1.0, 'q_heavy': 4.0},
+            'load': load, 'sf': sf,
+            'repeat': len(load) if repeat is None else repeat}
+
+
+PREV = _full([QUIET] * 3)
+
+
+def test_load_shares_from_two_snapshots():
+    assert _pass(own=0.9) == {
+        'steal_share': 0.0, 'foreign_cpu_share': 0.0}
+    assert _pass(own=0.6, steal=0.16, foreign=0.2) == {
+        'steal_share': 0.16, 'foreign_cpu_share': 0.2}
+    # own-tree ticks a tick ahead of the machine's busy count
+    a = bench.Snapshot(busy=10, steal=0, total=100, own=5)
+    b = bench.Snapshot(busy=50, steal=0, total=500, own=47)
+    assert bench._load(a, b)['foreign_cpu_share'] == 0.0
+
+
+def test_snapshot_counters_do_not_decrease():
+    """The real reader on this machine: every counter is monotonic,
+    and CPU burnt by this process shows in its own-tree ticks."""
+    s0 = bench._snapshot()
+    t0 = time.process_time()
+    while time.process_time() - t0 < 0.2:
+        pass
+    s1 = bench._snapshot()
+    assert all(b >= a for a, b in zip(s0, s1)), (s0, s1)
+    assert s1.own > s0.own
+    assert s1.total > s0.total >= s0.busy + s0.steal
+
+
+def test_quiet_run_lands():
+    load = [_pass(own=0.95, foreign=0.01) for _ in range(3)]
+    assert bench._artifact_filename(_full(load), PREV) == \
+        'BENCH_full.json'
+
+
+def test_steal_heavy_run_goes_to_the_loaded_file():
+    """The measured case: host steal averaging 16% slowed whole runs
+    1.7x."""
+    load = [_pass(own=0.8, steal=0.16) for _ in range(3)]
+    assert bench._artifact_filename(_full(load), PREV) == \
+        'BENCH_full_loaded.json'
+
+
+def test_run_beside_a_cpu_hog_goes_to_the_loaded_file():
+    """Another process spinning one of the four CPUs."""
+    load = [_pass(own=0.75, foreign=0.25) for _ in range(3)]
+    assert bench._artifact_filename(_full(load), PREV) == \
+        'BENCH_full_loaded.json'
+
+
+def test_load_limit_is_inclusive():
+    at = {'steal_share': bench.LOAD_LIMIT / 2,
+          'foreign_cpu_share': bench.LOAD_LIMIT / 2}
+    over = dict(at, foreign_cpu_share=bench.LOAD_LIMIT / 2 + 0.001)
+    assert bench._artifact_filename(_full([at] * 3), PREV) == \
+        'BENCH_full.json'
+    assert bench._artifact_filename(_full([at, over, at]), PREV) == \
+        'BENCH_full_loaded.json'
 
 
 def test_load_inflated_guard_lets_faster_run_land():
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(95.0, [1.1, 1.2, 1.1], [2.0])
-    assert not bench._looks_load_inflated(new, prev)
+    faster = _full([QUIET] * 3, {'q1_ctrl': 0.5, 'q_heavy': 2.0})
+    assert bench._artifact_filename(faster, PREV) == 'BENCH_full.json'
 
 
 def test_load_inflated_guard_lets_quiet_regression_land():
-    """A genuine regression reads slower totals under QUIET controls
-    (ratio ~1) — it must still displace the artifact so the record
-    reflects the real steady state."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(110.0, [1.0, 1.02, 0.99], [14.0])
-    assert not bench._looks_load_inflated(new, prev)
+    """A regression, small or large, recorded under quiet load lands:
+    the record reflects the real steady state.  Times are never
+    compared with the committed record's."""
+    for slowdown in (1.03, 3.5):
+        slower = _full([QUIET] * 3,
+                       {'q1_ctrl': 1.0, 'q_heavy': 4.0 * slowdown})
+        assert bench._artifact_filename(slower, PREV) == \
+            'BENCH_full.json'
 
 
 def test_load_inflated_guard_handles_missing_prior():
-    assert not bench._looks_load_inflated(
-        _full(100.0, [1.0]), {})
+    assert bench._artifact_filename(_full([QUIET]), {}) == \
+        'BENCH_full.json'
+    loaded = _full([_pass(own=0.8, steal=0.16)])
+    assert bench._artifact_filename(loaded, {}) == \
+        'BENCH_full_loaded.json'
 
 
 def test_load_inflated_guard_lets_broader_coverage_land():
-    """r13 judge finding: an equal-quality run covering MORE queries
-    has a higher raw total by construction; the guard must compare
-    the common-query subtotal, not raw values (the 182→184 case that
-    needed manual promotion in commit 2bcaf83)."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(130.0, [1.0, 1.01, 0.99], [4.0])
-    new['queries']['q_brand_new_a'] = 15.0   # coverage growth only
-    new['queries']['q_brand_new_b'] = 8.0
-    assert not bench._looks_load_inflated(new, prev)
+    """r13 judge finding: a run covering MORE queries has a higher
+    total by construction; a quiet one lands."""
+    broader = _full([QUIET] * 3, dict(PREV['queries'], q_brand_new=15.0))
+    assert bench._artifact_filename(broader, PREV) == 'BENCH_full.json'
 
 
 def test_load_inflated_guard_refuses_bursty_median_inflation():
-    """r15 steal postmortem: BURSTY hypervisor load inflates heavy-
-    query medians while the scattered sub-second controls stay quiet
-    (median ratio ≤ 1.05) — the old controls-only test let such a
-    run displace a strictly better same-code record.  When the
-    candidate's own per-pass MINS still beat the committed subtotal,
-    the median slowdown is bursts, not steady state — divert."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(120.0, [1.0, 1.02, 0.99], [23.0])  # heavy median 23s
-    new['queries_min'] = dict(new['queries'], q_heavy_0=3.5)
-    assert bench._looks_load_inflated(new, prev)
-
-
-def test_load_inflated_guard_lets_min_confirmed_regression_land():
-    """The flip side: when even the candidate's mins exceed the
-    committed subtotal, the slowdown reproduces in every pass — a
-    genuine steady-state regression that must be recorded."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(110.0, [1.0, 1.02, 0.99], [14.0])
-    new['queries_min'] = {k: v * 0.98 for k, v in new['queries'].items()}
-    assert not bench._looks_load_inflated(new, prev)
-
-
-def test_load_inflated_guard_min_baseline_catches_small_regressions():
-    """r15 advisor finding: with the committed artifact carrying
-    queries_min, the burst baseline must be the committed MINS, not
-    the medians — otherwise any real regression smaller than the
-    ~10-25% median-over-min spread keeps candidate mins below the
-    committed median subtotal and is diverted forever."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    prev['queries_min'] = {k: v * 0.8 for k, v in prev['queries'].items()}
-    new = _full(110.0, [1.0, 1.02, 0.99], [14.0])
-    new['queries_min'] = {k: v * 0.9 for k, v in new['queries'].items()}
-    # candidate min-subtotal (~15.3) exceeds committed mins (5.6) but
-    # controls are quiet: a reproducing regression, must land.
-    assert not bench._looks_load_inflated(new, prev)
-
-
-def test_load_inflated_guard_bursty_against_committed_mins():
-    """Bursts still divert under the min-vs-min baseline: candidate
-    mins at or below the committed record's own mins prove the code
-    can still reach the recorded quiet state."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    prev['queries_min'] = dict(prev['queries'])
-    new = _full(120.0, [1.0, 1.02, 0.99], [23.0])
-    new['queries_min'] = dict(new['queries'], q_heavy_0=3.5)
-    assert bench._looks_load_inflated(new, prev)
+    """r15 steal postmortem: a burst that loads one pass of three is
+    enough to divert, even when the run's mins beat the record."""
+    load = [QUIET, _pass(own=0.7, steal=0.2), QUIET]
+    bursty = _full(load, {'q1_ctrl': 0.9, 'q_heavy': 3.5})
+    assert bench._artifact_filename(bursty, PREV) == \
+        'BENCH_full_loaded.json'
 
 
 def test_load_inflated_guard_still_refuses_inflation_with_growth():
-    """Coverage growth must not become a laundering channel: if the
-    shared queries ARE uniformly control-inflated, divert even when
-    new queries pad the diff."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(160.0, [1.4, 1.5, 1.4], [5.6])
-    new['queries']['q_brand_new_a'] = 15.0
-    assert bench._looks_load_inflated(new, prev)
+    """Coverage growth must not become a laundering channel: a loaded
+    run diverts however many new queries it adds."""
+    load = [_pass(own=0.75, foreign=0.25)] * 3
+    grown = _full(load, dict(PREV['queries'], q_brand_new=15.0))
+    assert bench._artifact_filename(grown, PREV) == \
+        'BENCH_full_loaded.json'
 
 
 def test_artifact_filename_higher_repeat_cannot_launder_load():
-    """r15 loophole: a HIGHER-repeat run under intermittent load must
-    not displace the quiet record purely on its repeat count — the
-    value-aware control check applies at any repeat (observed: a
-    repeat-5 run with controls 1.17x auto-promoted over the quiet
-    repeat-3 artifact)."""
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(140.0, [1.4, 1.5, 1.4], [5.6])
-    name = bench._artifact_filename(
-        new, prev, repeat=5, prev_repeat=3,
-        prev_sf=0.1, sf_val=0.1, sf='0.1')
-    assert name == 'BENCH_full_loaded.json'
+    """r15 loophole: a HIGHER-repeat run under load must not displace
+    the quiet record on its repeat count alone (observed: a repeat-5
+    run under intermittent load promoted over the quiet repeat-3
+    record)."""
+    load = [QUIET, QUIET, _pass(own=0.8, steal=0.16), QUIET, QUIET]
+    assert bench._artifact_filename(_full(load), PREV) == \
+        'BENCH_full_loaded.json'
 
 
 def test_artifact_filename_quiet_higher_repeat_lands():
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(101.0, [1.0, 1.01, 0.99], [4.1])
-    name = bench._artifact_filename(
-        new, prev, repeat=5, prev_repeat=3,
-        prev_sf=0.1, sf_val=0.1, sf='0.1')
-    assert name == 'BENCH_full.json'
+    assert bench._artifact_filename(_full([QUIET] * 5), PREV) == \
+        'BENCH_full.json'
 
 
 def test_artifact_filename_lower_repeat_and_other_sf_side_files():
-    prev = _full(100.0, [1.0, 1.0, 1.0], [4.0])
-    new = _full(90.0, [0.9, 0.9, 0.9], [3.0])
-    assert bench._artifact_filename(
-        new, prev, repeat=2, prev_repeat=3,
-        prev_sf=0.1, sf_val=0.1, sf='0.1') == 'BENCH_full_cold.json'
-    assert bench._artifact_filename(
-        new, prev, repeat=3, prev_repeat=3,
-        prev_sf=0.1, sf_val=0.01,
-        sf='0.01') == 'BENCH_full_sf0.01.json'
+    """A lower repeat goes to the cold file and another scale factor
+    to its own file, quiet or loaded, and neither compares times."""
+    loaded = [_pass(own=0.8, steal=0.16)]
+    for load in ([QUIET] * 2, loaded * 2):
+        assert bench._artifact_filename(_full(load), PREV) == \
+            'BENCH_full_cold.json'
+    for load in ([QUIET] * 3, loaded * 3):
+        assert bench._artifact_filename(_full(load, sf=0.01), PREV) \
+            == 'BENCH_full_sf0.01.json'
+    # a cold fallback (no timed pass) with no record to keep lands
+    assert bench._artifact_filename(_full([]), {}) == 'BENCH_full.json'
 
 
 def test_compact_line_stays_under_tail_capture():

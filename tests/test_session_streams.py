@@ -5,12 +5,17 @@ Each of these queries builds an on-disk artifact once per session through
 checkpoint and output) and reads it back.  The oracle tests run every one
 of them twice at sf0.001 against its DuckDB oracle: the second call must
 reuse the session artifact, leave no stream running and return the same
-rows.  The unit tests pin the two helper rules no query exercises: one
-directory per ``sf_dir``, and a stream that outlives its wait is stopped.
+rows.  The unit tests pin the helper rules no query exercises: one
+directory per ``sf_dir``, removed when the process exits, and a stream
+that outlives its wait is stopped; and that the line-dedup guard names
+its query when it trips.
 """
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import tempfile
 from types import SimpleNamespace
 
 import duckdb
@@ -22,6 +27,8 @@ from ons_utils_spark.operators import lineage
 from ons_utils_spark.plans import queries
 from ons_utils_spark.plans.queries import ORACLES, QUERIES
 from tools.check_correctness import normalize, type_mismatches
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 STAGED_QUERIES = (
     'q_incremental_url_dedup', 'q_incremental_embedding_dedup',
@@ -112,3 +119,49 @@ def test_run_stream_stops_a_stream_that_outlives_its_wait():
                             'id long', lambda stream: stuck)
     assert stuck.stopped
     assert stuck.timeout == 600
+
+
+def test_session_dir_is_removed_at_interpreter_exit(tmp_path):
+    """A process that builds a session directory leaves nothing of it
+    behind once it exits; no JVM starts."""
+    script = (
+        'import os\n'
+        'from types import SimpleNamespace\n'
+        'from ons_utils_spark.plans import queries\n'
+        'spark = SimpleNamespace(sparkContext=SimpleNamespace('
+        'applicationId="local-exit-probe"))\n'
+        'def build(path):\n'
+        '    os.makedirs(path)\n'
+        '    open(os.path.join(path, "part-0"), "w").write("x")\n'
+        'print(queries._session_dir(spark, "/data/sf0.01", "probe", '
+        'build))\n')
+    env = dict(os.environ, TMPDIR=str(tmp_path),
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [ROOT, os.environ.get('PYTHONPATH')])))
+    out = subprocess.run([sys.executable, '-c', script], env=env,
+                         capture_output=True, text=True, check=True)
+    path = out.stdout.strip().splitlines()[-1]
+    assert path.startswith(str(tmp_path))
+    assert not os.path.exists(path)
+
+
+def test_incremental_line_dedup_guard_names_its_query(
+        spark_session, monkeypatch, tmp_path):
+    """A batch rewrite that drops a row trips the guard, whose message
+    names the query and shows the diverging rows."""
+    from pyspark.sql import functions as F
+
+    from ons_utils_spark.operators import dedup
+
+    batch = dedup.line_dedup
+    monkeypatch.setattr(
+        dedup, 'line_dedup',
+        lambda *a, **k: batch(*a, **k).filter(
+            F.col('doc_id') != F.lit(1)))
+    monkeypatch.setattr(queries, '_ANN_ARTIFACTS', {})
+    monkeypatch.setattr(tempfile, 'tempdir', str(tmp_path))
+    with pytest.raises(ValueError, match=(
+            r'q_incremental_line_dedup guard tripped: .*'
+            r'extra=\[Row\(doc_id=1, .*missing=\[\]')):
+        QUERIES['q_incremental_line_dedup'](spark_session, SF)
+    assert spark_session.streams.active == []
