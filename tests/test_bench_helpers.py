@@ -240,6 +240,38 @@ def test_load_inflated_guard_refuses_bursty_median_inflation():
         'BENCH_full_loaded.json'
 
 
+def test_load_inflated_guard_lets_min_confirmed_regression_land():
+    """A slowdown that reproduces in every pass (the run's mins as slow
+    as its medians) under quiet load is a steady-state regression and
+    lands."""
+    slower = _full([QUIET] * 3, {'q1_ctrl': 1.0, 'q_heavy': 14.0})
+    slower['queries_min'] = {
+        k: v * 0.98 for k, v in slower['queries'].items()}
+    assert bench._artifact_filename(slower, PREV) == 'BENCH_full.json'
+
+
+def test_load_inflated_guard_min_baseline_catches_small_regressions():
+    """A regression smaller than the median-over-min spread lands when
+    quiet, whatever mins the committed record carries."""
+    prev = dict(PREV, queries_min={
+        k: v * 0.8 for k, v in PREV['queries'].items()})
+    slower = _full([QUIET] * 3, {'q1_ctrl': 1.0, 'q_heavy': 4.4})
+    slower['queries_min'] = {
+        k: v * 0.9 for k, v in slower['queries'].items()}
+    assert bench._artifact_filename(slower, prev) == 'BENCH_full.json'
+
+
+def test_load_inflated_guard_bursty_against_committed_mins():
+    """A burst diverts even when the run's mins match the committed
+    record's own mins: the loaded pass alone decides."""
+    prev = dict(PREV, queries_min=dict(PREV['queries']))
+    load = [QUIET, QUIET, _pass(own=0.7, steal=0.2)]
+    bursty = _full(load, {'q1_ctrl': 1.0, 'q_heavy': 23.0})
+    bursty['queries_min'] = dict(bursty['queries'], q_heavy=3.5)
+    assert bench._artifact_filename(bursty, prev) == \
+        'BENCH_full_loaded.json'
+
+
 def test_load_inflated_guard_still_refuses_inflation_with_growth():
     """Coverage growth must not become a laundering channel: a loaded
     run diverts however many new queries it adds."""
